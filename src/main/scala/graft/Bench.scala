@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints the full per-query JSON line followed by a compact summary-only
   * JSON line (the LAST stdout line — recorders that keep only a short
@@ -9,37 +8,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shuffle width defaults to the core count (the driver-bench contract at
     // sf0.1) but is its own knob for scale soaks: partitions are sized so
-    // per-task sort/aggregate state fits executor memory — at the 2M-doc
-    // soak in this box's fixed heap, 32 partitions put ~12M rows of state
-    // in each task and the decontam-family chain OOM'd nondeterministically,
-    // while 128 bounds per-task state at a quarter of that (BASELINE.md
-    // round-12). Exactly the sizing a real deployment does as data grows;
-    // distributeBy pins to this same conf, so the knob flows everywhere.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // AQE coalesces post-shuffle partitions by BYTES with a 1 MB floor per
-    // partition (spark.sql.adaptive.coalescePartitions.minPartitionSize).
-    // Round-21 A/B'd lowering the floor to 16k (so AQE's parallelism-first
-    // target governs tiny shuffles): the warm in-JVM interleaved A/B
-    // measured it NEUTRAL-TO-WORSE on every probed family (q_pretrain_corpus
-    // 6.8→9.3 s, q_cell_assign_hier 3.4→5.7, q_ivfpq_search 4.3→5.2,
-    // q_bpe_encode 1.5→2.2; OPTIMIZATION_r21.md "global AQE floor") — the
-    // extra tasks cost more than the added parallelism buys on exchanges
-    // this small, confirming the round-11 byte-coalescing verdict. The knob
-    // stays env-overridable for future hosts; the default is Spark's.
-    val minCoalesce = sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "1m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", minCoalesce)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts fixture encoding varies by driver generation; see Tables.tsUs.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // per-task sort/aggregate state fits executor memory (BASELINE.md
+    // round-12: 128 partitions bound the 2M-doc soak that OOM'd at 32).
+    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", Sessions.cpus.toString)
+    val spark = Sessions.local("spark.sql.shuffle.partitions" -> shuffle)
     // Warmup: absorb session/JIT/codegen spin-up so the first timed query
     // isn't charged ~3s of one-time cost (r1/r2 bench-order artifact).
     try {

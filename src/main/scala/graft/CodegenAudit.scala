@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Cold-floor instrumentation (dev tooling, round-22): for each named
   * BATCH gate, split the first-run cost into its phases and report the
   * generated-code statistics that decide whether the JIT can even
@@ -24,22 +22,13 @@ import org.apache.spark.sql.SparkSession
 object CodegenAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = sys.env.getOrElse("CODEGEN_QUERIES", "q_admit_funnel")
       .split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // CODEGEN_AQE=false exposes WholeStageCodegen units in the
-      // pre-execution plan (AdaptiveSparkPlan hides them until stages
-      // materialize) — stats-only mode; timings keep the default.
-      .config("spark.sql.adaptive.enabled",
-              sys.env.getOrElse("CODEGEN_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // CODEGEN_AQE=false exposes WholeStageCodegen units in the
+    // pre-execution plan (AdaptiveSparkPlan hides them until stages
+    // materialize) — stats-only mode; timings keep the default.
+    val spark = Sessions.local(
+      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("CODEGEN_AQE", "true"))
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
     val ruleTime = sys.env.get("CODEGEN_RULES").exists(_.toBoolean)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.DocSynth
@@ -62,17 +62,7 @@ object SoakGen {
     val nFams = if (!full && args.length > 2) args(2).toInt else 100
     val famSize = if (!full && args.length > 3) args(3).toInt else 150
     val nVecs = if (!full && args.length > 4) args(4).toLong else 50000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // events may ship as TIMESTAMP(NANOS); the legacy long read keeps the
-    // copy byte-faithful and Tables.tsUs dispatches on either encoding
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Sessions.local()
     if (full) {
       val base = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
       val mult = if (args.length > 3) args(3).toInt else 10

@@ -19,16 +19,12 @@ object SparkEntry {
 
   /** The contract boundary is the one layer that receives FOREIGN sessions
     * (the driver builds its own SparkSession for the smoke check), so
-    * session-compat confs are applied here — never inside shared readers
-    * (see Tables.read scaladoc): events.parquet is TIMESTAMP(NANOS) and
-    * needs the legacy long read, and the oracle compares against DuckDB's
-    * timezone-naive timestamps, so date/day derivations (q_partition_prune)
-    * must run in UTC regardless of the host session's zone. Idempotent. */
+    * [[Sessions.compat]] is applied here — never inside shared readers
+    * (see Tables.read scaladoc). Idempotent. */
   private def withSessionDefaults(
       fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.conf.set("spark.sql.session.timeZone", "UTC")
+      Sessions.compat.foreach { case (k, v) => s.conf.set(k, v) }
       fn(s, dir)
     }
 

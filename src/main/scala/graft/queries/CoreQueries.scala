@@ -32,7 +32,7 @@ object CoreQueries {
     "q_hits_enriched",
     (s, dir) =>
       Sessionize
-        .hitsEnriched(events(s, dir))
+        .withSessionIds(events(s, dir))
         .select("event_id", "user_id", "ts_us", "event_type", "visit_key"),
     Some(s"""${Sessionize.islandsSql()}
       |SELECT event_id, user_id, ts_us, event_type,

@@ -1311,49 +1311,23 @@ object CurationQueries {
     * (raw_b+1)/(R+B) — grouping pinned to ((10⁶·x)·y)/(u·v) so the
     * oracle's left-assoc SQL reproduces every intermediate rounding. */
   private def dsirWeightsOf(fb: DataFrame): DataFrame = {
-    // ONE grouped pass over the corpus-scale feature frame, not three
-    // (round-22, guide §2.3 "aggregate before you shuffle" / §2.4 shared
-    // exchanges): raw_b and tgt_b come out of the same map-side-combined
-    // aggregate (tgt_b as an indicator sum — identical to counting the
-    // lang-filtered rows, and a bucket with no target rows gets the same
-    // 0 the old left-join + na.fill produced), and the totals derive
-    // from the ≤ DsirB-row bucket table (Σ raw_b ≡ COUNT(*), Σ tgt_b ≡
-    // the indicator total — exactly how [[dsirScoredOf]] already derives
-    // its totals, DsirSpec pins the two forms equal). Plan effect:
-    // 3 corpus scans + 3 exchanges + a join → 1 scan + 1 exchange
-    // (the tiny totals aggregate reuses that exchange).
-    // `spark.graft.dsir.onepass=false` restores the round-21 three-pass
-    // shape — the in-JVM A/B instrument (the fanout.parts discipline).
-    val onePass = fb.sparkSession.conf
-      .getOption("spark.graft.dsir.onepass").forall(_.trim.toBoolean)
+    // ONE grouped pass over the corpus-scale feature frame: raw_b and
+    // tgt_b (an indicator sum) come out of the same aggregate, and the
+    // totals derive from the ≤ DsirB-row bucket table (Σ raw_b ≡ COUNT(*);
+    // DsirSpec pins the two forms equal; OPTIMIZATION_r22.md). The bucket
+    // table has two consumers (totals + weights), so it is pinned and fb
+    // is scanned exactly once.
     val dbl = (c: Column) => c.cast("double")
     val wExpr = floor(lit(1000000.0) * dbl(col("tgt_b") + 1) *
                         dbl(col("r_tot") + DsirB) /
                         (dbl(col("raw_b") + 1) * dbl(col("t_tot") + DsirB)))
       .cast("long").as("w")
-    if (onePass) {
-      // the bucket table is ≤ DsirB rows with TWO consumers (totals +
-      // the weight projection) — pinned at the default level (the tmix
-      // counts policy) so the corpus-scale fb is scanned exactly ONCE;
-      // unpinned, the totals leg re-instantiated the whole grouped
-      // aggregate (fb scan ×2 in the r22 after-plan before this pin).
-      val cnt = fb.groupBy("b").agg(
-        count(lit(1)).as("raw_b"),
-        sum(when(col("lang") === DsirTarget, 1L).otherwise(0L)).as("tgt_b"))
-        .localCheckpoint()
-      val tot = cnt.agg(sum("raw_b").as("r_tot"), sum("tgt_b").as("t_tot"))
-      cnt.crossJoin(broadcast(tot)).select(col("b"), wExpr)
-    } else {
-      val raw = fb.groupBy("b").agg(count(lit(1)).as("raw_b"))
-      val tgt = fb.filter(col("lang") === DsirTarget)
-        .groupBy("b").agg(count(lit(1)).as("tgt_b"))
-      val tot = fb.agg(
-        count(lit(1)).as("r_tot"),
-        sum(when(col("lang") === DsirTarget, 1L).otherwise(0L)).as("t_tot"))
-      raw.join(tgt, Seq("b"), "left").na.fill(0L, Seq("tgt_b"))
-        .crossJoin(broadcast(tot))
-        .select(col("b"), wExpr)
-    }
+    val cnt = fb.groupBy("b").agg(
+      count(lit(1)).as("raw_b"),
+      sum(when(col("lang") === DsirTarget, 1L).otherwise(0L)).as("tgt_b"))
+      .localCheckpoint()
+    val tot = cnt.agg(sum("raw_b").as("r_tot"), sum("tgt_b").as("t_tot"))
+    cnt.crossJoin(broadcast(tot)).select(col("b"), wExpr)
   }
 
   private[queries] def dsirScored(s: SparkSession, dir: String): DataFrame = {
@@ -1572,22 +1546,12 @@ object CurationQueries {
     val d = d0.select(col("doc_id"), col(groupCol),
                       md5(concat(lit("tmix:"), coalesce(col("text"), lit(""))))
                         .as("h"))
-    // `counts` has THREE consumers below (tot, t, keep) and each would
-    // re-run the corpus-scale group-count over d — the q_pretrain_corpus
-    // before-plan shows the whole upstream subtree (for the composition:
-    // survivors + two anti-joins + their aggregate sides) instantiated
-    // once PER consumer with zero ReusedExchange (plans/r22, round-22;
-    // guide §2.4 "two operations keyed the same way can share one
-    // exchange" — here they couldn't, so materialize). The frame is
-    // |groups|-sized (~10²–10³ rows — this operator's contract), so the
-    // pin is the default-level localCheckpoint, not the corpus-scale
-    // DISK_ONLY checkpoint. `spark.graft.tmix.pin=false` restores the
-    // round-21 recompute shape (the in-JVM A/B instrument).
-    val pin = s.conf.getOption("spark.graft.tmix.pin")
-      .forall(_.trim.toBoolean)
-    val counts0 = d.groupBy(groupCol).agg(count(lit(1)).as("n"))
+    // `counts` has THREE consumers below (tot, t, keep), each of which
+    // would re-run the corpus-scale group-count over d (plans/r22). It is
+    // |groups|-sized, so the pin is the default-level localCheckpoint.
+    val counts = d.groupBy(groupCol).agg(count(lit(1)).as("n"))
       .withColumn("wt", expr("cast(floor(sqrt(cast(n as double))) as bigint)"))
-    val counts = if (pin) counts0.localCheckpoint() else counts0
+      .localCheckpoint()
     val tot = counts.agg(sum("wt").as("tot"))
     val t = counts.crossJoin(broadcast(tot))
       .agg(min(expr("n * tot div wt")).as("t"))
@@ -1695,23 +1659,14 @@ object CurationQueries {
       .filter(col("repetitive") === 1).select("doc_id")
     val blocked = WebQueries.safetyFrame(survivors.select("doc_id", "text"))
       .filter(col("blocked") === 1).select("doc_id")
-    // The GATED frame feeds temperatureMixture, which consumes its input
-    // twice (group counts + the GlobalRank pin) — and each evaluation
-    // re-ran BOTH anti-join aggregate sides (repetition signals = a
-    // token-explode aggregate, safety = the wordlist scan) on top of the
-    // survivors checkpoint: the r22 before-plan instantiates the whole
-    // gated subtree repeatedly, zero ReusedExchange. ≥ 2 consumers →
-    // checkpoint (the spanDedupCdc pin policy), projected to the three
-    // columns the mixture reads (§2.3 project before materializing).
-    // Same `spark.graft.tmix.pin` kill-switch as the counts pin.
-    val gated0 = survivors
+    // The GATED frame feeds temperatureMixture, which consumes it twice
+    // (group counts + the GlobalRank pin), and each evaluation would re-run
+    // both anti-join sides (plans/r22): ≥ 2 consumers → checkpoint,
+    // projected to the three columns the mixture reads.
+    val gated = checkpointCompact(survivors
       .join(repetitive, Seq("doc_id"), "left_anti")
       .join(blocked, Seq("doc_id"), "left_anti")
-      .select("doc_id", "lang", "text")
-    val gated =
-      if (docsDf.sparkSession.conf.getOption("spark.graft.tmix.pin")
-            .forall(_.trim.toBoolean)) checkpointCompact(gated0)
-      else gated0
+      .select("doc_id", "lang", "text"))
     temperatureMixture(gated, "lang")
   }
 

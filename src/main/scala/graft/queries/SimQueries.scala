@@ -1848,8 +1848,8 @@ object SimQueries {
     * downstream pass scores against — SemDeDup keeps the
     * lowest-cosine-to-centroid member per near-dup group, and
     * [[clusterStaleness]] reads them as the REBUILD trigger. Computed
-    * from the just-written members scan (compact columnar read), not by
-    * re-running the label join. */
+    * from the checkpointed labeled frame the members write also reads,
+    * not by re-running the label join. */
   def writeClustersOf(e: DataFrame, outDir: String, k: Int = GraphK,
                       cellCap: Long = DeriveCap,
                       withCentroids: Boolean = true,
@@ -1866,22 +1866,10 @@ object SimQueries {
       .withColumn("cbucket",
               pmod(xxhash64(col("cluster_id")), lit(ClusterBuckets.toLong)))
     // With centroids, the labeled frame has TWO consumers (members write
-    // + centroid aggregate) → checkpoint by the pin-by-consumer-count
-    // policy, then submit the two INDEPENDENT writes from two threads
-    // (optimization guide §2.6 "overlap independent jobs": the centroid
-    // aggregate back-fills executors freed by the members write's tail).
-    // Until round 22 the centroid half RE-SCANNED the just-written
-    // members table, which serialized the two jobs AND paid a second
-    // corpus read; aggregating the checkpointed frame reads the same
-    // rows (pure materialization of the same join), so the stored
-    // centroids are value-identical — the append/quality oracles replay
-    // the floor-mean from the member set either way. Kill-switch
-    // `spark.graft.cluster.overlap=false` restores the sequential
-    // re-scan shape (the in-JVM A/B instrument, fanout.parts style).
-    val overlap = withCentroids &&
-      e.sparkSession.conf.getOption("spark.graft.cluster.overlap")
-        .forall(_.trim.toBoolean)
-    val labeled = if (overlap) checkpointCompact(labeled0) else labeled0
+    // + centroid aggregate) → checkpoint, then submit the two INDEPENDENT
+    // writes from two threads: the centroid aggregate back-fills executors
+    // freed by the members write's tail (OPTIMIZATION_r22.md).
+    val labeled = if (withCentroids) checkpointCompact(labeled0) else labeled0
     def writeMembers(): Unit =
       labeled
         // cluster rows by the partition column before the partitioned
@@ -1900,48 +1888,36 @@ object SimQueries {
         .sortWithinPartitions("cbucket", "vec_id")
         .write.mode("overwrite").partitionBy("cbucket")
         .parquet(s"$outDir/members")
-    def writeCentroids(src: DataFrame): Unit =
-      clusterCentroidsOf(src)
+    def writeCentroids(): Unit =
+      clusterCentroidsOf(labeled.select("cluster_id", "cbucket", "q"))
         .repartition(col("cbucket"))
         .write.mode("overwrite").partitionBy("cbucket")
         .parquet(s"$outDir/centroids")
-    if (overlap) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val centroidsF = Future {
-        writeCentroids(labeled.select("cluster_id", "cbucket", "q"))
-      }
+    if (withCentroids) {
+      // A thread created per call inherits the caller's Spark local
+      // properties (job group, scheduler pool), so the centroid jobs are
+      // attributed to the same build as the members jobs.
+      var centroidFailure: Option[Throwable] = None
+      val centroids = new Thread(() =>
+        try writeCentroids()
+        catch { case t: Throwable => centroidFailure = Some(t) },
+        "graft-cluster-centroids")
+      centroids.setDaemon(true)
+      centroids.start()
       // a members-write failure must not leave the centroid job dangling
       // in the background (it writes into this build's private dir):
       // always wait for it; rethrow its own failure after.
-      try writeMembers()
-      finally Await.ready(centroidsF, Duration.Inf)
-      Await.result(centroidsF, Duration.Inf)
+      try writeMembers() finally centroids.join()
+      centroidFailure.foreach(t => throw t)
     } else {
+      // opt-out for consumers that only probe/sample members: they skip
+      // the checkpoint, the (cluster, dim) aggregate and the second write
       writeMembers()
-      // opt-out for consumers that only probe/sample members: the centroid
-      // half costs a members re-scan + a (cluster, dim) aggregate + a
-      // second bucketed write, and only the staleness/SemDeDup readers
-      // need it (the two label-only gates measured ~+2 s each at sf0.1)
-      if (withCentroids)
-        writeCentroids(e.sparkSession.read.parquet(s"$outDir/members"))
     }
-    // atomic publish AFTER both halves: the build's own members
-    // re-read above is pre-publish private state; everything outside
-    // this function reads only the committed snapshot
+    // atomic publish AFTER both halves: everything outside this
+    // function reads only the committed snapshot
     graft.sources.AtomicPublish.commit(e.sparkSession, outDir)
   }
-
-  /** Dev-only timing hook for [[writeClustersOf]] ([[graft.ClusterAB]]):
-    * the gate-facing builds are buildOnce-memoized per process, so an
-    * in-JVM interleaved A/B must call the build directly into a FRESH
-    * outDir with the (warm) cached labels supplied — isolating exactly
-    * the member+centroid write phase the overlap conf switches. */
-  private[graft] def clusterBuildBench(s: SparkSession, dir: String,
-                                       outDir: String): Unit =
-    writeClustersOf(quantized(s, dir), outDir,
-                    labels0 = Some(cachedClusterLabels(s, dir, false)))
 
   /** Per-cluster floor-mean centroid over a `(cluster_id, cbucket, q)`
     * members frame — [[ivfTrain]]'s exact-arithmetic centroid shape

@@ -100,16 +100,6 @@ object Sessionize {
   }
 
   /**
-   * Per-hit enrichment (reference O6/O8/O9 fan-out, `main.py:124-125` +
-   * `main.py:153-164`): every event carries its session's visit_key. The
-   * reference achieved this by materializing each group as a list and
-   * writing the key back in a loop; here it is a window aggregate — no
-   * group list, no skew hazard.
-   */
-  def hitsEnriched(events: DataFrame): DataFrame =
-    withSessionIds(events)
-
-  /**
    * ANSI gaps-and-islands SQL equivalent (DuckDB-runnable) of
    * [[withSessionIds]] over the `events` table — shared by oracle entries.
    */

@@ -85,18 +85,20 @@ object Tables {
               encoding: String = "UTF-8"): DataFrame =
     rawFeedWithSchema(spark, path, encoding, "value STRING")
 
-  /** [[rawFeed]]'s reader contract with a caller-supplied schema - single-
-    * sourced so variants needing a guard column (a second field catches
-    * lines the sentinel delimiter would split; see Exports.transcodeFeed)
-    * can never drift from the line-source options. */
+  /** [[rawFeed]]'s CSV-reader options — single-sourced so the stream
+    * reader (`StreamingFeed.rawFeedStream`) and the guard-column variant
+    * below can never drift from the line-source contract. */
+  private[graft] def rawFeedOptions(encoding: String): Map[String, String] = Map(
+    "sep" -> "\u0001", // the sentinel delimiter, as a VISIBLE escape
+    "quote" -> "",
+    "lineSep" -> "\n",
+    "encoding" -> encoding)
+
+  /** [[rawFeed]]'s reader contract with a caller-supplied schema (a second
+    * field catches lines the sentinel delimiter would split; see
+    * Exports.transcodeFeed). */
   private[graft] def rawFeedWithSchema(spark: SparkSession, path: String,
                                        encoding: String,
                                        schema: String): DataFrame =
-    spark.read
-      .option("sep", "\u0001") // the sentinel delimiter, as a VISIBLE escape
-      .option("quote", "")
-      .option("lineSep", "\n")
-      .option("encoding", encoding)
-      .schema(schema)
-      .csv(path)
+    spark.read.options(rawFeedOptions(encoding)).schema(schema).csv(path)
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.HitParser
 import graft.model.Schemas
+import graft.sources.Tables
 
 /**
  * Streaming ingest of reference-format TSV hit feeds (SURVEY.md §2 S1 as a
@@ -22,16 +23,13 @@ import graft.model.Schemas
  */
 object StreamingFeed {
 
-  /** Unbounded raw feed lines (single `value` column), same CSV-reader
-    * charset fold-in as the batch reader. */
+  /** Unbounded raw feed lines (single `value` column), read with the
+    * batch reader's options ([[Tables.rawFeedOptions]]). */
   def rawFeedStream(spark: SparkSession, path: String,
                     encoding: String = "UTF-8",
                     maxFilesPerTrigger: Int = 16): DataFrame =
     spark.readStream
-      .option("sep", "")
-      .option("quote", "")
-      .option("lineSep", "\n")
-      .option("encoding", encoding)
+      .options(Tables.rawFeedOptions(encoding))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .schema("value STRING")
       .csv(path)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
 import graft.session.Sessionize
@@ -33,20 +32,5 @@ object StreamingSessionize {
   def visitsStream(events: DataFrame,
                    gapUs: Long = Schemas.SessionGapUs,
                    watermarkDelay: String = Schemas.SessionGap): DataFrame =
-    events
-      .withWatermark("ts_t", watermarkDelay)
-      // gapUs - 1: Beam-exclusive boundary, same as the batch path
-      .groupBy(col("user_id"), session_window(col("ts_t"), s"${gapUs - 1} microseconds"))
-      .agg(
-        min("ts_us").as("visit_start_us"),
-        max("ts_us").as("visit_end_us"),
-        count(lit(1)).as("n_events")
-      )
-      .select(
-        col("user_id"),
-        col("visit_start_us"),
-        col("visit_end_us"),
-        col("n_events"),
-        Sessionize.visitKey(col("user_id"), col("visit_start_us")).as("visit_key")
-      )
+    Sessionize.visits(events.withWatermark("ts_t", watermarkDelay), gapUs)
 }

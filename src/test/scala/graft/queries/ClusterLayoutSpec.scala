@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
@@ -125,6 +126,39 @@ class ClusterLayoutSpec extends SparkSpec {
       SimQueries.probeClusters(spark, out, vecId = 999999L)
     }
     assert(err.getMessage.contains("999999"))
+  }
+
+  test("every job of a build, the concurrent centroid write's included, carries the caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
+    }
+    def underGroup[A](g: String)(body: => A): A = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    // The listener bus delivers in order: once a marker job's start is
+    // seen, every job started before it has been seen too.
+    def drainTo(marker: String): Seq[String] = {
+      underGroup(marker)(sc.parallelize(Seq(1), 1).count())
+      Iterator.continually(groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { g => assert(g != null, s"listener never saw $marker"); g != marker }
+        .toSeq
+    }
+    sc.addSparkListener(listener)
+    try {
+      drainTo("cluster-group-start")
+      for (g <- Seq("cluster-build-a", "cluster-build-b")) {
+        val out = Files.createTempDirectory("graft-cl-group").toString
+        underGroup(g)(SimQueries.writeClustersOf(e, out))
+        val seen = drainTo(s"$g-end")
+        assert(seen.nonEmpty)
+        assert(seen.forall(_ == g), s"jobs of build $g ran under groups ${seen.distinct}")
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("members files are vec_id-sorted with disjoint row-group stats; point lookup prunes") {

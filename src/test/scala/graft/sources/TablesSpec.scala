@@ -4,11 +4,16 @@ import java.io.{FileOutputStream, OutputStreamWriter}
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.Trigger
+
 import graft.SparkSpec
 import graft.ingest.HitParser
+import graft.streaming.StreamingFeed
 
 /** Source coverage: gzip + ISO-8859-1 charset fold-in (reference E1,
-  * `encoding_update.py` — subsumed by the scan) and glob reading (S1). */
+  * `encoding_update.py` — subsumed by the scan) and glob reading (S1),
+  * for the batch feed reader and its stream twin. */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -18,41 +23,53 @@ class TablesSpec extends SparkSpec {
     try w.write(lines.mkString("\n")) finally w.close()
   }
 
-  test("rawFeed reads gzip ISO-8859-1 feeds without a separate transcode pass") {
-    val dir = Files.createTempDirectory("graft-feed").toString
-    // é in the page field: ISO-8859-1 byte 0xE9, not valid UTF-8
-    val line = "1000\tu\tv\tTRK\t\t2\tcafé\tsrv\ti\ts"
-    writeGz(s"$dir/feed.tsv.gz", "ISO-8859-1", Seq(line))
-    val decoded = Tables.rawFeed(spark, s"$dir/*.tsv.gz", encoding = "ISO-8859-1")
-      .as[String].collect()
-    assert(decoded === Array(line)) // é survives the charset fold-in
-    val parsed = HitParser.parse(
-      Tables.rawFeed(spark, s"$dir/*.tsv.gz", encoding = "ISO-8859-1"))
-    assert(parsed.collect().head.getAs[String]("page") === "café")
-  }
+  /** The batch reader and the stream reader share one line-source
+    * contract, so each reader-contract case runs against both: the stream
+    * is drained with AvailableNow into a memory table. */
+  private val readers: Seq[(String, (String, String) => DataFrame)] = Seq(
+    "rawFeed" -> ((glob, enc) => Tables.rawFeed(spark, glob, enc)),
+    "rawFeedStream" -> { (glob, enc) =>
+      val name = s"graft_feed_${System.nanoTime()}"
+      val q = StreamingFeed.rawFeedStream(spark, glob, enc)
+        .writeStream.format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      spark.table(name)
+    })
 
-  test("rawFeed passes quote and comma characters through verbatim (CSV quoting disabled)") {
-    val dir = Files.createTempDirectory("graft-quotes").toString
-    // page field contains quotes and commas — the CSV-reader-based line
-    // source must not interpret them
-    val line = "1000\tu\tv\t\t\t2\tsaid \"hi\", twice\tsrv\ti\ts"
-    writeGz(s"$dir/feed.tsv.gz", "UTF-8", Seq(line))
-    val got = Tables.rawFeed(spark, s"$dir/*.tsv.gz").as[String].collect()
-    assert(got === Array(line))
-    val parsed = HitParser.parse(Tables.rawFeed(spark, s"$dir/*.tsv.gz"))
-    assert(parsed.collect().head.getAs[String]("page") === "said \"hi\", twice")
-  }
+  for ((reader, read) <- readers) {
+    test(s"$reader reads gzip ISO-8859-1 feeds without a separate transcode pass") {
+      val dir = Files.createTempDirectory("graft-feed").toString
+      // é in the page field: ISO-8859-1 byte 0xE9, not valid UTF-8
+      val line = "1000\tu\tv\tTRK\t\t2\tcafé\tsrv\ti\ts"
+      writeGz(s"$dir/feed.tsv.gz", "ISO-8859-1", Seq(line))
+      val raw = read(s"$dir/*.tsv.gz", "ISO-8859-1")
+      assert(raw.as[String].collect() === Array(line)) // é survives the charset fold-in
+      assert(HitParser.parse(raw).collect().head.getAs[String]("page") === "café")
+    }
 
-  test("rawFeed's sentinel-sep contract: the live delimiter is u0001 and nothing else") {
-    val dir = Files.createTempDirectory("graft-sep").toString
-    // Pin the delimiter the rawFeed scaladoc documents: sep is explicitly
-    // the \u0001 sentinel. A planted \u0001 DOES split (truncating to
-    // the one-column schema) -- proving which character is live -- while
-    // tab/comma/quote lines never split.
-    val u1 = "\u0001"
-    writeGz(s"$dir/feed.tsv.gz", "UTF-8", Seq(s"a\tb${u1}c\td", "plain\tline"))
-    val got = Tables.rawFeed(spark, s"$dir/*.tsv.gz").as[String].collect().sorted
-    assert(got === Array("a\tb", "plain\tline"))
+    test(s"$reader passes quote and comma characters through verbatim (CSV quoting disabled)") {
+      val dir = Files.createTempDirectory("graft-quotes").toString
+      // page field contains quotes and commas — the CSV-reader-based line
+      // source must not interpret them
+      val line = "1000\tu\tv\t\t\t2\tsaid \"hi\", twice\tsrv\ti\ts"
+      writeGz(s"$dir/feed.tsv.gz", "UTF-8", Seq(line))
+      val raw = read(s"$dir/*.tsv.gz", "UTF-8")
+      assert(raw.as[String].collect() === Array(line))
+      assert(HitParser.parse(raw).collect().head.getAs[String]("page") === "said \"hi\", twice")
+    }
+
+    test(s"$reader's sentinel-sep contract: the live delimiter is u0001 and nothing else") {
+      val dir = Files.createTempDirectory("graft-sep").toString
+      // Pin the delimiter the rawFeed scaladoc documents: sep is explicitly
+      // the \u0001 sentinel. A planted \u0001 DOES split (truncating to
+      // the one-column schema) -- proving which character is live -- while
+      // tab/comma/quote lines never split.
+      val u1 = "\u0001"
+      writeGz(s"$dir/feed.tsv.gz", "UTF-8", Seq(s"a\tb${u1}c\td", "plain\tline"))
+      val got = read(s"$dir/*.tsv.gz", "UTF-8").as[String].collect().sorted
+      assert(got === Array("a\tb", "plain\tline"))
+    }
   }
 
   test("rawFeed glob expansion reads multiple shards (Beam ReadFromText parity)") {
