@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,9 +34,15 @@ import graft.sources.Tables
  *   --spark-names       keep Spark's part-* shard names (skip the Beam
  *                       rename)
  *
+ * The three exports come out of one job over one sessionized pass
+ * ([[Exports.writeAll]]), then get their Beam shard names.
+ *
  * Drop accounting (the reference's TODO at `main.py:80`): input and
- * parsed row counts ride the export write as `observe` metrics — no
- * extra scan — and are printed at the end.
+ * parsed row counts ride that job as `observe` metrics — no extra scan.
+ * When nothing parses, AQE prunes the empty plan and its `observe` nodes
+ * with it; only then are the counts taken by a separate scan. The run
+ * ends with one JSON line on stdout:
+ * `{"input_rows":…,"parsed_rows":…,"dropped":…,"output":"…"}`.
  */
 object Pipeline {
 
@@ -72,17 +79,29 @@ object Pipeline {
           encoding: String = "UTF-8", beamNames: Boolean = true): (Long, Long) = {
     val inObs = Observation("graft_pipeline_in")
     val outObs = Observation("graft_pipeline_out")
-    val parsed = HitParser.parse(
-        Tables.rawFeed(spark, input, encoding)
-          .observe(inObs, count(lit(1)).as("input_rows")))
+    val raw = Tables.rawFeed(spark, input, encoding)
+    val parsed = HitParser.parse(raw.observe(inObs, count(lit(1)).as("input_rows")))
       .observe(outObs, count(lit(1)).as("parsed_rows"))
     Exports.writeAll(parsed, output)
     if (beamNames)
-      Seq("hits", "visits", "visitors").foreach { e =>
+      Exports.Names.foreach { e =>
         Exports.beamShardNames(spark, s"$output/$e", s"$e.csv")
       }
-    (inObs.get("input_rows").asInstanceOf[Long],
-     outObs.get("parsed_rows").asInstanceOf[Long])
+    def observed(obs: Observation, key: String, recount: => Long): Long =
+      obs.get.get(key).map(_.asInstanceOf[Long]).getOrElse(recount)
+    (observed(inObs, "input_rows", raw.count()),
+     observed(outObs, "parsed_rows", HitParser.parse(raw).count()))
+  }
+
+  /** [[main]]'s closing line: the run's counts as one JSON object. */
+  private[graft] def summaryJson(inputRows: Long, parsedRows: Long,
+                                 output: String): String = {
+    val json = new ObjectMapper()
+    json.writeValueAsString(json.createObjectNode()
+      .put("input_rows", inputRows)
+      .put("parsed_rows", parsedRows)
+      .put("dropped", inputRows - parsedRows)
+      .put("output", output))
   }
 
   def main(argv: Array[String]): Unit = {
@@ -96,8 +115,7 @@ object Pipeline {
     try {
       val (in, out) = run(spark, args.input, args.output, args.encoding,
                           args.beamNames)
-      println(s"[graft-pipeline] input_rows=$in parsed_rows=$out " +
-              s"dropped=${in - out} output=${args.output}")
+      println(summaryJson(in, out, args.output))
     } finally spark.stop()
   }
 }

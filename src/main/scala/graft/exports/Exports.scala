@@ -1,7 +1,9 @@
 package graft.exports
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.UUID
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
@@ -10,66 +12,98 @@ import graft.sources.Tables
 
 /**
  * The reference's three denormalized exports (SURVEY.md §1.5, K1 sink —
- * `main.py:229-234`) as real sharded CSV writes: one part-file per task,
- * exactly Beam's `WriteToText` shard model. Writing is embarrassingly
- * parallel — no coalesce, no global sort; at 100 TB the sink scales with
- * the task count.
+ * `main.py:229-234`) as real sharded CSV writes: one part-file per task
+ * and export, exactly Beam's `WriteToText` shard model. Writing is
+ * embarrassingly parallel — no coalesce, no global sort; at 100 TB the
+ * sink scales with the task count.
  *
  * Input is the parsed-hit frame ([[graft.ingest.HitParser.parse]] output:
  * ts in unix seconds + the 13 reference fields). Each export has exactly
- * ONE definition (the `*From` helpers on the sessionized frame); the
- * public per-frame API and [[writeAll]] both go through them.
+ * ONE definition, a column list over the sessionized frame; the public
+ * per-frame API and [[writeAll]] both go through it.
  */
 object Exports {
 
   private def sessionized(parsedHits: DataFrame): DataFrame =
-    Sessionize.withSessionIds(parsedHits, gapUs = 1800L, tsUsCol = "ts")
+    Sessionize.withSessionBounds(parsedHits, gapUs = 1800L, tsUsCol = "ts")
 
-  /** hits rows from an already-sessionized frame — 12 fields in reference
-    * order (`Schemas.hitsExportColumns`, from `main.py:104-107`). */
-  private def hitsFrom(sess: DataFrame): DataFrame =
-    sess.select(Schemas.hitsExportColumns.map(col): _*)
+  /** hits fields — 12, in reference order (`Schemas.hitsExportColumns`,
+    * from `main.py:104-107`). One row per hit. */
+  private val hitsColumns: Seq[Column] = Schemas.hitsExportColumns.map(col)
 
-  /** visits rows from an already-sessionized frame (`main.py:99-102`). */
-  private def visitsFrom(sess: DataFrame): DataFrame =
-    sess.groupBy("user_id", "session_id")
-      .agg(min("ts").as("visit_start"), max("ts").as("visit_end"))
-      .select(
-        Sessionize.visitKey(col("user_id"), col("visit_start")).as("visit_key"),
-        col("user_id"), col("visit_start"), col("visit_end"))
+  /** visits fields (`main.py:99-102`), read off a session's first row. */
+  private val visitsColumns: Seq[Column] = Seq(
+    col("visit_key"), col("user_id"),
+    col("visit_start_us").as("visit_start"), col("visit_end_us").as("visit_end"))
 
-  /** visitors rows (`main.py:157-160`): reference parity keeps one row per
-    * hit (`main.py:214`; SURVEY.md §1.5 quirk). */
-  private def visitorsFrom(frame: DataFrame): DataFrame =
-    frame.select("user_id", "ibm_id", "scv_id")
+  /** visitors fields (`main.py:157-160`): reference parity keeps one row
+    * per hit (`main.py:214`; SURVEY.md §1.5 quirk). */
+  private val visitorsColumns: Seq[Column] = Seq("user_id", "ibm_id", "scv_id").map(col)
+
+  /** The export directories [[writeAll]] writes under its base dir. */
+  val Names: Seq[String] = Seq("hits", "visits", "visitors")
 
   /** hits.csv frame. */
   def hitsFrame(parsedHits: DataFrame): DataFrame =
-    hitsFrom(sessionized(parsedHits))
+    sessionized(parsedHits).select(hitsColumns: _*)
 
-  /** visits.csv frame. */
+  /** visits.csv frame: one row per session, its first hit's. */
   def visitsFrame(parsedHits: DataFrame): DataFrame =
-    visitsFrom(sessionized(parsedHits))
+    sessionized(parsedHits).filter(col("session_first")).select(visitsColumns: _*)
 
   /** visitors.csv frame; `dedup = true` is the honest variant the
     * reference lacked. */
   def visitorsFrame(parsedHits: DataFrame, dedup: Boolean = false): DataFrame = {
-    val v = visitorsFrom(parsedHits)
+    val v = parsedHits.select(visitorsColumns: _*)
     if (dedup) v.dropDuplicates() else v
   }
 
   /** Write all three exports under `baseDir/{hits,visits,visitors}` as
-    * sharded CSV (part-file per task ≡ Beam shard-per-bundle). The
-    * sessionized frame is computed ONCE and cached across the three writes
-    * — without it each sink re-reads and re-sessionizes the input (three
-    * scans, two identical shuffles). */
+    * sharded CSV (part-file per task ≡ Beam shard-per-bundle), in ONE job
+    * over ONE sessionized pass with nothing cached — the reference's
+    * shape (`main.py:207-234`). Every hit emits its hits and visitors CSV
+    * lines and, on its session's first row, its visits line, each tagged
+    * with its export; one text write partitioned by that tag lands them
+    * in a staging directory under `baseDir`, whose `export=<e>`
+    * directories then replace `baseDir/<e>`. The shuffle stays visible to
+    * AQE, so task and file counts follow the data.
+    *
+    * Layout per export is what a `.csv` write leaves: `part-*.csv` files
+    * (one empty part-file when there are no rows) and `_SUCCESS`. A failed
+    * job leaves the previous exports in place; the staging directory is
+    * removed either way, and nothing else under `baseDir` is touched. */
   def writeAll(parsedHits: DataFrame, baseDir: String): Unit = {
-    val sess = sessionized(parsedHits).persist()
+    def line(name: String, columns: Seq[Column]): Column =
+      struct(lit(name).as("export"), to_csv(struct(columns: _*)).as("value"))
+    val perHit = Seq(line("hits", hitsColumns), line("visitors", visitorsColumns))
+    val lines = sessionized(parsedHits).select(inline(
+      when(col("session_first"), array(perHit :+ line("visits", visitsColumns): _*))
+        .otherwise(array(perHit: _*))))
+
+    val base = new Path(baseDir)
+    val fs = base.getFileSystem(parsedHits.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new Path(base, s"_exports-staging-${UUID.randomUUID}")
     try {
-      hitsFrom(sess).write.mode("overwrite").csv(s"$baseDir/hits")
-      visitsFrom(sess).write.mode("overwrite").csv(s"$baseDir/visits")
-      visitorsFrom(sess).write.mode("overwrite").csv(s"$baseDir/visitors")
-    } finally sess.unpersist()
+      lines.write.partitionBy("export").text(staging.toString)
+      Names.foreach(e => publish(fs, new Path(staging, s"export=$e"), new Path(base, e)))
+    } finally fs.delete(staging, true)
+  }
+
+  /** Moves one staged export over `target`, with a `.csv` write's names. */
+  private def publish(fs: FileSystem, staged: Path, target: Path): Unit = {
+    if (fs.exists(target)) require(fs.delete(target, true), s"cannot replace $target")
+    if (fs.exists(staged)) require(fs.rename(staged, target), s"rename failed: $staged")
+    else {
+      require(fs.mkdirs(target), s"cannot create $target")
+      fs.create(new Path(target, s"part-00000-${UUID.randomUUID}-c000.csv")).close()
+    }
+    fs.listStatus(target).map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".txt"))
+      .foreach { p =>
+        val csv = new Path(target, p.getName.stripSuffix(".txt") + ".csv")
+        require(fs.rename(p, csv), s"rename failed: $p")
+      }
+    fs.create(new Path(target, "_SUCCESS")).close()
   }
 
   /**

@@ -39,7 +39,6 @@ object HitParser {
    */
   def parse(raw: DataFrame): DataFrame = {
     val c = split(col("value"), "\t")
-    val products = c(4)
     raw
       .select(c.as("c"))
       // ≥10 columns, numeric non-empty ts, products either empty or with a

@@ -82,7 +82,22 @@ object Sessionize {
   def withSessionIds(events: DataFrame,
                      gapUs: Long = Schemas.SessionGapUs,
                      userCol: String = "user_id",
-                     tsUsCol: String = "ts_us"): DataFrame = {
+                     tsUsCol: String = "ts_us"): DataFrame =
+    withSessionBounds(events, gapUs, userCol, tsUsCol)
+      .drop("session_first", "visit_end_us")
+
+  /**
+   * [[withSessionIds]] plus, on every row, its session's `visit_end_us`
+   * (`max` over the same per-session window as `visit_start_us`) and
+   * `session_first`: true on exactly one row per session, the one that
+   * opens it (no earlier hit of the user, or a gap of at least `gapUs`).
+   * One pass gives both the per-hit rows and, filtered to
+   * `session_first`, one row per visit, with no second shuffle.
+   */
+  def withSessionBounds(events: DataFrame,
+                        gapUs: Long = Schemas.SessionGapUs,
+                        userCol: String = "user_id",
+                        tsUsCol: String = "ts_us"): DataFrame = {
     val byUser = Window.partitionBy(userCol).orderBy(tsUsCol)
     val running = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val withSid = events
@@ -92,10 +107,14 @@ object Sessionize {
         when(col(tsUsCol) - col("prev_ts_us") >= gapUs, 1).otherwise(0)
       )
       .withColumn("session_id", sum("session_break").over(running))
+      .withColumn("session_first",
+                  col("prev_ts_us").isNull || col("session_break") === 1)
       .drop("prev_ts_us", "session_break")
     val bySession = Window.partitionBy(userCol, "session_id")
     withSid
-      .withColumn("visit_start_us", min(tsUsCol).over(bySession))
+      .select(col("*"),
+              min(tsUsCol).over(bySession).as("visit_start_us"),
+              max(tsUsCol).over(bySession).as("visit_end_us"))
       .withColumn("visit_key", visitKey(col(userCol), col("visit_start_us")))
   }
 

@@ -1,7 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Path}
 
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import graft.exports.Exports
 import graft.ingest.{FeedSynth, HitParser}
 import graft.sources.Tables
 
@@ -36,6 +40,53 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.csv(s"$outDir/visitors").count() === nParsed)
     val nVisits = spark.read.csv(s"$outDir/visits").count()
     assert(nVisits > 0 && nVisits <= nParsed)
+  }
+
+  test("run: an empty and an all-malformed feed give exact counts and the export layout") {
+    for ((name, content, want) <- Seq(("empty", "", (0L, 0L)),
+                                      ("malformed", "not\ta\thit\n", (1L, 0L)))) {
+      val inDir = Files.createTempDirectory(s"graft-pipeline-$name").toString
+      Files.writeString(Path.of(s"$inDir/feed.tsv"), content)
+      val outDir = Files.createTempDirectory("graft-pipeline-out").toString
+      Files.writeString(Path.of(s"$outDir/sibling.txt"), "kept")
+
+      assert(Pipeline.run(spark, s"$inDir/*.tsv", outDir) === want, name)
+
+      // the three exports, the untouched sibling, no staging directory
+      assert(new File(outDir).list().filterNot(_.startsWith(".")).toSet ===
+               Set("hits", "visits", "visitors", "sibling.txt"), name)
+      assert(Files.readString(Path.of(s"$outDir/sibling.txt")) === "kept")
+      Exports.Names.foreach { e =>
+        val files = new File(s"$outDir/$e").list().filterNot(_.startsWith(".")).sorted.toSeq
+        assert(files === Seq("_SUCCESS", s"$e.csv-00000-of-00001"), s"$name $e")
+        assert(new File(s"$outDir/$e/$e.csv-00000-of-00001").length === 0L)
+      }
+    }
+  }
+
+  test("run with Spark's shard names keeps the part-files' .csv suffix") {
+    val inDir = Files.createTempDirectory("graft-pipeline-sparknames").toString
+    Files.writeString(Path.of(s"$inDir/feed.tsv"),
+      "1000\tu\t1\tTRK\t\t1\tpage\tsrv\tibm\tscv\n")
+    val outDir = Files.createTempDirectory("graft-pipeline-sparknames-out").toString
+    assert(Pipeline.run(spark, s"$inDir/*.tsv", outDir, beamNames = false) === ((1L, 1L)))
+    Exports.Names.foreach { e =>
+      val parts = new File(s"$outDir/$e").list()
+        .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+      assert(parts.nonEmpty && parts.forall(_.matches("part-\\d{5}-.*\\.csv")),
+             parts.mkString(","))
+    }
+  }
+
+  test("summaryJson: the closing line is one JSON object with the run's counts") {
+    val line = Pipeline.summaryJson(10L, 7L, "out/\"x\"")
+    assert(!line.contains("\n"))
+    val node = new ObjectMapper().readTree(line)
+    assert(node.size === 4)
+    assert(node.get("input_rows").asLong === 10L)
+    assert(node.get("parsed_rows").asLong === 7L)
+    assert(node.get("dropped").asLong === 3L)
+    assert(node.get("output").asText === "out/\"x\"")
   }
 
   test("parseArgs: required flags, defaults, and the --spark-names switch") {

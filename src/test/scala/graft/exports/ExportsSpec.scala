@@ -1,20 +1,40 @@
 package graft.exports
 
+import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.ingest.{FeedSynth, HitParser}
+import graft.session.Sessionize
 import graft.sources.Tables
 
 /** The three sharded CSV exports (reference K1, `main.py:229-234`) written
   * and read back — sink glue on top of the proven frames. */
 class ExportsSpec extends SparkSpec {
+  import spark.implicits._
 
   private lazy val parsed =
     HitParser.parse(FeedSynth.synthLines(
       Tables.events(spark, "/root/testdata/sf0.001"))).cache()
+
+  /** Hits whose fields exercise CSV quoting: commas, `"`, empty fields,
+    * a leading blank and non-ASCII text. User `u_1` has two visits, `w_2`
+    * one (800 s apart). Not cached. */
+  private def tricky: DataFrame = HitParser.parse(Seq(
+    "1000\tu\t1\tTRK,1\t;SKU,1\t1,2\tsay \"hi\", then go\tsrv\t\tscv",
+    "1100\tu\t1\t\t\t\tcafé naïve\tsrv\tibm\t",
+    "5000\tu\t1\t TRK\t;SKU2;x\t204\tplain\ts,rv\t\"ibm\"\tscv",
+    "1000\tw\t2\t\t\t11\tüñí,\"\t\tibm\tscv",
+    "1800\tw\t2\ttrk\t\t\t日本語\tsrv\t\t").toDF("value"))
+
+  private def lines(dir: String): Seq[String] =
+    spark.read.text(dir).collect().map(_.getString(0)).toSeq.sorted
 
   test("writeAll: three sharded CSV dirs, row counts consistent") {
     val dir = Files.createTempDirectory("graft-exports").toString
@@ -29,6 +49,85 @@ class ExportsSpec extends SparkSpec {
     assert(hits.columns.length === 12)
     assert(visits.columns.length === 4)
     assert(visitors.columns.length === 3)
+  }
+
+  test("writeAll's exports equal the per-export frames written as CSV, line for line") {
+    val all = Files.createTempDirectory("graft-exports-all").toString
+    val ref = Files.createTempDirectory("graft-exports-ref").toString
+    Exports.writeAll(tricky, all)
+    Exports.hitsFrame(tricky).write.csv(s"$ref/hits")
+    Exports.visitsFrame(tricky).write.csv(s"$ref/visits")
+    Exports.visitorsFrame(tricky).write.csv(s"$ref/visitors")
+    Exports.Names.foreach(e => assert(lines(s"$all/$e") === lines(s"$ref/$e"), e))
+    assert(lines(s"$all/hits").size === 5)
+    assert(lines(s"$all/visits").size === 3)
+    // the fixture reaches the quoting paths: an embedded quote and comma
+    assert(lines(s"$all/hits").exists(_.contains(""""say \"hi\", then go"""")))
+    // a .csv write's layout: part-*.csv files and a _SUCCESS marker
+    Exports.Names.foreach { e =>
+      val names = new File(s"$all/$e").list().filterNot(_.startsWith("."))
+      assert(names.contains("_SUCCESS"), e)
+      assert(names.filter(_ != "_SUCCESS").forall(n => n.startsWith("part-") && n.endsWith(".csv")),
+             names.mkString(","))
+    }
+  }
+
+  test("visits frame: one row per session, equal to the per-session groupBy") {
+    val byGroup = Sessionize.withSessionIds(parsed, gapUs = 1800L, tsUsCol = "ts")
+      .groupBy("user_id", "session_id")
+      .agg(min("ts").as("visit_start"), max("ts").as("visit_end"))
+      .select(Sessionize.visitKey(col("user_id"), col("visit_start")).as("visit_key"),
+              col("user_id"), col("visit_start"), col("visit_end"))
+    val visits = Exports.visitsFrame(parsed)
+    assert(visits.count() === byGroup.count())
+    assert(visits.exceptAll(byGroup).isEmpty)
+    assert(byGroup.exceptAll(visits).isEmpty)
+  }
+
+  test("writeAll runs one write job and caches nothing") {
+    val sc = spark.sparkContext
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val writes = new LinkedBlockingQueue[String]()
+    val markers = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writes.add(s.physicalPlanDescription)
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(markers.add)
+    }
+    val dir = Files.createTempDirectory("graft-exports-onejob").toString
+    spark.catalog.clearCache()
+    sc.addSparkListener(listener)
+    try {
+      Exports.writeAll(tricky, dir)
+      assert(cacheManager.isEmpty)
+      // the bus delivers in order: once the marker job is seen, so is
+      // every execution that started before it
+      sc.setJobGroup("exports-onejob-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markers.poll(60, TimeUnit.SECONDS) === "exports-onejob-end")
+    } finally sc.removeSparkListener(listener)
+    assert(writes.size === 1)
+    assert(!writes.peek().contains("InMemory"), writes.peek())
+  }
+
+  test("a job failing inside writeAll keeps the previous exports and leaves no staging") {
+    val dir = Files.createTempDirectory("graft-exports-fail").toString
+    Exports.writeAll(tricky, dir)
+    val before = Exports.Names.map(e => lines(s"$dir/$e"))
+    val poisoned = tricky.withColumn("page",
+      when(col("ts") > 0, raise_error(lit("injected export failure"))).otherwise(col("page")))
+    val e = intercept[Exception](Exports.writeAll(poisoned, dir))
+    assert(e.toString.contains("injected export failure") ||
+           Option(e.getCause).exists(_.toString.contains("injected export failure")), e)
+    assert(new File(dir).list().filterNot(_.startsWith(".")).toSet === Exports.Names.toSet)
+    assert(Exports.Names.map(e => lines(s"$dir/$e")) === before)
   }
 
   test("visits frame: key joins back to hits frame (the relational re-join the exports serve)") {
