@@ -1272,9 +1272,8 @@ object CurationQueries {
   /** (doc_id, lang, sel_h, b) per feature occurrence — consumed by
     * three aggregates per scoring call AND by three GATES per process
     * (q_dsir_weights, q_dsir_resample, the streaming face's training
-    * leg), so since round 21 it is a per-process pid-keyed parquet memo
-    * behind the fingerprinted [[LayoutQueries.buildOnce]] guard (the
-    * [[DedupQueries]] cachedBandSigs discipline): the md5-per-feature
+    * leg), so it is a parquet artifact under [[LayoutQueries.memo]]
+    * (like [[DedupQueries]] cachedBandSigs): the md5-per-feature
     * explode pass over the corpus runs once per process, not once per
     * gate. Pure materialization — hashing is deterministic in (code,
     * input), and each gate's oracle replays the whole derivation
@@ -1282,29 +1281,26 @@ object CurationQueries {
     * the explode as an 8-byte constant — cheaper than re-joining the
     * doc frame after the score aggregate. Arbitrary-frame callers
     * ([[dsirScoredOf]]) stay self-contained. */
-  private val dsirFrameLock = new Object
-  private def dsirFeatureFrame(s: SparkSession, dir: String): DataFrame =
-    dsirFrameLock.synchronized {
-      val out = LayoutQueries.derivedDir(s, dir, "dsir-features")
-      LayoutQueries.buildOnce(s, out, dir) {
-        val d = docs(s, dir)
-          .filter(col("text").isNotNull)
-          .select(col("doc_id"), col("lang"),
-                  pmod(TextOps.md5Prefix32(
-                         md5(concat(lit("dsirsel:"), col("text")))),
-                       lit(DsirScale)).as("sel_h"),
-                  TextOps.tokens(col("text")).as("toks"))
-        d.select(col("doc_id"), col("lang"), col("sel_h"),
-                 explode(concat(col("toks"), TextOps.shingles(col("toks"), 2)))
-                   .as("feat"))
-          .withColumn("b", pmod(TextOps.md5Prefix32(
-                                  md5(concat(lit("dsir:"), col("feat")))),
-                                lit(DsirB)))
-          .drop("feat")
-          .write.mode("overwrite").parquet(s"$out/fb")
-      }
-      s.read.parquet(s"$out/fb")
+  private def dsirFeatureFrame(s: SparkSession, dir: String): DataFrame = {
+    val out = LayoutQueries.memo(s, dir, "dsir-features") { out =>
+      val d = docs(s, dir)
+        .filter(col("text").isNotNull)
+        .select(col("doc_id"), col("lang"),
+                pmod(TextOps.md5Prefix32(
+                       md5(concat(lit("dsirsel:"), col("text")))),
+                     lit(DsirScale)).as("sel_h"),
+                TextOps.tokens(col("text")).as("toks"))
+      d.select(col("doc_id"), col("lang"), col("sel_h"),
+               explode(concat(col("toks"), TextOps.shingles(col("toks"), 2)))
+                 .as("feat"))
+        .withColumn("b", pmod(TextOps.md5Prefix32(
+                                md5(concat(lit("dsir:"), col("feat")))),
+                              lit(DsirB)))
+        .drop("feat")
+        .write.mode("overwrite").parquet(s"$out/fb")
     }
+    s.read.parquet(s"$out/fb")
+  }
 
   /** The ≤ `DsirB`-row weight table (b, w) over a feature frame —
     * w_b = ⌊10⁶ · p̂(b)/q̂(b)⌋ with p̂(b) = (tgt_b+1)/(T+B), q̂(b) =

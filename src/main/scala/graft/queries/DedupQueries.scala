@@ -293,8 +293,6 @@ object DedupQueries {
       .select(col("mn").as("a"), col("it").as("b")) // a < b by min-ness
   }
 
-  private val bandSigsLock = new Object
-
   /** Per-process parquet memo of the FULL corpus's band signatures
     * `(doc_id, band, sig0, sig1)` — signatures are PER-DOC (shingle →
     * minhash, no corpus statistics), so every subset face filters the
@@ -303,17 +301,15 @@ object DedupQueries {
     * the probe's own candidate pairs, append survivors), and
     * q_dedup_minhash + the component memo's star edges re-signed it
     * again (round-19 VERDICT item 2). The [[cachedDedupComponents]]
-    * discipline: pid-keyed parquet, fs marker, oracles unchanged and
-    * independently replayed. */
-  private def cachedBandSigs(s: SparkSession, dir: String): DataFrame =
-    bandSigsLock.synchronized {
-      val out = LayoutQueries.derivedDir(s, dir, "band-sigs")
-      LayoutQueries.buildOnce(s, out, dir) {
-        bandSignaturesOf(docsDistributed(s, dir).select("doc_id", "text"))
-          .write.mode("overwrite").parquet(s"$out/sigs")
-      }
-      s.read.parquet(s"$out/sigs")
+    * discipline: parquet under [[LayoutQueries.memo]], oracles
+    * unchanged and independently replayed. */
+  private def cachedBandSigs(s: SparkSession, dir: String): DataFrame = {
+    val out = LayoutQueries.memo(s, dir, "band-sigs") { out =>
+      bandSignaturesOf(docsDistributed(s, dir).select("doc_id", "text"))
+        .write.mode("overwrite").parquet(s"$out/sigs")
     }
+    s.read.parquet(s"$out/sigs")
+  }
 
   /** [[candidatePairs]] over an ALREADY-SIGNED `(doc_id, band, sig0,
     * sig1)` frame — the seam that lets the gate path reuse
@@ -904,8 +900,6 @@ object DedupQueries {
   private[queries] def clusterIds(s: SparkSession, dir: String): DataFrame =
     labelAll(docs(s, dir), cachedDedupComponents(s, dir))
 
-  private val dedupCompLock = new Object
-
   /** Per-process parquet memo of the TEXT-dedup component labels
     * `(id, lbl)` over the candidate-star ∪ exact edge set — the
     * `cachedClusterLabels` discipline applied to the text family:
@@ -917,16 +911,14 @@ object DedupQueries {
     * the first consumer's hash would catch it. Arbitrary-frame
     * surfaces ([[clusterIdsOf]], [[dedupedCorpusOf]],
     * [[canonicalCorpusOf]]) stay self-contained. */
-  private def cachedDedupComponents(s: SparkSession, dir: String): DataFrame =
-    dedupCompLock.synchronized {
-      val out = LayoutQueries.derivedDir(s, dir, "dedup-components")
-      LayoutQueries.buildOnce(s, out, dir) {
-        components(dedupEdges(docs(s, dir),
-                              candidateStarsSigned(cachedBandSigs(s, dir))))
-          .write.mode("overwrite").parquet(s"$out/labels")
-      }
-      s.read.parquet(s"$out/labels")
+  private def cachedDedupComponents(s: SparkSession, dir: String): DataFrame = {
+    val out = LayoutQueries.memo(s, dir, "dedup-components") { out =>
+      components(dedupEdges(docs(s, dir),
+                            candidateStarsSigned(cachedBandSigs(s, dir))))
+        .write.mode("overwrite").parquet(s"$out/labels")
     }
+    s.read.parquet(s"$out/labels")
+  }
 
   /** [[clusterIds]] over an ARBITRARY `(doc_id, text, …)` frame — the
     * `graft_split_cluster` TVF's labeling (identical edge set to
@@ -2697,13 +2689,11 @@ object DedupQueries {
     substrReassemble(batch, dup, w)
   }
 
-  private val saBuildLock = new Object
-
   /**
    * Suffix-array-style ExactSubstr THROUGH the offline index, behind
    * the driver gate (round-18 VERDICT item 6): build the sorted
    * gram-occurrence layout at `SaMinLen` tokens ([[writeSubstrIndex]],
-   * marker-memoized per process like the IVF/cluster layouts), derive
+   * [[LayoutQueries.memo]]ized like the IVF/cluster layouts), derive
    * duplicate occurrences from the STORED triples, and strip-and-
    * reassemble every document ([[substrReassemble]] at the same
    * width). Closes the documented [[qSubstrDedup]] threshold hole:
@@ -2727,13 +2717,8 @@ object DedupQueries {
   val qSubstrSa = Q(
     "q_substr_sa",
     (s, dir) => {
-      val out = LayoutQueries.derivedDir(s, dir, "substr-sa")
       val docs = docsDistributed(s, dir)
-      saBuildLock.synchronized {
-        LayoutQueries.buildOnce(s, out, dir) {
-          writeSubstrIndex(docs, out)
-        }
-      }
+      val out = LayoutQueries.memo(s, dir, "substr-sa")(writeSubstrIndex(docs, _))
       substrReassemble(docs, saDuplicatesFromIndex(s, out), SaMinLen)
     },
     Some(substrOracleSql(SaMinLen))
@@ -2743,9 +2728,9 @@ object DedupQueries {
    * The ARRIVING-BATCH face of the stored substring index, behind the
    * driver gate — the [[qSubstrIncremental]] %5-split replay at the
    * index's own width: the even corpus is indexed ONCE
-   * ([[writeSubstrIndex]], marker-memoized), the eval batch probes the
-   * COMMITTED layout ([[substrDedupAgainstIndex]] — corpus as stored
-   * hashes, never re-tokenized), and the 8..12-token regions the
+   * ([[writeSubstrIndex]] under [[LayoutQueries.memo]]), the eval batch
+   * probes the COMMITTED layout ([[substrDedupAgainstIndex]] — corpus
+   * as stored hashes, never re-tokenized), and the 8..12-token regions the
    * W = SubstrW incremental face passes through die here. The oracle
    * is the shared split replay at `SaMinLen` — identical because the
    * stored index IS the corpus gram set ([[SubstrSaSpec]] pins that
@@ -2754,13 +2739,9 @@ object DedupQueries {
   val qSubstrSaProbe = Q(
     "q_substr_sa_probe",
     (s, dir) => {
-      val out = LayoutQueries.derivedDir(s, dir, "substr-sa-corpus")
       val docs = docsDistributed(s, dir)
-      saBuildLock.synchronized {
-        LayoutQueries.buildOnce(s, out, dir) {
-          writeSubstrIndex(docs.filter(col("doc_id") % 5 =!= 4), out)
-        }
-      }
+      val out = LayoutQueries.memo(s, dir, "substr-sa-corpus")(
+        writeSubstrIndex(docs.filter(col("doc_id") % 5 =!= 4), _))
       substrDedupAgainstIndex(s, out, docs.filter(col("doc_id") % 5 === 4))
     },
     Some(substrIncrOracleSql(SaMinLen))

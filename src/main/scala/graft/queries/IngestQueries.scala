@@ -174,7 +174,7 @@ object IngestQueries {
     s"CASE WHEN doc_id % 3 = 1 THEN text || $JsonlTailSql ELSE text END"
 
   /** Build the `.jsonl.gz` corpus FILES for a testdata dir, once per
-    * process ([[LayoutQueries.derivedDir]] scratch, `_SUCCESS`-marked)
+    * state of the corpus ([[LayoutQueries.memo]])
     * — the [[graft.queries.WebQueries]] warcFilesDir discipline over
     * the OTHER interchange format corpora actually ship in: one JSON
     * object per line (`to_json` over the typed struct), whole file one
@@ -184,65 +184,57 @@ object IngestQueries {
     * the reader's malformed-line rejection is hash-load-bearing, not
     * assumed. Distributed `foreachPartition` write, one shard per
     * task, no driver collect at any corpus size. */
-  private val jsonlBuildLock = new Object
   private[graft] def jsonlFilesDir(s: org.apache.spark.sql.SparkSession,
                                    sfDir: String): String =
-    jsonlBuildLock.synchronized {
-      val dir = LayoutQueries.derivedDir(s, sfDir, "jsonlfiles")
+    LayoutQueries.memo(s, sfDir, "jsonlfiles") { dir =>
       val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(root, "_SUCCESS")
-      if (!fs.exists(marker)) {
-        fs.mkdirs(root)
-        val lines = jsonlDocs(s, sfDir)
-          .select(col("doc_id"),
-                  to_json(struct(col("doc_id"), col("lang"), col("text"),
-                                 col("n_chars"))).as("line"))
-          .select(pmod(col("doc_id"), lit(JsonlFileCount)).cast("int")
-                    .as("fk"),
-                  col("doc_id"), lit(1).as("line_idx"), col("line"))
-          .unionAll(
-            jsonlDocs(s, sfDir)
-              .filter(pmod(col("doc_id"), lit(13)) === 5)
-              .select(col("doc_id"),
-                      substring(to_json(struct(col("doc_id"), col("lang"),
-                                               col("text"), col("n_chars"))),
-                                1, 25).as("line"))
-              .select(pmod(col("doc_id"), lit(JsonlFileCount)).cast("int")
-                        .as("fk"),
-                      col("doc_id"), lit(2).as("line_idx"), col("line")))
-        val dirStr = dir
-        val confKv = WebQueries.hadoopConfKv(s)
-        lines.repartition(JsonlFileCount, col("fk"))
-          .sortWithinPartitions("fk", "doc_id", "line_idx")
-          .select(col("fk"), encode(col("line"), "UTF-8").as("line"))
-          .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-            if (it.hasNext) {
-              // driver-conf rebuild, not a default Configuration(): keeps
-              // session filesystem settings (s3a creds etc.) at task level
-              val tfs = new org.apache.hadoop.fs.Path(dirStr)
-                .getFileSystem(WebQueries.hadoopConfOf(confKv))
-              var cur = -1
-              var out: java.util.zip.GZIPOutputStream = null
-              try {
-                it.foreach { row =>
-                  val fk = row.getInt(0)
-                  if (fk != cur) { // shard-sorted rows: one open per shard
-                    if (out != null) out.close()
-                    out = new java.util.zip.GZIPOutputStream(
-                      tfs.create(new org.apache.hadoop.fs.Path(
-                        dirStr, f"part-$fk%05d.jsonl.gz"), true), 65536)
-                    cur = fk
-                  }
-                  out.write(row.getAs[Array[Byte]](1))
-                  out.write('\n')
+      root.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(root)
+      val lines = jsonlDocs(s, sfDir)
+        .select(col("doc_id"),
+                to_json(struct(col("doc_id"), col("lang"), col("text"),
+                               col("n_chars"))).as("line"))
+        .select(pmod(col("doc_id"), lit(JsonlFileCount)).cast("int")
+                  .as("fk"),
+                col("doc_id"), lit(1).as("line_idx"), col("line"))
+        .unionAll(
+          jsonlDocs(s, sfDir)
+            .filter(pmod(col("doc_id"), lit(13)) === 5)
+            .select(col("doc_id"),
+                    substring(to_json(struct(col("doc_id"), col("lang"),
+                                             col("text"), col("n_chars"))),
+                              1, 25).as("line"))
+            .select(pmod(col("doc_id"), lit(JsonlFileCount)).cast("int")
+                      .as("fk"),
+                    col("doc_id"), lit(2).as("line_idx"), col("line")))
+      val dirStr = dir
+      val confKv = WebQueries.hadoopConfKv(s)
+      lines.repartition(JsonlFileCount, col("fk"))
+        .sortWithinPartitions("fk", "doc_id", "line_idx")
+        .select(col("fk"), encode(col("line"), "UTF-8").as("line"))
+        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+          if (it.hasNext) {
+            // driver-conf rebuild, not a default Configuration(): keeps
+            // session filesystem settings (s3a creds etc.) at task level
+            val tfs = new org.apache.hadoop.fs.Path(dirStr)
+              .getFileSystem(WebQueries.hadoopConfOf(confKv))
+            var cur = -1
+            var out: java.util.zip.GZIPOutputStream = null
+            try {
+              it.foreach { row =>
+                val fk = row.getInt(0)
+                if (fk != cur) { // shard-sorted rows: one open per shard
+                  if (out != null) out.close()
+                  out = new java.util.zip.GZIPOutputStream(
+                    tfs.create(new org.apache.hadoop.fs.Path(
+                      dirStr, f"part-$fk%05d.jsonl.gz"), true), 65536)
+                  cur = fk
                 }
-              } finally if (out != null) out.close()
-            }
+                out.write(row.getAs[Array[Byte]](1))
+                out.write('\n')
+              }
+            } finally if (out != null) out.close()
           }
-        fs.create(marker, true).close()
-      }
-      dir
+        }
     }
 
   /** The JSONL parse chain over a binary `content` column of container

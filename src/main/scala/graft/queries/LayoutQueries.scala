@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,8 +41,7 @@ object LayoutQueries {
   }
 
   /** Per-PROCESS scratch dir for derived data over a testdata dir — the
-    * ONE statement of the pid-keyed scratch discipline (previously
-    * copy-pasted by every streaming gate and the IVF layout): rooted at
+    * ONE statement of the pid-keyed scratch discipline: rooted at
     * `spark.graft.layoutRoot` when set (so a deployment's derived data
     * follows its durable-storage choice) else the local tmpdir, keyed by
     * basename + path hash (same-basename corpora can't collide) + this
@@ -85,110 +84,59 @@ object LayoutQueries {
     f"$n:$x%016x"
   }
 
-  /** Build-at-most-once guard for the per-process derived-artifact memos
-    * (gate quantizer, IVF centroids, band signatures, dedup components,
-    * cluster labels/layouts, stream layouts, offset indexes) with the
-    * SOURCE FINGERPRINT folded into the marker — round-20 ADVICE
-    * (medium): a bare existence marker silently served stale artifacts
-    * when the source dir's content changed under a live process (the
-    * incremental-ingest cadence the append APIs support) or when a
-    * durable `spark.graft.layoutRoot` met a recycled pid. The guard
-    * rebuilds whenever the recorded fingerprint mismatches the current
-    * one, DELETING the artifact root first so stale tables and
-    * secondary markers (e.g. the cluster gate's `_GRAFT_APPENDED`)
-    * cannot survive into the fresh build. Legacy empty markers read as
-    * a mismatch — an upgrade rebuilds once, never serves stale.
-    * Callers keep their own per-JVM locks; this guard adds the
-    * cross-call input check, not mutual exclusion. */
-  private[queries] def buildOnce(s: SparkSession, outDir: String,
-                                 srcDir: String)(build: => Unit): Unit = {
-    val root = new Path(outDir)
+  /** The one memo for derived artifacts: the directory of artifact
+    * `name` over `srcDir`, built by `build(dir)` at most once per state
+    * of the source. The directory is a [[derivedDir]] (pid-keyed, under
+    * `spark.graft.layoutRoot` when set, else deleted at JVM exit), and
+    * its `_GRAFT_BUILT` marker records the [[sourceFingerprint]] of
+    * `srcDir` it was built from. A missing marker or a different
+    * fingerprint deletes the directory and rebuilds it from a clean
+    * root, so neither a stale table nor a half-finished build survives.
+    * One re-entrant lock covers every memo: nested memos (a layout built
+    * from the memoized labels, themselves built with the memoized
+    * quantizer) run on one thread.
+    *
+    * A built artifact is read-only. A gate that needs an artifact plus a
+    * change of its own (an append, a second version) memoizes that whole
+    * derivation under its own name and never writes into another
+    * memo's directory. */
+  private[queries] def memo(s: SparkSession, srcDir: String, name: String)(
+      build: String => Unit): String = synchronized {
+    val out = derivedDir(s, srcDir, name)
+    val root = new Path(out)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     val marker = new Path(root, "_GRAFT_BUILT")
     val fp = sourceFingerprint(s, srcDir)
-    val current =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-          Some(new String(out.toByteArray, "UTF-8"))
-        } finally in.close()
-      }
-    if (!current.contains(fp)) {
+    val built = fs.exists(marker) && {
+      val in = fs.open(marker)
+      try new String(in.readAllBytes(), "UTF-8") == fp finally in.close()
+    }
+    if (!built) {
       if (fs.exists(root)) fs.delete(root, true)
-      build
+      build(out)
       val o = fs.create(marker, true)
       try o.write(fp.getBytes("UTF-8")) finally o.close()
     }
+    out
   }
-
-  /** Root for engine-derived physical layouts, keyed by the source dir's
-    * basename PLUS a hash of its fully-qualified path — two corpora that
-    * share a basename (a copied `sf0.01/`) must not collide on one cache
-    * entry. Derived data lives outside the (read-only) testdata tree,
-    * under `spark.graft.layoutRoot` when set (any Hadoop-visible URI — a
-    * shared cluster points this at durable storage or materializes
-    * layouts as managed tables under a real catalog) or the local tmpdir
-    * by default. The build-if-missing guard is synchronized within this
-    * JVM; concurrent builds from SEPARATE processes race on the overwrite
-    * (acceptable for a dev cache). */
-  private def layoutRoot(s: SparkSession, fs: FileSystem, sfDir: String): Path = {
-    val src = fs.makeQualified(new Path(sfDir))
-    val key = f"${src.getName}-${src.toString.hashCode & 0x7FFFFFFF}%08x"
-    val base = s.conf.getOption("spark.graft.layoutRoot")
-      .getOrElse(s"${sys.props("java.io.tmpdir")}/graft-layouts")
-    new Path(s"$base/$key")
-  }
-
-  /** Newest mtime in a file-or-directory tree (parquet outputs are dirs),
-    * via the Hadoop FileSystem API so any Hadoop-visible store works —
-    * the same FS discipline `Exports.transcodeFeed` uses. */
-  private def newestMtime(fs: FileSystem, p: Path): Long =
-    if (!fs.exists(p)) 0L
-    else {
-      val st = fs.getFileStatus(p)
-      // recurse into directories ONLY: listStatus(file) returns the file's
-      // own status, which would recurse forever
-      val kids =
-        if (st.isDirectory) fs.listStatus(p).map(c => newestMtime(fs, c.getPath))
-        else Array.empty[Long]
-      (st.getModificationTime +: kids.toSeq).max
-    }
 
   /**
-   * The date-partitioned events layout, materialized idempotently on first
-   * use (and re-materialized if the source table is newer than the layout):
-   * events written `partitionBy("day")`, day = event date in UTC. Readers
-   * get a `day` partition column that Catalyst prunes at planning time —
-   * the scan for a one-week filter touches 7 of 30 directories.
+   * The date-partitioned events layout, [[memo]]ized: events written
+   * `partitionBy("day")`, day = event date in UTC. Readers get a `day`
+   * partition column that Catalyst prunes at planning time — the scan
+   * for a one-week filter touches 7 of 30 directories.
    */
   private[queries] def eventsByDay(s: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      val conf = s.sparkContext.hadoopConfiguration
-      // source and layout may live on DIFFERENT filesystems (local testdata
-      // vs a remote layoutRoot, or vice versa): each path must be resolved
-      // against its OWN FileSystem, or exists/getFileStatus throws Wrong FS
-      val srcFs = new Path(sfDir).getFileSystem(conf)
-      val path = new Path(layoutRoot(s, srcFs, sfDir), "events_by_day")
-      val layoutFs = path.getFileSystem(conf)
-      val marker = new Path(path, "_SUCCESS")
-      val srcMtime = newestMtime(srcFs, new Path(s"$sfDir/events.parquet"))
-      val fresh = layoutFs.exists(marker) &&
-        layoutFs.getFileStatus(marker).getModificationTime >= srcMtime
-      if (!fresh) {
-        Tables.events(s, sfDir)
-          .withColumn("day", to_date(col("ts_t")))
-          // cluster rows by the partition column before the partitioned
-          // write: without it every task writes a file into every day
-          // directory (tasks × days small files — the classic partitioned-
-          // write mistake at scale); with it each day gets its writers
-          .repartition(col("day"))
-          .write.mode("overwrite").partitionBy("day").parquet(path.toString)
-      }
-      s.read.parquet(path.toString)
-    }
+    s.read.parquet(memo(s, sfDir, "events-by-day") { out =>
+      Tables.events(s, sfDir)
+        .withColumn("day", to_date(col("ts_t")))
+        // cluster rows by the partition column before the partitioned
+        // write: without it every task writes a file into every day
+        // directory (tasks × days small files — the classic partitioned-
+        // write mistake at scale); with it each day gets its writers
+        .repartition(col("day"))
+        .write.mode("overwrite").partitionBy("day").parquet(out)
+    })
 
   /** Daily event volume and reach for the first week of the corpus, read
     * off the date-partitioned layout. The `day` filter is a partition
@@ -215,7 +163,7 @@ object LayoutQueries {
   )
 
   /**
-   * The z-ordered events layout (built idempotently like [[eventsByDay]]):
+   * The z-ordered events layout ([[memo]]ized like [[eventsByDay]]):
    * rows clustered by the Morton interleave of (user_id, epoch-day), so
    * parquet min/max stats are tight on BOTH dimensions per file and per
    * row group — the layout for a lake that must answer user-scoped AND
@@ -223,24 +171,13 @@ object LayoutQueries {
    * UTC epoch-day of the event); the z key itself is dropped at write.
    */
   private[queries] def eventsZOrdered(s: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      val conf = s.sparkContext.hadoopConfiguration
-      val srcFs = new Path(sfDir).getFileSystem(conf)
-      val path = new Path(layoutRoot(s, srcFs, sfDir), "events_zorder")
-      val layoutFs = path.getFileSystem(conf)
-      val marker = new Path(path, "_SUCCESS")
-      val srcMtime = newestMtime(srcFs, new Path(s"$sfDir/events.parquet"))
-      val fresh = layoutFs.exists(marker) &&
-        layoutFs.getFileStatus(marker).getModificationTime >= srcMtime
-      if (!fresh) {
-        val ev = Tables.events(s, sfDir)
-          .withColumn("day_n", expr("ts_us div 86400000000"))
-          .select("event_id", "user_id", "event_type", "day_n")
-        graft.sources.Layouts.writeZOrdered(
-          ev, col("user_id"), col("day_n"), path.toString, nFiles = 16)
-      }
-      s.read.parquet(path.toString)
-    }
+    s.read.parquet(memo(s, sfDir, "events-zorder") { out =>
+      val ev = Tables.events(s, sfDir)
+        .withColumn("day_n", expr("ts_us div 86400000000"))
+        .select("event_id", "user_id", "event_type", "day_n")
+      graft.sources.Layouts.writeZOrdered(
+        ev, col("user_id"), col("day_n"), out, nFiles = 16)
+    })
 
   /** 2-D box query over the z-ordered layout: one user-id band × one
     * calendar week. Both predicates reach the parquet scan as pushed
@@ -273,28 +210,16 @@ object LayoutQueries {
     * hour-of-day as the third clustering dimension: the lake shape for
     * a table answering user-scoped, date-scoped AND time-of-day-scoped
     * queries (sessionization windows, peak-hour analyses) off one
-    * copy. Same idempotent build protocol. */
+    * copy. */
   private[queries] def eventsZOrdered3(s: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      val conf = s.sparkContext.hadoopConfiguration
-      val srcFs = new Path(sfDir).getFileSystem(conf)
-      val path = new Path(layoutRoot(s, srcFs, sfDir), "events_zorder3")
-      val layoutFs = path.getFileSystem(conf)
-      val marker = new Path(path, "_SUCCESS")
-      val srcMtime = newestMtime(srcFs, new Path(s"$sfDir/events.parquet"))
-      val fresh = layoutFs.exists(marker) &&
-        layoutFs.getFileStatus(marker).getModificationTime >= srcMtime
-      if (!fresh) {
-        val ev = Tables.events(s, sfDir)
-          .withColumn("day_n", expr("ts_us div 86400000000"))
-          .withColumn("hour_n", expr("(ts_us div 3600000000) % 24"))
-          .select("event_id", "user_id", "event_type", "day_n", "hour_n")
-        graft.sources.Layouts.writeZOrdered3(
-          ev, col("user_id"), col("day_n"), col("hour_n"),
-          path.toString, nFiles = 16)
-      }
-      s.read.parquet(path.toString)
-    }
+    s.read.parquet(memo(s, sfDir, "events-zorder3") { out =>
+      val ev = Tables.events(s, sfDir)
+        .withColumn("day_n", expr("ts_us div 86400000000"))
+        .withColumn("hour_n", expr("(ts_us div 3600000000) % 24"))
+        .select("event_id", "user_id", "event_type", "day_n", "hour_n")
+      graft.sources.Layouts.writeZOrdered3(
+        ev, col("user_id"), col("day_n"), col("hour_n"), out, nFiles = 16)
+    })
 
   /** 3-D box query over the [[eventsZOrdered3]] layout: one user band ×
     * one calendar week × business hours. All three predicates reach the
@@ -642,40 +567,10 @@ object LayoutQueries {
   val qSnapshotRead = Q(
     "q_snapshot_read",
     (s, dir) => {
-      val out = derivedDir(s, dir, "inv-index-snap")
       val docs = Tables.read(s, dir, "documents")
-      snapBuildLock.synchronized {
-        val fs = new org.apache.hadoop.fs.Path(out)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(out, "_GRAFT_SNAP_V2")
-        if (!fs.exists(marker)) { // build at most once per process
-          // CRASH RECOVERY: no marker + leftover state means a prior
-          // build died mid-way (e.g. between writeIndexRows and the
-          // marker). Re-entering with mode=overwrite would delete v1's
-          // parquet files while the retained .v1 manifest still lists
-          // them, making the pinned compactIndexAt(version=1) below
-          // fail PERSISTENTLY. Wipe the derived dir so the retained v1
-          // manifest always matches freshly written files.
-          //
-          // Scope (ADVICE r19): the wipe fires only on DETECTED torn
-          // state — a non-empty dir without the marker — never on a
-          // merely-existing empty dir. Cross-process: [[derivedDir]]
-          // keys the path by THIS JVM's pid, so no other process can
-          // be mid-build inside this dir; the only torn state here is
-          // our own earlier attempt in this same process (or a
-          // recycled pid's garbage, which is exactly what the wipe is
-          // for). A deployment that points several processes at one
-          // SHARED layout dir must go through AtomicPublish commits,
-          // not this per-process scratch path.
-          val outPath = new org.apache.hadoop.fs.Path(out)
-          val torn = fs.exists(outPath) &&
-            fs.listStatus(outPath).nonEmpty
-          if (torn) fs.delete(outPath, true)
-          writeIndexRows(docs.filter(col("doc_id") % 2 === 0), out,
-                         "overwrite")
-          appendToIndex(docs.filter(col("doc_id") % 2 =!= 0), out)
-          fs.create(marker, true).close()
-        }
+      val out = memo(s, dir, "inv-index-snap") { out =>
+        writeIndexRows(docs.filter(col("doc_id") % 2 === 0), out, "overwrite")
+        appendToIndex(docs.filter(col("doc_id") % 2 =!= 0), out)
       }
       compactIndexAt(s, out, version = 1L)
     },
@@ -694,8 +589,6 @@ object LayoutQueries {
       |           x -> CAST(x AS VARCHAR)), ',') AS postings
       |FROM tf GROUP BY term""".stripMargin)
   )
-
-  private val snapBuildLock = new Object
 
   /**
    * Term probe THROUGH the stored inverted-index layout — the

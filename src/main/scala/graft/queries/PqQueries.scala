@@ -234,7 +234,7 @@ object PqQueries {
     * (seed stride, floor-mean, dense re-key, table order, lookup index
     * base) hash-mismatches here. */
   /** The (codebook, codes) pair for a testdata dir, trained and encoded
-    * AT MOST ONCE per process (fingerprinted buildOnce, pid-keyed dir —
+    * AT MOST ONCE per process ([[LayoutQueries.memo]] —
     * round 22): the flat-ADC and IVF-PQ gates each trained an IDENTICAL
     * codebook and encoded the IDENTICAL corpus per call. Deterministic
     * in (code, input); both gates' oracles replay training + encoding
@@ -242,20 +242,17 @@ object PqQueries {
     * [[SimQueries.gateQuantizer]]/dsirFeatureFrame discipline. At 100 TB
     * this memo IS the production artifact: the codes table is the stored
     * index, written once and probed by every search. */
-  private val pqMemoLock = new Object
   private def sharedPqArtifacts(s: SparkSession,
-                                dir: String): (DataFrame, DataFrame) =
-    pqMemoLock.synchronized {
-      val out = LayoutQueries.derivedDir(s, dir, "pq-codebook")
-      LayoutQueries.buildOnce(s, out, dir) {
-        val e = SimQueries.quantizedFrame(s, dir)
-        val cb = pqCodebook(e).localCheckpoint()
-        cb.write.mode("overwrite").parquet(s"$out/cb")
-        pqCodes(subspaces(e), cb).write.mode("overwrite")
-          .parquet(s"$out/codes")
-      }
-      (s.read.parquet(s"$out/cb"), s.read.parquet(s"$out/codes"))
+                                dir: String): (DataFrame, DataFrame) = {
+    val out = LayoutQueries.memo(s, dir, "pq-codebook") { out =>
+      val e = SimQueries.quantizedFrame(s, dir)
+      val cb = pqCodebook(e).localCheckpoint()
+      cb.write.mode("overwrite").parquet(s"$out/cb")
+      pqCodes(subspaces(e), cb).write.mode("overwrite")
+        .parquet(s"$out/codes")
     }
+    (s.read.parquet(s"$out/cb"), s.read.parquet(s"$out/codes"))
+  }
 
   val qPqSearch = Q(
     "q_pq_search",

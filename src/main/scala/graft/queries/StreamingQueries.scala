@@ -30,12 +30,6 @@ import graft.streaming.{StreamingDecontam, StreamingSessionize}
  */
 object StreamingQueries {
 
-  /** Per-process scratch dir for a gate's stream input files — the
-    * shared [[LayoutQueries.derivedDir]] discipline (honors
-    * `spark.graft.layoutRoot`, pid-keyed, never inside testdata). */
-  private def streamDir(s: SparkSession, dir: String, suffix: String): String =
-    LayoutQueries.derivedDir(s, dir, suffix)
-
   /** Micro-batch accounting for the last [[runToSink]] drain on THIS
     * thread: batch count and per-batch durations, kept thread-locally
     * (gate runs are synchronous, so a caller reads its own run — no
@@ -70,7 +64,7 @@ object StreamingQueries {
   }
 
   /** Drive a streaming frame into a parquet FILE sink under per-process
-    * scratch (`dir` keys the [[streamDir]] tree) with
+    * scratch (`dir` keys the [[LayoutQueries.derivedDir]] tree) with
     * `Trigger.AvailableNow`, wait for the drain, and return the result
     * as a distributed read of the sink files — no driver-resident copy
     * at any output volume (see the object scaladoc for the memory-sink
@@ -88,7 +82,8 @@ object StreamingQueries {
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val ndPrev = s.conf.getOption(ndKey)
     s.conf.set(ndKey, "true")
-    val base = streamDir(s, dir, s"sink-$prefix-${System.nanoTime()}")
+    val base =
+      LayoutQueries.derivedDir(s, dir, s"sink-$prefix-${System.nanoTime()}")
     val q = out.writeStream.format("parquet")
       .option("path", s"$base/out")
       .option("checkpointLocation", s"$base/ckpt")
@@ -128,7 +123,8 @@ object StreamingQueries {
   private[graft] def runForeachBatchToSink(
       s: SparkSession, dir: String, src: DataFrame, prefix: String)(
       perBatch: DataFrame => DataFrame): DataFrame = {
-    val base = streamDir(s, dir, s"sink-$prefix-${System.nanoTime()}")
+    val base =
+      LayoutQueries.derivedDir(s, dir, s"sink-$prefix-${System.nanoTime()}")
     val outSchema = perBatch(
       s.createDataFrame(s.sparkContext
                           .emptyRDD[org.apache.spark.sql.Row], src.schema))
@@ -542,15 +538,8 @@ object StreamingQueries {
     * centroids + cell-partitioned vectors, AtomicPublish-committed).
     * Kept separate from q_ivf_probe's dir: that gate REWRITES its
     * layout every run by contract. */
-  private val streamIvfLock = new Object
   private def sharedStreamIvfLayout(s: SparkSession, dir: String): String =
-    streamIvfLock.synchronized {
-      val out = LayoutQueries.derivedDir(s, dir, "ivf-stream")
-      LayoutQueries.buildOnce(s, out, dir) {
-        SimQueries.writeIvfLayout(s, dir, out)
-      }
-      out
-    }
+    LayoutQueries.memo(s, dir, "ivf-stream")(SimQueries.writeIvfLayout(s, dir, _))
 
   /**
    * ANN QUERY-AT-INGEST through the COMMITTED LAYOUT — the
@@ -605,26 +594,21 @@ object StreamingQueries {
     * skipping. Built once per process; the routing quantizer is the
     * shared per-process [[SimQueries.gateQuantizer]] — a deployment
     * persists it alongside via [[SimQueries.writeQuantizerLayout]]. */
-  private val membersLayoutLock = new Object
   private def sharedMembersLayout(s: SparkSession, dir: String): String =
-    membersLayoutLock.synchronized {
-      val out = LayoutQueries.derivedDir(s, dir, "hardneg-members")
-      LayoutQueries.buildOnce(s, out, dir) {
-        val e = SimQueries.quantizedFrame(s, dir)
-        SimQueries.assignCells(
-            e.select(col("vec_id"), col("label"), col("q")),
-            SimQueries.gateQuantizer(s, dir))
-          .select(col("vec_id"), col("label"), col("q"),
-                  col("c_id").as("cell"))
-          .withColumn("cbucket",
-                      pmod(xxhash64(col("cell")), lit(MemberBuckets)))
-          .repartition(col("cbucket"))
-          .sortWithinPartitions("cbucket", "cell", "vec_id")
-          .write.mode("overwrite").partitionBy("cbucket")
-          .parquet(s"$out/members")
-        graft.sources.AtomicPublish.commit(s, out)
-      }
-      out
+    LayoutQueries.memo(s, dir, "hardneg-members") { out =>
+      val e = SimQueries.quantizedFrame(s, dir)
+      SimQueries.assignCells(
+          e.select(col("vec_id"), col("label"), col("q")),
+          SimQueries.gateQuantizer(s, dir))
+        .select(col("vec_id"), col("label"), col("q"),
+                col("c_id").as("cell"))
+        .withColumn("cbucket",
+                    pmod(xxhash64(col("cell")), lit(MemberBuckets)))
+        .repartition(col("cbucket"))
+        .sortWithinPartitions("cbucket", "cell", "vec_id")
+        .write.mode("overwrite").partitionBy("cbucket")
+        .parquet(s"$out/members")
+      graft.sources.AtomicPublish.commit(s, out)
     }
 
   /** Per-micro-batch hard-negative mining against the committed member
@@ -736,7 +720,7 @@ object StreamingQueries {
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("user_id"), col("ts_us"),
                                             col("ts_t"))
-      val inDir = streamDir(s, dir, "stream-sess")
+      val inDir = LayoutQueries.derivedDir(s, dir, "stream-sess")
       ev.coalesce(1).write.mode("overwrite").parquet(inDir)
       val maxTs = stagedMaxTsUs(s, inDir, ev)
       val flushTs = maxTs + 1000L * Schemas.SessionGapUs
@@ -834,7 +818,7 @@ object StreamingQueries {
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("user_id"), col("ts_us"),
                                             col("ts_t"))
-      val inDir = streamDir(s, dir, "stream-sess-state")
+      val inDir = LayoutQueries.derivedDir(s, dir, "stream-sess-state")
       ev.coalesce(1).write.mode("overwrite").parquet(inDir)
       val maxTs = stagedMaxTsUs(s, inDir, ev)
       val flushTs = maxTs + 1000L * Schemas.SessionGapUs
@@ -920,7 +904,7 @@ object StreamingQueries {
     "q_stream_feed",
     (s, dir) => {
       import s.implicits._
-      val feedDir = streamDir(s, dir, "stream-feed")
+      val feedDir = LayoutQueries.derivedDir(s, dir, "stream-feed")
       graft.ingest.FeedSynth.synthLines(
           distributeBy(Tables.events(s, dir), col("event_id")))
         .coalesce(1).write.mode("overwrite").text(feedDir)
@@ -962,7 +946,7 @@ object StreamingQueries {
   val qStreamMedia = Q(
     "q_stream_media",
     (s, dir) => {
-      val inDir = streamDir(s, dir, "stream-media")
+      val inDir = LayoutQueries.derivedDir(s, dir, "stream-media")
       graft.multimodal.MediaSynth.syntheticMedia(
           s, Tables.read(s, dir, "documents").select("doc_id"))
         .toDF().coalesce(1).write.mode("overwrite").parquet(inDir)
@@ -987,7 +971,7 @@ object StreamingQueries {
   val qStreamPhash = Q(
     "q_stream_phash",
     (s, dir) => {
-      val inDir = streamDir(s, dir, "stream-phash")
+      val inDir = LayoutQueries.derivedDir(s, dir, "stream-phash")
       graft.multimodal.MediaSynth.syntheticCards(
           s, Tables.read(s, dir, "documents").select("doc_id"))
         .toDF().coalesce(1).write.mode("overwrite").parquet(inDir)
@@ -1009,7 +993,7 @@ object StreamingQueries {
   val qStreamAudioFp = Q(
     "q_stream_audio_fp",
     (s, dir) => {
-      val inDir = streamDir(s, dir, "stream-audiofp")
+      val inDir = LayoutQueries.derivedDir(s, dir, "stream-audiofp")
       graft.multimodal.MediaSynth.syntheticSteps(
           s, Tables.read(s, dir, "documents").select("doc_id"))
         .toDF().coalesce(1).write.mode("overwrite").parquet(inDir)
@@ -1050,7 +1034,8 @@ object StreamingQueries {
       // so a torn compactor can't publish a partial index — and the
       // gate's answer is read back THROUGH the committed snapshot
       // (same final merge as before; oracle unchanged).
-      val layout = streamDir(s, dir, s"idxlayout-${System.nanoTime()}")
+      val layout =
+        LayoutQueries.derivedDir(s, dir, s"idxlayout-${System.nanoTime()}")
       LayoutQueries.compactStreamSink(sunk, layout)
       LayoutQueries.compactIndex(s, layout)
     },
@@ -1099,7 +1084,7 @@ object StreamingQueries {
     import s.implicits._
     val ev = Tables.events(s, dir).select(col("event_type"), col("ts_us"),
                                           col("ts_t"))
-    val inDir = streamDir(s, dir, suffix)
+    val inDir = LayoutQueries.derivedDir(s, dir, suffix)
     ev.coalesce(1).write.mode("overwrite").parquet(inDir)
     val maxTs = stagedMaxTsUs(s, inDir, ev)
     Seq(("zz", maxTs + 1000L * Schemas.SessionGapUs)).toDF("event_type", "ts_us")
@@ -1361,11 +1346,7 @@ object StreamingQueries {
     "q_stream_cluster_assign",
     (s, dir) => {
       import graft.vector.VectorOps
-      // the shared build-half layout (round-17 VERDICT #4): this face
-      // reads only its CENTROIDS (the router) — member appends by the
-      // batch append gate never touch them, so sharing is safe in
-      // either execution order
-      val out = SimQueries.sharedEvenClusterLayout(s, dir)
+      val out = SimQueries.evenClusterLayout(s, dir)
       val (seeds, ccell) = SimQueries.clusterRouter(s, out)
       val flat = SimQueries.centsFlat(seeds).localCheckpoint()
       val cellm = ccell.groupBy("rcell")
@@ -1696,7 +1677,7 @@ object StreamingQueries {
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_id"),
                                             col("ts_us"), col("event_type"),
                                             col("ts_t"))
-      val inDir = streamDir(s, dir, "stream-runs")
+      val inDir = LayoutQueries.derivedDir(s, dir, "stream-runs")
       ev.coalesce(1).write.mode("overwrite").parquet(inDir)
       val maxTs = stagedMaxTsUs(s, inDir, ev)
       Seq((-1L, -1L, maxTs + 1000L * Schemas.SessionGapUs, "zz"))
@@ -1782,7 +1763,7 @@ object StreamingQueries {
   val qStreamQuarantine = Q(
     "q_stream_quarantine",
     (s, dir) => {
-      val feedDir = streamDir(s, dir, "stream-quarantine")
+      val feedDir = LayoutQueries.derivedDir(s, dir, "stream-quarantine")
       graft.ingest.FeedSynth.synthLines(
           distributeBy(Tables.events(s, dir), col("event_id")))
         .coalesce(1).write.mode("overwrite").text(feedDir)

@@ -1900,16 +1900,6 @@ object WebQueries {
       }
     }
 
-  /** Build the `.warc.gz` container FILES for a testdata dir, once per
-    * process ([[LayoutQueries.derivedDir]] scratch, `_SUCCESS`-marked):
-    * records hash to [[WarcFileCount]] shards by doc_id, each file is
-    * the concatenation of per-RECORD gzip members in (doc_id, rec_idx)
-    * order — the real crawl container layout ([[graft.expr.WarcBinOps]]
-    * scaladoc). The write is a distributed `foreachPartition` (one
-    * shard's rows per task — rows were repartitioned BY the shard key),
-    * each task streaming members straight to its file via the Hadoop
-    * FS API: no driver-side collect at any corpus size. */
-  private val warcBuildLock = new Object
   /** The driver's hadoop configuration flattened to serializable
     * key-value pairs for shipping into executor-side closures
     * (`foreachPartition` file writers). Spark's own
@@ -1932,56 +1922,58 @@ object WebQueries {
     c
   }
 
+  /** Build the `.warc.gz` container FILES for a testdata dir, once per
+    * state of the corpus ([[LayoutQueries.memo]]):
+    * records hash to [[WarcFileCount]] shards by doc_id, each file is
+    * the concatenation of per-RECORD gzip members in (doc_id, rec_idx)
+    * order — the real crawl container layout ([[graft.expr.WarcBinOps]]
+    * scaladoc). The write is a distributed `foreachPartition` (one
+    * shard's rows per task — rows were repartitioned BY the shard key),
+    * each task streaming members straight to its file via the Hadoop
+    * FS API: no driver-side collect at any corpus size. */
   private[graft] def warcFilesDir(s: SparkSession, sfDir: String): String =
-    warcBuildLock.synchronized {
-      val dir = LayoutQueries.derivedDir(s, sfDir, "warcfiles")
+    LayoutQueries.memo(s, sfDir, "warcfiles") { dir =>
       val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(root, "_SUCCESS")
-      if (!fs.exists(marker)) {
-        fs.mkdirs(root)
-        val recs = Tables.read(s, sfDir, "documents")
-          .filter(col("text").isNotNull)
-          .select(col("doc_id"),
-                  explode(warcFileRecordsCol(col("doc_id"), col("text")))
-                    .as("r"))
-          .filter(col("r.rec").isNotNull)
-          .select(pmod(col("doc_id"), lit(WarcFileCount)).cast("int").as("fk"),
-                  col("doc_id"), col("r.rec_idx").as("rec_idx"),
-                  encode(col("r.rec"), "UTF-8").as("rec"))
-        val dirStr = dir
-        val confKv = WebQueries.hadoopConfKv(s)
-        recs.repartition(WarcFileCount, col("fk"))
-          .sortWithinPartitions("fk", "doc_id", "rec_idx")
-          .select(col("fk"), col("rec"))
-          .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-            if (it.hasNext) {
-              // executor-side FS handle rebuilt from the DRIVER's hadoop
-              // conf (serialized as key-value pairs) — a default
-              // Configuration() here would drop session-level filesystem
-              // settings (e.g. s3a credentials) at the task level
-              val tfs = new org.apache.hadoop.fs.Path(dirStr)
-                .getFileSystem(WebQueries.hadoopConfOf(confKv))
-              var cur = -1
-              var out: org.apache.hadoop.fs.FSDataOutputStream = null
-              try {
-                it.foreach { row =>
-                  val fk = row.getInt(0)
-                  if (fk != cur) { // rows are shard-sorted: one open per shard
-                    if (out != null) out.close()
-                    out = tfs.create(new org.apache.hadoop.fs.Path(
-                      dirStr, f"part-$fk%05d.warc.gz"), true)
-                    cur = fk
-                  }
-                  out.write(graft.expr.WarcBinOps.gzipMember(
-                    row.getAs[Array[Byte]](1)))
+      root.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(root)
+      val recs = Tables.read(s, sfDir, "documents")
+        .filter(col("text").isNotNull)
+        .select(col("doc_id"),
+                explode(warcFileRecordsCol(col("doc_id"), col("text")))
+                  .as("r"))
+        .filter(col("r.rec").isNotNull)
+        .select(pmod(col("doc_id"), lit(WarcFileCount)).cast("int").as("fk"),
+                col("doc_id"), col("r.rec_idx").as("rec_idx"),
+                encode(col("r.rec"), "UTF-8").as("rec"))
+      val dirStr = dir
+      val confKv = WebQueries.hadoopConfKv(s)
+      recs.repartition(WarcFileCount, col("fk"))
+        .sortWithinPartitions("fk", "doc_id", "rec_idx")
+        .select(col("fk"), col("rec"))
+        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+          if (it.hasNext) {
+            // executor-side FS handle rebuilt from the DRIVER's hadoop
+            // conf (serialized as key-value pairs) — a default
+            // Configuration() here would drop session-level filesystem
+            // settings (e.g. s3a credentials) at the task level
+            val tfs = new org.apache.hadoop.fs.Path(dirStr)
+              .getFileSystem(WebQueries.hadoopConfOf(confKv))
+            var cur = -1
+            var out: org.apache.hadoop.fs.FSDataOutputStream = null
+            try {
+              it.foreach { row =>
+                val fk = row.getInt(0)
+                if (fk != cur) { // rows are shard-sorted: one open per shard
+                  if (out != null) out.close()
+                  out = tfs.create(new org.apache.hadoop.fs.Path(
+                    dirStr, f"part-$fk%05d.warc.gz"), true)
+                  cur = fk
                 }
-              } finally if (out != null) out.close()
-            }
+                out.write(graft.expr.WarcBinOps.gzipMember(
+                  row.getAs[Array[Byte]](1)))
+              }
+            } finally if (out != null) out.close()
           }
-        fs.create(marker, true).close()
-      }
-      dir
+        }
     }
 
   /** [[graft.expr.WarcBinRecords]] as a Column. */
@@ -2171,12 +2163,10 @@ object WebQueries {
       .toDF()
   }
 
-  private val warcIdxLock = new Object
-
   /**
    * Octet-exact WARC ingestion THROUGH the offset index, behind the
    * driver gate: build the record-offset index over the same landing
-   * dir [[qWarcFiles]] reads (marker-memoized per process), then
+   * dir [[qWarcFiles]] reads ([[LayoutQueries.memo]]ized), then
    * extract every record from byte-range slices with record-range
    * parallelism — [[warcFilesExtract]] runs verbatim on the slices, so
    * the output rows, the quarantine verdicts, and the ORACLE are
@@ -2190,17 +2180,14 @@ object WebQueries {
     "q_warc_files_probe",
     (s, dir) => {
       val wdir = warcFilesDir(s, dir)
-      val out = LayoutQueries.derivedDir(s, dir, "warc-offsets")
-      warcIdxLock.synchronized {
-        LayoutQueries.buildOnce(s, out, wdir) {
-          // greppable build/probe split for the soak attribution: the
-          // index build is the pay-once leg (≈ one direct parse); the
-          // probe leg is what repeats per pass
-          val t0 = System.nanoTime()
-          writeWarcOffsetIndex(s, wdir, out)
-          System.err.println(
-            f"[graft-warc] offset-index build_s=${(System.nanoTime() - t0) / 1e9}%.1f")
-        }
+      val out = LayoutQueries.memo(s, wdir, "warc-offsets") { out =>
+        // greppable build/probe split for the soak attribution: the
+        // index build is the pay-once leg (≈ one direct parse); the
+        // probe leg is what repeats per pass
+        val t0 = System.nanoTime()
+        writeWarcOffsetIndex(s, wdir, out)
+        System.err.println(
+          f"[graft-warc] offset-index build_s=${(System.nanoTime() - t0) / 1e9}%.1f")
       }
       warcFilesExtract(warcSlicesViaIndex(
         s, out, s.sessionState.conf.numShufflePartitions))

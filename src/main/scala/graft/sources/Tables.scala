@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
@@ -96,9 +97,18 @@ object Tables {
 
   /** [[rawFeed]]'s reader contract with a caller-supplied schema (a second
     * field catches lines the sentinel delimiter would split; see
-    * Exports.transcodeFeed). */
+    * Exports.transcodeFeed). A glob is expanded here, so Spark reads the
+    * matched files: handed the literal glob, it probes that path for a
+    * streaming sink's metadata and logs a WARN with a stack trace on
+    * every read. When nothing matches, the glob goes through unchanged
+    * and Spark raises its path-not-found error. */
   private[graft] def rawFeedWithSchema(spark: SparkSession, path: String,
                                        encoding: String,
-                                       schema: String): DataFrame =
-    spark.read.options(rawFeedOptions(encoding)).schema(schema).csv(path)
+                                       schema: String): DataFrame = {
+    val p = new Path(path)
+    val matched = Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+                          .globStatus(p)).toSeq.flatten.map(_.getPath.toString)
+    spark.read.options(rawFeedOptions(encoding)).schema(schema)
+      .csv((if (matched.isEmpty) Seq(path) else matched): _*)
+  }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
+
 
 /** Dev profiling harness (test scope, not shipped): measures recall@K of
   * the ANN variants against the brute-force gate on a SOAK corpus. The
@@ -14,15 +15,7 @@ import org.apache.spark.sql.SparkSession
 object AnnRecallProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft-soak")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("ann-recall-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("spark.app.name" -> "ann-recall-profile")
     s.sparkContext.setLogLevel("ERROR")
 
     def pairs(q: String): Set[(Long, Long)] =

@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Sessions
 
 /** Dev profiling harness (test scope, not shipped): times the CDC span
   * family in WRITE mode — full-column materialization, the shape Verify
@@ -14,10 +16,7 @@ import org.apache.spark.sql.functions._
 object CdcProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = Sessions.local()
     s.sparkContext.setLogLevel("ERROR")
     def t(tag: String)(df: => DataFrame): Unit = {
       val t0 = System.nanoTime()

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Sessions
 
 /** Dev profiling harness (test scope, not shipped): exercises
   * [[SimQueries.appendToClusters]]'s ROUTER REGIME — a layout with more
@@ -15,10 +16,7 @@ import org.apache.spark.sql.functions._
 object ClusterAppendProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft-soak")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = Sessions.local()
     s.sparkContext.setLogLevel("ERROR")
     val out = java.nio.file.Files.createTempDirectory("graft-cl-app-soak").toString
     val e = SimQueries.quantizedFrame(s, dir)

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
+
 
 /** Dev profiling harness (test scope, not shipped): quantifies the
   * cluster-layout payoff at the 200 k-vector soak — build ONCE, then
@@ -12,14 +13,7 @@ import org.apache.spark.sql.SparkSession
 object ClusterLayoutProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft-soak-200k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("cluster-layout-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("spark.app.name" -> "cluster-layout-profile")
     s.sparkContext.setLogLevel("ERROR")
 
     def t[A](name: String)(body: => A): A = {

@@ -1,7 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Sessions
 import graft.sources.Tables
 
 /** Dev profiling harness (test scope, not shipped): times the exact
@@ -12,15 +11,7 @@ import graft.sources.Tables
 object MixtureProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft-soak")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("mixture-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("spark.app.name" -> "mixture-profile")
     s.sparkContext.setLogLevel("ERROR")
     val weights = Seq("en" -> 40, "de" -> 20, "fr" -> 20, "es" -> 20)
     val docs = Tables.read(s, dir, "documents")

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.sources.Tables
 
 /** Dev profiling harness (test scope, not shipped): times the IVF-PQ
@@ -13,14 +13,7 @@ import graft.sources.Tables
 object PqProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft-soak")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("pq-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val s = Sessions.local("spark.app.name" -> "pq-profile")
     s.sparkContext.setLogLevel("ERROR")
 
     def t[A](label: String)(f: => A): A = {

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
+
 
 /** Dev profiling harness (test scope, not shipped): times semanticDedup
   * at one or more cell caps on a documents+embeddings dir, so the
@@ -16,15 +17,7 @@ object SemDedupProfile {
       case "auto" => DedupQueries.DeriveCellCap
       case v => v.toLong
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("semdedup-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("spark.app.name" -> "semdedup-profile")
     s.sparkContext.setLogLevel("ERROR")
 
     val n = SimQueries.quantizedFrame(s, dir).count()

@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Sessions
 
 /** Dev profiling harness (test scope, not shipped): measures AQE's
   * runtime skew-join split against manual salting on a power-law join,
@@ -13,14 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object SkewJoinProfile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("skew-join-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("spark.app.name" -> "skew-join-profile")
     s.sparkContext.setLogLevel("ERROR")
 
     val nFact = args.headOption.map(_.toLong).getOrElse(20000000L)

@@ -4,6 +4,10 @@ import java.io.{FileOutputStream, OutputStreamWriter}
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
@@ -78,5 +82,27 @@ class TablesSpec extends SparkSpec {
     writeGz(s"$dir/part-1.tsv.gz", "UTF-8", Seq("2000\tu\tv\t\t\t2\tp\tsrv\ti\ts"))
     val n = Tables.rawFeed(spark, s"$dir/part-*.tsv.gz").count()
     assert(n === 2)
+  }
+
+  test("rawFeed on a glob reads every match without a FileStreamSink metadata probe") {
+    val dir = Files.createTempDirectory("graft-glob-probe").toString
+    writeGz(s"$dir/part-0.tsv.gz", "UTF-8", Seq("a\t1"))
+    writeGz(s"$dir/part-1.tsv.gz", "UTF-8", Seq("b\t2"))
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(
+        "graft-glob-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
+      .asInstanceOf[Logger]
+    logger.addAppender(appender)
+    val got =
+      try Tables.rawFeed(spark, s"$dir/part-*.tsv.gz").as[String].collect().sorted
+      finally { logger.removeAppender(appender); appender.stop() }
+    assert(got === Array("a\t1", "b\t2"))
+    assert(logged.isEmpty, s"FileStreamSink logged: ${logged.peek()}")
   }
 }

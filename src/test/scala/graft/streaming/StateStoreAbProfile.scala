@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Dev profiling harness (test scope, not shipped): A/Bs the state-store
   * provider (default HDFSBacked vs RocksDB) on the heavy-STATE streaming
@@ -23,15 +23,7 @@ object StateStoreAbProfile {
     // default1 vs default2 spread instead of polluting the comparison
     val providers = args.lift(2).getOrElse("default,rocksdb,default")
       .split(",")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("statestore-ab")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("spark.app.name" -> "statestore-ab")
     s.sparkContext.setLogLevel("ERROR")
 
     for (p <- providers; g <- gates) {

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Sessions
 
 /** Dev soak harness (test scope, not shipped): state-growth measurement
   * for the raw-hold run-length protocol under a PACED replay.
@@ -23,14 +24,7 @@ object StatefulRunsSoak {
     val nRows = args.headOption.map(_.toLong).getOrElse(5000000L)
     val nUsers = args.lift(1).map(_.toLong).getOrElse(50000L)
     val nFiles = args.lift(2).map(_.toInt).getOrElse(40)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("stateful-runs-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("spark.app.name" -> "stateful-runs-soak")
     import s.implicits._
     s.sparkContext.setLogLevel("ERROR")
 
