@@ -552,12 +552,9 @@ object CurationQueries {
    * makes the draw deterministic under any partitioning, re-run, or
    * cluster size, and a fresh sample is one seed change away.
    *
-   * Scale shape: the per-group rank is the [[graft.operators.GlobalRank]]
-   * range-exchange decomposition over (lang, h, doc_id) — lang-major, so
-   * per-group position = global position − the group's broadcast prefix
-   * offset. A `PARTITION BY lang` window would put each language in ONE
-   * task (5 tasks for 100 TB); this shape scales with the cluster, and
-   * the group-count/offset frames are tiny broadcast aggregates.
+   * Scale shape: the per-group rank is [[hashPrefixDraw]]'s md5-prefix
+   * bucket rank, never a one-task `PARTITION BY lang` window; the
+   * group-count/offset frames are tiny broadcast aggregates.
    */
   lazy val qMixtureSample = Q(
     "q_mixture_sample",
@@ -607,27 +604,46 @@ object CurationQueries {
               md5(concat(lit("mix:"), coalesce(col("text"), lit(""))))
                 .as("h"))
       .join(wdf, Seq(groupCol))
-    // group counts anchored on the WEIGHT list, not the corpus: a target
-    // group absent from the corpus must drive T to 0 (exact mixture
-    // infeasible -> empty draw), not silently fall out of the minimum
-    val counts = wdf
-      .join(d.groupBy(groupCol).agg(count(lit(1)).as("n")),
-            Seq(groupCol), "left")
-      .withColumn("n", coalesce(col("n"), lit(0L)))
-    val t = counts.agg(min(expr("n * 100 div wt")).as("t"))
-    // |groups|-row frame: keep_n + group-major prefix offsets, broadcast
-    val wGrp = Window.orderBy(groupCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val keep = counts.crossJoin(broadcast(t))
-      .withColumn("keep_n", expr("t * wt div 100"))
-      .withColumn("off", coalesce(sum("n").over(wGrp), lit(0L)))
-      .select(groupCol, "keep_n", "off")
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    graft.operators.GlobalRank
-      .withGlobalRank(d.select("doc_id", groupCol, "h"),
-                      Seq(col(groupCol), col("h"), col("doc_id")), parts, "grnk")
-      .join(broadcast(keep), Seq(groupCol))
-      .withColumn("rn", col("grnk") - col("off"))
+    hashPrefixDraw(d.select("doc_id", groupCol, "h"), groupCol) { buckets =>
+      // group counts anchored on the WEIGHT list, not the corpus: a target
+      // group absent from the corpus (one null-bucket row, n = 0) must
+      // drive T to 0 (exact mixture infeasible -> empty draw), not
+      // silently fall out of the minimum
+      weights.toDF(groupCol, "wt").join(buckets, Seq(groupCol), "left")
+        .withColumn("n", coalesce(col("n"), lit(0L)))
+        .withColumn("t", min(expr("n * 100 div wt")).over(Window.partitionBy()))
+        .withColumn("keep_n", expr("t * wt div 100"))
+    }
+  }
+
+  /** The exact per-group draw both mixtures end in: rank each group's
+    * rows of `d` (`doc_id`, `groupCol`, the md5 hex `h`) by (h, doc_id)
+    * and keep those ranked ≤ `keep_n`; returns `(doc_id, <group>, rn)`.
+    * One lazy plan: building it runs no job, so the TVFs over it resolve
+    * and EXPLAIN without one. A `PARTITION BY group` window would put
+    * each group in ONE task (5 tasks for 100 TB); instead the first two
+    * hex digits of `h` split each group into ≤ 256 buckets whose order
+    * is `h`'s order, and rank = `row_number` within (group, bucket) +
+    * the group's row count in earlier buckets (`off`). The one aggregate
+    * over `d` is the bucket count: `keepOf` gets its rows
+    * `(<group>, b, nb, n, off)`, n the group's count, and adds `keep_n`
+    * as ONE chain over them (a second consumer would re-run the
+    * aggregate over `d`), broadcast back. Its group-level arithmetic
+    * may use partition-less windows: they run over ≤ 256·|groups|
+    * rows, and the first bucket of each group is the one with off = 0. */
+  private def hashPrefixDraw(d: DataFrame, groupCol: String)
+                            (keepOf: DataFrame => DataFrame): DataFrame = {
+    val bucketed = d.withColumn("b", substring(col("h"), 1, 2))
+    val grp = Window.partitionBy(groupCol)
+    val keep = keepOf(bucketed.groupBy(groupCol, "b")
+        .agg(count(lit(1)).as("nb"))
+        .withColumn("n", sum("nb").over(grp))
+        .withColumn("off", coalesce(sum("nb").over(grp.orderBy("b")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))))
+      .select(groupCol, "b", "off", "keep_n")
+    bucketed.join(broadcast(keep), Seq(groupCol, "b"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(groupCol, "b").orderBy("h", "doc_id")) + col("off"))
       .filter(col("rn") <= col("keep_n"))
       .select("doc_id", groupCol, "rn")
   }
@@ -1497,9 +1513,8 @@ object CurationQueries {
    * IEEE tree on both faces (sqrt is correctly-rounded); everything
    * after is exact integers: feasible total T = min_g ⌊n_g·W/w_g⌋ — the
    * SMALLEST group binds and is kept in full — keep_g = ⌊T·w_g/W⌋,
-   * drawn as the md5-rank prefix through the same GlobalRank
-   * range-exchange decomposition as the exact mixture (never a
-   * one-task per-group window).
+   * drawn as the md5-rank prefix through md5-prefix buckets (never a
+   * one-task per-group window; see [[temperatureMixture]]).
    */
   lazy val qTemperatureMixture = Q(
     "q_temperature_mixture",
@@ -1530,49 +1545,23 @@ object CurationQueries {
   )
 
   /** [[qTemperatureMixture]]'s body over an ARBITRARY
-    * `(doc_id, <group>, text)` frame. Same scale shape as
-    * [[mixtureSample]]: the group-count/offset frames are tiny
-    * broadcast aggregates, the per-group rank is the group-major
-    * GlobalRank minus broadcast prefix offsets. (Integer-range note:
-    * n·W and T·w stay under 2⁶³ while n_g·Σ⌊√n_g⌋ does — ~10¹² docs
-    * across ~10³ groups; past that, lift to decimal(38).) */
+    * `(doc_id, <group>, text)` frame, drawn through [[hashPrefixDraw]].
+    * (Integer-range note: n·W and T·w stay under 2⁶³ while
+    * n_g·Σ⌊√n_g⌋ does — ~10¹² docs across ~10³ groups; past that, lift
+    * to decimal(38).) */
   private[graft] def temperatureMixture(d0: DataFrame,
                                         groupCol: String): DataFrame = {
-    val s = d0.sparkSession
     val d = d0.select(col("doc_id"), col(groupCol),
                       md5(concat(lit("tmix:"), coalesce(col("text"), lit(""))))
                         .as("h"))
-    // `counts` has THREE consumers below (tot, t, keep), each of which
-    // would re-run the corpus-scale group-count over d (plans/r22). It is
-    // |groups|-sized, so the pin is the default-level localCheckpoint.
-    val counts = d.groupBy(groupCol).agg(count(lit(1)).as("n"))
-      .withColumn("wt", expr("cast(floor(sqrt(cast(n as double))) as bigint)"))
-      .localCheckpoint()
-    val tot = counts.agg(sum("wt").as("tot"))
-    val t = counts.crossJoin(broadcast(tot))
-      .agg(min(expr("n * tot div wt")).as("t"))
-    // DELIBERATELY partition-less (the one-task window class GlobalRank
-    // exists to avoid) because it runs over `counts` — one row per GROUP,
-    // |languages|-sized by this operator's contract (temperature mixing
-    // is defined over a low-cardinality stratum, ~10²–10³ groups — the
-    // same bound as GlobalRank's own offsets frame). A caller grouping
-    // by a HIGH-cardinality key would inherit a one-task sort here:
-    // route such a key through GlobalRank offsets instead (round-20
-    // VERDICT item 4 — the bound is now stated, not implicit).
-    val wGrp = Window.orderBy(groupCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val keep = counts.crossJoin(broadcast(tot)).crossJoin(broadcast(t))
-      .withColumn("keep_n", expr("t * wt div tot"))
-      .withColumn("off", coalesce(sum("n").over(wGrp), lit(0L)))
-      .select(groupCol, "keep_n", "off")
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    graft.operators.GlobalRank
-      .withGlobalRank(d, Seq(col(groupCol), col("h"), col("doc_id")),
-                      parts, "grnk")
-      .join(broadcast(keep), Seq(groupCol))
-      .withColumn("rn", col("grnk") - col("off"))
-      .filter(col("rn") <= col("keep_n"))
-      .select("doc_id", groupCol, "rn")
+    hashPrefixDraw(d, groupCol) { buckets =>
+      val all = Window.partitionBy()
+      buckets
+        .withColumn("wt", expr("cast(floor(sqrt(cast(n as double))) as bigint)"))
+        .withColumn("tot", sum(when(col("off") === 0, col("wt"))).over(all))
+        .withColumn("t", min(expr("n * tot div wt")).over(all))
+        .withColumn("keep_n", expr("t * wt div tot"))
+    }
   }
 
   /**
@@ -1656,7 +1645,7 @@ object CurationQueries {
     val blocked = WebQueries.safetyFrame(survivors.select("doc_id", "text"))
       .filter(col("blocked") === 1).select("doc_id")
     // The GATED frame feeds temperatureMixture, which consumes it twice
-    // (group counts + the GlobalRank pin), and each evaluation would re-run
+    // (bucket counts + the ranked rows), and each evaluation would re-run
     // both anti-join sides (plans/r22): ≥ 2 consumers → checkpoint,
     // projected to the three columns the mixture reads.
     val gated = checkpointCompact(survivors

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -10,34 +10,35 @@ import graft.streaming.{StreamingDecontam, StreamingSessionize}
 
 /**
  * Oracle-gated STREAMING queries: each entry drives a Structured
- * Streaming face of the library through a real `readStream` →
- * `writeStream` run (`Trigger.AvailableNow`, so the run drains the
- * source and terminates deterministically) and returns the drained
- * result for the driver's DuckDB compare. The streaming modules
- * themselves (graft.streaming.*) are spec-proven batch ≡ stream; these
- * gates add the driver's independent-oracle check on top, closing the
- * loop from "equivalent to the batch query" to "equal to the oracle's
- * answer".
+ * Streaming face of the library through a real stream run and returns
+ * the drained result for the driver's DuckDB compare. The streaming
+ * modules themselves (graft.streaming.*) are spec-proven batch ≡ stream;
+ * these gates add the driver's independent-oracle check on top. Every
+ * gate runs through one harness:
  *
- * Gates drain to a parquet FILE sink in per-process scratch — the same
- * sink family a deployment runs (append-only streams to Kafka/parquet),
- * and the result reads back as a distributed scan. The r10 gates used
- * the memory sink, which COLLECTS every output row to the driver: fine
- * for visit tables, but the decontam hit log is one row per band
- * collision — 2.7 M rows at the 50 k soak — and the driver-side copy
- * (plus its localCheckpoint) turned that gate into a 30–125 s GC-bound
- * drain. The file sink bounds driver memory at any output volume.
+ *  - [[drain]], the one sink protocol: a `Trigger.AvailableNow` run (it
+ *    drains the source and terminates) into a `foreachBatch` sink that
+ *    overwrites `out/batch-<batchId>`, so a batch re-run after a
+ *    retry or a restart replaces its own output. The sink is named after
+ *    the gate. A gate that must see each micro-batch as a batch frame
+ *    (the layout probes) passes a per-batch transform; the default is
+ *    identity. The result reads back from the files with the stated
+ *    schema, so driver memory stays bounded at any output volume and a
+ *    zero-row drain is a typed empty frame.
+ *  - [[Gate.stageDir]] and [[Gate.replay]], the one replay stager: a frame
+ *    written under the gate's derived dir as one file, optionally
+ *    followed by one watermark-flush sentinel row at
+ *    [[FlushSentinelS]], and read back as a file stream.
+ *  - [[faces]], the stateless faces as a table: a batch gate's own
+ *    frame function applied per micro-batch and gated on that batch
+ *    gate's oracle.
  */
 object StreamingQueries {
 
-  /** Micro-batch accounting for the last [[runToSink]] drain on THIS
-    * thread: batch count and per-batch durations, kept thread-locally
-    * (gate runs are synchronous, so a caller reads its own run — no
-    * cross-thread interleaving) AND echoed to stderr with a greppable
-    * tag — the attribution evidence VERDICT r10 asked for on the
-    * `q_stream_decontam` bench outlier (a 6.5× same-round disagreement
-    * is only explainable if every measurement pins how many batches it
-    * actually ran). */
+  /** Micro-batch accounting for the last [[drain]] on THIS thread (gate
+    * runs are synchronous, so a caller reads its own run), also echoed
+    * to stderr with a greppable tag: every measurement pins how many
+    * batches it actually ran. */
   private[graft] object StreamObservability {
     private val lastTl = new ThreadLocal[String] { override def initialValue = "" }
     def last: String = lastTl.get
@@ -46,16 +47,12 @@ object StreamingQueries {
       System.err.println(s"[graft-stream] $msg")
     }
 
-    /** Wall seconds spent INSIDE stream drains (query start →
-      * AvailableNow termination) since the last [[resetDrain]], this
-      * thread — accumulated across multiple [[runToSink]] calls in one
-      * gate. The bench reads it to split a gate's time into
-      * `drain_s` (micro-batch execution — the per-round perf signal)
-      * and `build_s` = total − drain (frozen-index construction +
-      * input staging + sink read-back — amortizable deployment cost):
-      * for the index-backed gates the build half dominates and was
-      * masking drain regressions inside the headline number (round-14
-      * VERDICT item 5). */
+    /** Wall seconds spent INSIDE drains (query start → AvailableNow
+      * termination) since the last [[resetDrain]], this thread. The
+      * bench splits a gate's time into `drain_s` (micro-batch execution)
+      * and `build_s` = total − drain (index construction, input staging,
+      * sink read-back), so an ingest regression is not masked by index
+      * build noise. */
     private val drainNsTl = new ThreadLocal[Long] { override def initialValue = 0L }
     private[graft] def resetDrain(): Unit = drainNsTl.set(0L)
     private[graft] def drainSecs: Double = drainNsTl.get / 1e9
@@ -63,108 +60,112 @@ object StreamingQueries {
       drainNsTl.set(drainNsTl.get + ns)
   }
 
-  /** Drive a streaming frame into a parquet FILE sink under per-process
-    * scratch (`dir` keys the [[LayoutQueries.derivedDir]] tree) with
-    * `Trigger.AvailableNow`, wait for the drain, and return the result
-    * as a distributed read of the sink files — no driver-resident copy
-    * at any output volume (see the object scaladoc for the memory-sink
-    * history). The read states the schema explicitly so a gate whose
-    * drain emits zero rows still returns an empty, correctly-typed
-    * frame instead of failing schema inference. Also pins
-    * `noDataMicroBatches.enabled`: the watermark-flush gates rely on the
-    * post-data batch that emits watermark-gated state (session windows,
-    * event-time timeouts), and that batch only exists when no-data
-    * micro-batches are allowed. The pin is saved/restored around the
-    * run — a session-global conf flip must not leak past the gate into
-    * a caller that deliberately disabled it. */
-  private[graft] def runToSink(s: SparkSession, dir: String, out: DataFrame,
-                               prefix: String): DataFrame = {
+  /** Event time of the watermark-flush sentinel, in seconds:
+    * 4,000,000,000 s (2096), far past every fixture event (they end in
+    * January 2024). The sentinel lands in the same micro-batch as the
+    * real events, so no real event is late against it; it advances the
+    * watermark past every real session and window, the no-data batch
+    * [[drain]] enables emits them, and the gate filters the sentinel's
+    * own key back out. */
+  private[queries] val FlushSentinelS = 4000000000L
+
+  /** Drain `src` into a fresh sink under the gate's per-process scratch
+    * (`dir` keys the [[LayoutQueries.derivedDir]] tree) and return the
+    * result; see the object scaladoc. */
+  private[graft] def drain(s: SparkSession, dir: String, name: String,
+                           src: DataFrame,
+                           perBatch: DataFrame => DataFrame = identity): DataFrame =
+    drainAt(s, LayoutQueries.derivedDir(s, dir, s"sink-$name-${System.nanoTime()}"),
+            name, src, perBatch)
+
+  /** [[drain]] into `base` (`base/out` sink, `base/ckpt` checkpoint): a
+    * second drain at the same `base` resumes from the checkpoint. Pins
+    * `noDataMicroBatches.enabled` for the run: the watermark-flush gates
+    * need the post-data batch that emits watermark-gated state (session
+    * windows, event-time timeouts). The caller's value is restored after,
+    * so the pin never leaks past the gate. */
+  private[graft] def drainAt(s: SparkSession, base: String, name: String,
+                             src: DataFrame,
+                             perBatch: DataFrame => DataFrame = identity): DataFrame = {
+    val out = s"$base/out"
+    val outSchema =
+      perBatch(s.createDataFrame(s.sparkContext.emptyRDD[Row], src.schema)).schema
+    // a drain that commits no batch writes nothing, and the read-back
+    // needs the dir
+    val outPath = new org.apache.hadoop.fs.Path(out)
+    outPath.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(outPath)
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val ndPrev = s.conf.getOption(ndKey)
     s.conf.set(ndKey, "true")
-    val base =
-      LayoutQueries.derivedDir(s, dir, s"sink-$prefix-${System.nanoTime()}")
-    val q = out.writeStream.format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    val tDrain0 = System.nanoTime()
-    val qr = q.start()
     try {
-      qr.awaitTermination()
-      StreamObservability.addDrain(System.nanoTime() - tDrain0)
-      val progress = qr.recentProgress
-      StreamObservability.record(
-        s"gate=$prefix batches=${progress.length} " +
-          s"rows=${progress.map(_.numInputRows).sum} " +
-          s"batch_ms=${progress.map(_.durationMs.getOrDefault("triggerExecution", 0L)).mkString(",")}")
-    } finally {
-      qr.stop()
-      ndPrev match {
-        case Some(v) => s.conf.set(ndKey, v)
-        case None    => s.conf.unset(ndKey)
-      }
+      val t0 = System.nanoTime()
+      val q = src.writeStream
+        .foreachBatch { (b: Dataset[Row], batchId: Long) =>
+          perBatch(b.toDF()).write.mode("overwrite").parquet(s"$out/batch-$batchId"); ()
+        }
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try {
+        q.awaitTermination()
+        StreamObservability.addDrain(System.nanoTime() - t0)
+        val progress = q.recentProgress
+        StreamObservability.record(
+          s"gate=$name batches=${progress.length} " +
+            s"rows=${progress.map(_.numInputRows).sum} " +
+            s"batch_ms=${progress.map(_.durationMs.getOrDefault("triggerExecution", 0L)).mkString(",")}")
+      } finally q.stop()
+    } finally ndPrev match {
+      case Some(v) => s.conf.set(ndKey, v)
+      case None    => s.conf.unset(ndKey)
     }
-    s.read.schema(out.schema).parquet(s"$base/out")
+    // batch dir names are not k=v, so no partition column is inferred
+    s.read.schema(outSchema).option("recursiveFileLookup", "true").parquet(out)
   }
 
-  /** [[runToSink]]'s sibling for the LAYOUT-PROBE gates: drive the
-    * stream through `foreachBatch`, applying `perBatch` to every
-    * micro-batch as a BATCH frame and appending its result to the
-    * parquet sink. foreachBatch is what makes per-batch partition
-    * pruning expressible at all — a static stream-static join plans
-    * the layout scan once without knowing which cells arrive, while
-    * here each batch collects its own (bounded) cell set and folds it
-    * into the scan's partition filter. Same AvailableNow drain, same
-    * observability, same schema-stated read-back as [[runToSink]];
-    * the result schema is derived from `perBatch` on an empty frame so
-    * a zero-row drain still returns a typed empty frame. */
-  private[graft] def runForeachBatchToSink(
-      s: SparkSession, dir: String, src: DataFrame, prefix: String)(
-      perBatch: DataFrame => DataFrame): DataFrame = {
-    val base =
-      LayoutQueries.derivedDir(s, dir, s"sink-$prefix-${System.nanoTime()}")
-    val outSchema = perBatch(
-      s.createDataFrame(s.sparkContext
-                          .emptyRDD[org.apache.spark.sql.Row], src.schema))
-      .schema
-    // a zero-batch drain appends nothing — pre-create the sink dir so
-    // the schema-stated read-back below returns a typed empty frame
-    // instead of failing on a missing path (the runToSink parquet sink
-    // creates its dir on start; foreachBatch has no sink to do it)
-    val outPath = new org.apache.hadoop.fs.Path(s"$base/out")
-    outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .mkdirs(outPath)
-    val q = src.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        // batchId-keyed subdirectory + overwrite = idempotent under batch
-        // retry / query restart (round-20 ADVICE: a bare mode("append")
-        // re-run after a partial write duplicates rows — foreachBatch has
-        // no transaction log of its own, so the batchId is the epoch
-        // marker per Spark's foreachBatch idempotency guidance). The
-        // read-back below lists nested dirs recursively; the dir name is
-        // deliberately NOT k=v so no partition column is inferred.
-        perBatch(b.toDF()).write.mode("overwrite")
-          .parquet(s"$base/out/batch-$batchId"); ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-    val tDrain0 = System.nanoTime()
-    val qr = q.start()
-    try {
-      qr.awaitTermination()
-      StreamObservability.addDrain(System.nanoTime() - tDrain0)
-      val progress = qr.recentProgress
-      StreamObservability.record(
-        s"gate=$prefix batches=${progress.length} " +
-          s"rows=${progress.map(_.numInputRows).sum} " +
-          s"batch_ms=${progress.map(_.durationMs.getOrDefault("triggerExecution", 0L)).mkString(",")}")
-    } finally qr.stop()
-    s.read.schema(outSchema)
-      .option("recursiveFileLookup", "true").parquet(s"$base/out")
+  /** One gate's view of the harness: its drains and its staged input are
+    * named after the gate. */
+  private final class Gate(s: SparkSession, dir: String, name: String) {
+    def drain(src: DataFrame,
+              perBatch: DataFrame => DataFrame = identity): DataFrame =
+      StreamingQueries.drain(s, dir, name, src, perBatch)
+
+    /** The one replay stager: write `frame` as one `format` file under the
+      * gate's derived dir (replacing what was there) and, when `flush` is
+      * non-empty, append one watermark-flush sentinel row: `ts_us` at
+      * [[FlushSentinelS]], `ts_t` its timestamp, every other column from
+      * `flush`. Returns the dir. */
+    def stageDir(frame: DataFrame, format: String = "parquet",
+                 flush: Map[String, Any] = Map.empty): String = {
+      val in = LayoutQueries.derivedDir(s, dir, s"replay-$name")
+      frame.coalesce(1).write.mode("overwrite").format(format).save(in)
+      val flushUs = lit(FlushSentinelS * 1000000L)
+      if (flush.nonEmpty)
+        s.range(1).select(frame.schema.map { f =>
+            (f.name match {
+              case "ts_us" => flushUs
+              case "ts_t"  => timestamp_micros(flushUs)
+              case c       => lit(flush(c))
+            }).cast(f.dataType).as(f.name)
+          }: _*)
+          .coalesce(1).write.mode("append").format(format).save(in)
+      in
+    }
+
+    /** [[stageDir]], read back as a file stream. */
+    def replay(frame: DataFrame, format: String = "parquet",
+               flush: Map[String, Any] = Map.empty): DataFrame = {
+      val in = stageDir(frame, format, flush)
+      s.readStream.schema(s.read.format(format).load(in).schema)
+        .format(format).load(in)
+    }
   }
+
+  /** A stream gate: [[Q]] whose body also gets the gate's [[Gate]]. */
+  private def gate(name: String,
+                   body: (SparkSession, String, Gate) => DataFrame,
+                   oracle: Option[String]): Q =
+    Q(name, (s, dir) => body(s, dir, new Gate(s, dir, name)), oracle)
 
   /** A single-FILE parquet table as a file stream: a non-glob path makes
     * FileStreamSource force basePath to the file itself, which partition
@@ -176,43 +177,25 @@ object StreamingQueries {
       .option("basePath", dir)
       .parquet(s"$dir/$name.[p]arquet")
 
-  /** Watermark-flush horizon for the file-replay gates: max `ts_us`
-    * read from the freshly-staged parquet FOOTERS (one driver-side
-    * footer open per file — the writer always records int64 min/max
-    * block stats), not an executor scan. The r13 harness ran
-    * `ev.agg(max("ts_us"))` independently at FOUR gate sites — each a
-    * full pass over the events table just to place one sentinel row;
-    * this is the single shared replacement. Falls back to the scan if
-    * any file lacks the stat (e.g. an all-null block), so the horizon
-    * is never silently wrong. */
-  private[queries] def stagedMaxTsUs(s: SparkSession, staged: String,
-                                     fallback: => DataFrame): Long = {
-    import scala.jdk.CollectionConverters._
-    val conf = s.sparkContext.hadoopConfiguration
-    val dirPath = new org.apache.hadoop.fs.Path(staged)
-    val fs = dirPath.getFileSystem(conf)
-    val parts = fs.listStatus(dirPath).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_")
-                && !p.getName.startsWith("."))
-    val maxes = parts.toSeq.flatMap { p =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try reader.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
-        b.getColumns.asScala
-          .filter(_.getPath.toDotString == "ts_us")
-          .map { c =>
-            val st = c.getStatistics
-            if (st == null || !st.hasNonNullValue) None
-            else st.genericGetMax match {
-              case l: java.lang.Long => Some(l.longValue)
-              case _                 => None
-            }
-          }
-      } finally reader.close()
-    }
-    if (maxes.nonEmpty && maxes.forall(_.isDefined)) maxes.flatten.max
-    else fallback.agg(max("ts_us")).head().getLong(0)
-  }
+  /** The `*glob` files under `dir` as a binaryFile stream of their
+    * `content`. The source's fixed schema is stated: a file stream cannot
+    * infer it (the files may not exist yet when the query is planned). */
+  private def binaryFileStream(s: SparkSession, dir: String,
+                               glob: String): DataFrame =
+    s.readStream.format("binaryFile")
+      .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
+      .option("pathGlobFilter", glob).load(dir)
+      .select(col("content"))
+
+  /** `array_sort` comparator: `key` descending, then `id` ascending — the
+    * (key desc, id asc) order the batch faces' rank windows state. */
+  private def byKeyDescIdAsc(key: String, id: String): (Column, Column) => Column =
+    (l, r) =>
+      when(l.getField(key) > r.getField(key), -1)
+        .when(l.getField(key) < r.getField(key), 1)
+        .when(l.getField(id) < r.getField(id), -1)
+        .when(l.getField(id) > r.getField(id), 1)
+        .otherwise(0)
 
   /**
    * Streaming train/eval decontamination, gated against the BATCH
@@ -226,9 +209,9 @@ object StreamingQueries {
    * output — so the oracle SQL is REUSED verbatim from the batch query
    * and the two faces can never drift on semantics.
    */
-  val qStreamDecontam = Q(
+  val qStreamDecontam = gate(
     "q_stream_decontam",
-    (s, dir) => {
+    (s, dir, g) => {
       // frozen eval-side index (eval sets are bounded benchmark suites —
       // see StreamingDecontam scaladoc); cached AND materialized BEFORE
       // the stream starts — a lazy cache would make the first micro-batch
@@ -252,11 +235,9 @@ object StreamingQueries {
       // compute-dense band-signature Generate above the exchange
       // (plan-verified: AQEShuffleRead coalesced → 3.2 s single task)
       val hits =
-        try runToSink(s, dir,
-          StreamingDecontam.contaminationHits(
+        try g.drain(StreamingDecontam.contaminationHits(
             tableStream(s, dir, "documents").select("doc_id", "text")
-              .repartition(nShuffle, col("doc_id")), evalIdx),
-          "graft_q_stream_decontam")
+              .repartition(nShuffle, col("doc_id")), evalIdx))
         finally evalIdx.unpersist()
       // k band collisions per pair → one pair row: the consumer-side
       // aggregation the batch query performs at its candidate stage
@@ -279,19 +260,17 @@ object StreamingQueries {
    * quality-filter family: per-arrival scoring streams, the aggregate
    * compacts.
    */
-  val qStreamLmScore = Q(
+  val qStreamLmScore = gate(
     "q_stream_lm_score",
-    (s, dir) => {
+    (s, dir, g) => {
       val d = Tables.read(s, dir, "documents").select("doc_id", "text")
       val (c2raw, c1raw) = TextStatsQueries.lmCounts(d)
       val c2 = checkpointCompact(c2raw)
       val c1 = checkpointCompact(c1raw)
       // NOT fanned out (round-21 warm A/B: 2.62→3.03 s widened — the
       // bigram scoring is lighter than the added stream exchange)
-      val scoreLog = runToSink(s, dir,
-        TextStatsQueries.lmBigramScores(
-          tableStream(s, dir, "documents").select("doc_id", "text"), c2, c1),
-        "graft_q_stream_lm_score")
+      val scoreLog = g.drain(TextStatsQueries.lmBigramScores(
+          tableStream(s, dir, "documents").select("doc_id", "text"), c2, c1))
       TextStatsQueries.lmMeanOf(scoreLog)
     },
     TextStatsQueries.qLmScore.oracle
@@ -318,9 +297,9 @@ object StreamingQueries {
    * centroids + the eval cell index before the stream starts
    * ([[qStreamDecontam]]'s billing rule).
    */
-  val qStreamSemanticDecontam = Q(
+  val qStreamSemanticDecontam = gate(
     "q_stream_semantic_decontam",
-    (s, dir) => {
+    (s, dir, g) => {
       import graft.vector.VectorOps
       val e = SimQueries.quantizedFrame(s, dir)
       // same auto-sized cap as the batch face, resolved the gate way
@@ -350,7 +329,7 @@ object StreamingQueries {
         .withColumn("dot", VectorOps.intDot(col("qa"), col("qb")))
         .filter(VectorOps.cosAtLeast(col("dot"), col("na"), col("nb"), 3, 10))
         .select("train_id", "eval_id", "dot")
-      runToSink(s, dir, hits, "graft_q_stream_semantic_decontam")
+      g.drain(hits)
     },
     DedupQueries.qSemanticDecontam.oracle
   )
@@ -372,9 +351,9 @@ object StreamingQueries {
    * ([[SimQueries.qSimSearchIvf]], nprobe = ${SimQueries.NProbe})
    * keeps; the oracle states exactly the crn = 1 semantics.
    */
-  val qStreamAnn = Q(
+  val qStreamAnn = gate(
     "q_stream_ann",
-    (s, dir) => {
+    (s, dir, g) => {
       import graft.vector.VectorOps
       requireBroadcastableMembers(s, dir) // ADVICE r19: fail fast, not OOM
       val e = SimQueries.quantizedFrame(s, dir)
@@ -407,18 +386,13 @@ object StreamingQueries {
                 m => struct(
                   VectorOps.intDot(col("qq"), m.getField("q")).as("dot"),
                   m.getField("vec_id").as("vec_id"))),
-              (l, r) =>
-                when(l.getField("dot") > r.getField("dot"), -1)
-                  .when(l.getField("dot") < r.getField("dot"), 1)
-                  .when(l.getField("vec_id") < r.getField("vec_id"), -1)
-                  .when(l.getField("vec_id") > r.getField("vec_id"), 1)
-                  .otherwise(0)),
+              byKeyDescIdAsc("dot", "vec_id")),
             1, SimQueries.TopK).as("top"))
       val out = top
         .select(col("q_id"), posexplode(col("top")).as(Seq("p", "t")))
         .select(col("q_id"), col("t.vec_id").as("vec_id"),
                 col("t.dot").as("dot"), (col("p") + 1).cast("long").as("rnk"))
-      runToSink(s, dir, out, "graft_q_stream_ann")
+      g.drain(out)
     },
     Some(s"""${SimQueries.ivfCte},
       |probes AS (SELECT vec_id AS q_id, c_id AS cell FROM rk
@@ -462,9 +436,9 @@ object StreamingQueries {
    * layout ([[SimQueries.writeIvfLayout]]) — same routing, cells read
    * off disk with partition pruning.
    */
-  val qStreamHardNegatives = Q(
+  val qStreamHardNegatives = gate(
     "q_stream_hard_negatives",
-    (s, dir) => {
+    (s, dir, g) => {
       import graft.vector.VectorOps
       requireBroadcastableMembers(s, dir) // ADVICE r19: fail fast, not OOM
       val e = SimQueries.quantizedFrame(s, dir)
@@ -494,12 +468,7 @@ object StreamingQueries {
                   VectorOps.intDot(col("qq"), m.getField("q")).as("dot"),
                   m.getField("vec_id").as("vec_id"),
                   m.getField("label").as("label"))),
-              (l, r) =>
-                when(l.getField("dot") > r.getField("dot"), -1)
-                  .when(l.getField("dot") < r.getField("dot"), 1)
-                  .when(l.getField("vec_id") < r.getField("vec_id"), -1)
-                  .when(l.getField("vec_id") > r.getField("vec_id"), 1)
-                  .otherwise(0)),
+              byKeyDescIdAsc("dot", "vec_id")),
             1, SimQueries.GraphK).as("top"))
       val out = top
         .select(col("src"), col("src_label"),
@@ -507,7 +476,7 @@ object StreamingQueries {
         .select(col("src"), col("src_label"),
                 col("t.vec_id").as("dst"), col("t.label").as("dst_label"),
                 col("t.dot").as("dot"), (col("p") + 1).cast("long").as("rnk"))
-      runToSink(s, dir, out, "graft_q_stream_hard_negatives")
+      g.drain(out)
     },
     SimQueries.qHardNegatives.oracle
   )
@@ -559,17 +528,16 @@ object StreamingQueries {
    * the oracle is [[qStreamAnn]]'s VERBATIM — both regimes must
    * hash-match the same answer.
    */
-  val qStreamAnnProbe = Q(
+  val qStreamAnnProbe = gate(
     "q_stream_ann_probe",
-    (s, dir) => {
+    (s, dir, g) => {
       import graft.vector.VectorOps
       val lay = sharedStreamIvfLayout(s, dir)
       val arrivals = tableStream(s, dir, "embeddings")
         .filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"),
                 VectorOps.quantize(col("embedding")).as("qq"))
-      runForeachBatchToSink(s, dir, arrivals, "graft_q_stream_ann_probe")(
-        b => SimQueries.probeIvfLayoutBatch(s, lay, b))
+      g.drain(arrivals, SimQueries.probeIvfLayoutBatch(s, lay, _))
     },
     qStreamAnn.oracle
   )
@@ -679,18 +647,16 @@ object StreamingQueries {
    * the rank arithmetic must all agree with the broadcast regime's
    * hash to pass.
    */
-  val qStreamHardNegativesProbe = Q(
+  val qStreamHardNegativesProbe = gate(
     "q_stream_hard_negatives_probe",
-    (s, dir) => {
+    (s, dir, g) => {
       import graft.vector.VectorOps
       val lay = sharedMembersLayout(s, dir)
       val qz = SimQueries.gateQuantizer(s, dir)
       val arrivals = tableStream(s, dir, "embeddings")
         .select(col("vec_id").as("src"), col("label").as("src_label"),
                 VectorOps.quantize(col("embedding")).as("qq"))
-      runForeachBatchToSink(s, dir, arrivals,
-                            "graft_q_stream_hard_negatives_probe")(
-        b => hardNegativesFromLayoutBatch(s, lay, qz, b))
+      g.drain(arrivals, hardNegativesFromLayoutBatch(s, lay, qz, _))
     },
     SimQueries.qHardNegatives.oracle
   )
@@ -705,32 +671,16 @@ object StreamingQueries {
    * Append-mode emission needs the watermark to pass each session's
    * close, and a drained file source alone leaves the final
    * `watermarkDelay` of sessions sitting in state — so the gate writes
-   * ONE far-future sentinel event (user −1; real ids are non-negative)
-   * as a second file in the stream dir: the sentinel advances the
-   * GLOBAL watermark past every real session's close, the no-data
-   * finalization batch ([[runToSink]] pins it on) emits every real
-   * visit, and the sentinel's own (never-emitted, filtered) session is
-   * the only residue. Both files land in one micro-batch (far under
-   * maxFilesPerTrigger), so no real event can ever be late-dropped
-   * against the sentinel-advanced watermark.
+   * the [[FlushSentinelS]] event (user −1; real ids are non-negative)
+   * as a second file in the stream dir.
    */
-  val qStreamSessionize = Q(
+  val qStreamSessionize = gate(
     "q_stream_sessionize",
-    (s, dir) => {
-      import s.implicits._
-      val ev = Tables.events(s, dir).select(col("user_id"), col("ts_us"),
-                                            col("ts_t"))
-      val inDir = LayoutQueries.derivedDir(s, dir, "stream-sess")
-      ev.coalesce(1).write.mode("overwrite").parquet(inDir)
-      val maxTs = stagedMaxTsUs(s, inDir, ev)
-      val flushTs = maxTs + 1000L * Schemas.SessionGapUs
-      Seq((-1L, flushTs)).toDF("user_id", "ts_us")
-        .withColumn("ts_t", timestamp_micros(col("ts_us")))
-        .coalesce(1).write.mode("append").parquet(inDir)
-      val stream = s.readStream.schema(s.read.parquet(inDir).schema)
-        .parquet(inDir)
-      runToSink(s, dir, StreamingSessionize.visitsStream(stream),
-                "graft_q_stream_sess")
+    (s, dir, g) => {
+      val stream = g.replay(
+        Tables.events(s, dir).select(col("user_id"), col("ts_us"), col("ts_t")),
+        flush = Map("user_id" -> -1L))
+      g.drain(StreamingSessionize.visitsStream(stream))
         .filter(col("user_id") =!= -1L)
         .select("user_id", "visit_start_us", "visit_end_us", "n_events",
                 "visit_key")
@@ -752,9 +702,9 @@ object StreamingQueries {
    * (deterministic µs offsets), and append-mode dedup emits survivors
    * immediately — no watermark-flush sentinel needed.
    */
-  val qStreamDedup = Q(
+  val qStreamDedup = gate(
     "q_stream_dedup",
-    (s, dir) => {
+    (s, dir, g) => {
       val stream = tableStream(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         // epoch-offset base: an event time of EXACTLY 0 (doc_id 0 with a
@@ -763,8 +713,7 @@ object StreamingQueries {
         .withColumn("ts_t",
                     timestamp_micros(col("doc_id") + lit(1600000000L * 1000000L)))
         .withWatermark("ts_t", "1 hour")
-      runToSink(s, dir, graft.streaming.StreamingDedup.dedupByContent(stream),
-                "graft_q_stream_dedup")
+      g.drain(graft.streaming.StreamingDedup.dedupByContent(stream))
         .select(graft.text.TextOps.contentHash(col("text")).as("content_hash"))
     },
     Some("""SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS content_hash
@@ -782,10 +731,9 @@ object StreamingQueries {
    * relational aggregation under the driver's independent replay, not
    * just under the spec's row-for-row assert.
    */
-  val qStreamCurate = Q(
+  val qStreamCurate = gate(
     "q_stream_curate",
-    (s, dir) => runToSink(
-      s, dir,
+    (s, dir, g) => g.drain(
       graft.streaming.StreamingCuration.withRepetitionGate(
           tableStream(s, dir, "documents").select(col("doc_id"), col("text"))
             // single-file fixture → one input split; EXPLICIT count so AQE
@@ -794,8 +742,7 @@ object StreamingQueries {
             .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
                          col("doc_id")))
         .select("doc_id", "n_tok", "n_types", "top_tok_n", "n_bigrams",
-                "top_bigram_n", "repetitive"),
-      "graft_q_stream_curate"),
+                "top_bigram_n", "repetitive")),
     CurationQueries.qRepetitionFilter.oracle
   )
 
@@ -808,30 +755,21 @@ object StreamingQueries {
    * no-data finalization batch (event-time TIMEOUTS only fire in a
    * batch that runs after the watermark advanced, and the sentinel
    * shares the single data batch with everything else), which is why
-   * [[runToSink]] pins `noDataMicroBatches.enabled` on. user_id travels
+   * [[drain]] pins `noDataMicroBatches.enabled` on. user_id travels
    * as a string through the typed state path (the `SessionEvent`
    * contract) and is cast back to long for the oracle compare.
    */
-  val qStreamSessionizeState = Q(
+  val qStreamSessionizeState = gate(
     "q_stream_sessionize_state",
-    (s, dir) => {
+    (s, dir, g) => {
       import s.implicits._
-      val ev = Tables.events(s, dir).select(col("user_id"), col("ts_us"),
-                                            col("ts_t"))
-      val inDir = LayoutQueries.derivedDir(s, dir, "stream-sess-state")
-      ev.coalesce(1).write.mode("overwrite").parquet(inDir)
-      val maxTs = stagedMaxTsUs(s, inDir, ev)
-      val flushTs = maxTs + 1000L * Schemas.SessionGapUs
-      Seq((-1L, flushTs)).toDF("user_id", "ts_us")
-        .withColumn("ts_t", timestamp_micros(col("ts_us")))
-        .coalesce(1).write.mode("append").parquet(inDir)
-      val stream = s.readStream.schema(s.read.parquet(inDir).schema)
-        .parquet(inDir)
+      val stream = g.replay(
+          Tables.events(s, dir).select(col("user_id"), col("ts_us"), col("ts_t")),
+          flush = Map("user_id" -> -1L))
         .withColumn("user_id", col("user_id").cast("string"))
         .withWatermark("ts_t", Schemas.SessionGap)
         .as[graft.streaming.SessionEvent]
-      runToSink(s, dir, graft.streaming.StatefulSessionize.visits(s, stream).toDF(),
-                "graft_q_stream_sess_state")
+      g.drain(graft.streaming.StatefulSessionize.visits(s, stream).toDF())
         .filter(col("user_id") =!= "-1")
         .select(col("user_id").cast("long").as("user_id"),
                 col("visit_start_us"), col("visit_end_us"), col("n_events"),
@@ -851,9 +789,9 @@ object StreamingQueries {
    * stream-stream join's output IS the batch interval join, which the
    * oracle states directly in µs arithmetic.
    */
-  val qStreamJoin = Q(
+  val qStreamJoin = gate(
     "q_stream_join",
-    (s, dir) => {
+    (s, dir, g) => {
       def evStream = {
         val tsType = Tables.read(s, dir, "events").schema("ts").dataType
         tableStream(s, dir, "events")
@@ -866,9 +804,7 @@ object StreamingQueries {
       val clicks = evStream.filter(col("event_type") === "click")
         .select(col("user_id").as("c_user_id"), col("event_id").as("c_id"),
                 col("ts_t").as("c_ts"))
-      runToSink(s, dir,
-                graft.streaming.StreamingJoin.clickAttribution(purchases, clicks),
-                "graft_q_stream_join")
+      g.drain(graft.streaming.StreamingJoin.clickAttribution(purchases, clicks))
         .select(col("user_id"), col("p_id"),
                 unix_micros(col("p_ts")).as("p_ts_us"),
                 col("c_id"), unix_micros(col("c_ts")).as("c_ts_us"))
@@ -900,20 +836,16 @@ object StreamingQueries {
    * `q_stream_sessionize` trick applied at the raw-feed layer, proving
    * the flush survives the parse stage too.
    */
-  val qStreamFeed = Q(
+  val qStreamFeed = gate(
     "q_stream_feed",
-    (s, dir) => {
-      import s.implicits._
-      val feedDir = LayoutQueries.derivedDir(s, dir, "stream-feed")
-      graft.ingest.FeedSynth.synthLines(
-          distributeBy(Tables.events(s, dir), col("event_id")))
-        .coalesce(1).write.mode("overwrite").text(feedDir)
-      // valid 10-column line at a far-future second: parses to user
-      // "zz_d0" and advances the watermark past every real session
-      Seq("4000000000\tzz\td0\tview\t\t2\tP1\tsrv0\tibmzz\tscvzz")
-        .toDF("value").coalesce(1).write.mode("append").text(feedDir)
-      runToSink(s, dir, graft.streaming.StreamingFeed.visitsFromFeed(s, feedDir),
-                "graft_q_stream_feed")
+    (s, dir, g) => {
+      // the sentinel is a valid 10-column line: it parses to user "zz_d0"
+      val feedDir = g.stageDir(
+        graft.ingest.FeedSynth.synthLines(
+          distributeBy(Tables.events(s, dir), col("event_id"))),
+        "text",
+        Map("value" -> s"$FlushSentinelS\tzz\td0\tview\t\t2\tP1\tsrv0\tibmzz\tscvzz"))
+      g.drain(graft.streaming.StreamingFeed.visitsFromFeed(s, feedDir))
         .filter(col("user_id") =!= "zz_d0")
     },
     Some(s"""${graft.ingest.FeedSynth.parsedHitsCte},
@@ -943,19 +875,13 @@ object StreamingQueries {
    * `q_media_decode` — whose oracle SQL is reused verbatim. Stateless
    * per-row decode: no watermark, no sentinel.
    */
-  val qStreamMedia = Q(
+  val qStreamMedia = gate(
     "q_stream_media",
-    (s, dir) => {
-      val inDir = LayoutQueries.derivedDir(s, dir, "stream-media")
-      graft.multimodal.MediaSynth.syntheticMedia(
-          s, Tables.read(s, dir, "documents").select("doc_id"))
-        .toDF().coalesce(1).write.mode("overwrite").parquet(inDir)
-      val stream = s.readStream.schema(s.read.parquet(inDir).schema)
-        .parquet(inDir)
-      runToSink(s, dir,
-                MediaQueries.decodedProjection(
-                  graft.streaming.StreamingMedia.features(s, stream).toDF()),
-                "graft_q_stream_media")
+    (s, dir, g) => {
+      val stream = g.replay(graft.multimodal.MediaSynth.syntheticMedia(
+        s, Tables.read(s, dir, "documents").select("doc_id")).toDF())
+      g.drain(MediaQueries.decodedProjection(
+                  graft.streaming.StreamingMedia.features(s, stream).toDF()))
     },
     MediaQueries.qMediaDecode.oracle
   )
@@ -968,18 +894,12 @@ object StreamingQueries {
    * oracle verbatim: the micro-batch path must reproduce every bit of
    * every hash.
    */
-  val qStreamPhash = Q(
+  val qStreamPhash = gate(
     "q_stream_phash",
-    (s, dir) => {
-      val inDir = LayoutQueries.derivedDir(s, dir, "stream-phash")
-      graft.multimodal.MediaSynth.syntheticCards(
-          s, Tables.read(s, dir, "documents").select("doc_id"))
-        .toDF().coalesce(1).write.mode("overwrite").parquet(inDir)
-      val stream = s.readStream.schema(s.read.parquet(inDir).schema)
-        .parquet(inDir)
-      runToSink(s, dir,
-                graft.multimodal.MediaOps.imagePhash(s, stream).toDF(),
-                "graft_q_stream_phash")
+    (s, dir, g) => {
+      val stream = g.replay(graft.multimodal.MediaSynth.syntheticCards(
+        s, Tables.read(s, dir, "documents").select("doc_id")).toDF())
+      g.drain(graft.multimodal.MediaOps.imagePhash(s, stream).toDF())
     },
     MediaQueries.qImagePhash.oracle
   )
@@ -990,18 +910,12 @@ object StreamingQueries {
     * mapPartitions: decode → windowed envelope → bits) runs per
     * micro-batch, gated on `q_audio_fingerprint`'s closed-form oracle
     * verbatim. */
-  val qStreamAudioFp = Q(
+  val qStreamAudioFp = gate(
     "q_stream_audio_fp",
-    (s, dir) => {
-      val inDir = LayoutQueries.derivedDir(s, dir, "stream-audiofp")
-      graft.multimodal.MediaSynth.syntheticSteps(
-          s, Tables.read(s, dir, "documents").select("doc_id"))
-        .toDF().coalesce(1).write.mode("overwrite").parquet(inDir)
-      val stream = s.readStream.schema(s.read.parquet(inDir).schema)
-        .parquet(inDir)
-      runToSink(s, dir,
-                graft.multimodal.MediaOps.audioFingerprint(s, stream).toDF(),
-                "graft_q_stream_audio_fp")
+    (s, dir, g) => {
+      val stream = g.replay(graft.multimodal.MediaSynth.syntheticSteps(
+        s, Tables.read(s, dir, "documents").select("doc_id")).toDF())
+      g.drain(graft.multimodal.MediaOps.audioFingerprint(s, stream).toDF())
     },
     MediaQueries.qAudioFingerprint.oracle
   )
@@ -1019,15 +933,15 @@ object StreamingQueries {
    * (stop-word skew never concentrates a term's corpus on one task —
    * not even at compaction).
    */
-  val qStreamIndex = Q(
+  val qStreamIndex = gate(
     "q_stream_index",
-    (s, dir) => {
+    (s, dir, g) => {
       val partial = tableStream(s, dir, "documents")
         .select(col("doc_id"),
                 explode(TextStatsQueries.termCountsCol(col("text"))).as("tc"))
         .select(col("doc_id"), col("tc.term").as("term"),
                 col("tc.tf").as("tf"))
-      val sunk = runToSink(s, dir, partial, "graft_q_stream_index")
+      val sunk = g.drain(partial)
       // EXACTLY-ONCE COMPACTION (round-17 VERDICT #7): the drained
       // sink folds into a committed index layout under the
       // AtomicPublish manifest — one atomic version per compaction,
@@ -1053,14 +967,14 @@ object StreamingQueries {
    * exactly why it runs at compaction, not per-batch) composes
    * downstream at any cadence.
    */
-  val qStreamSourceReport = Q(
+  val qStreamSourceReport = gate(
     "q_stream_source_report",
-    (s, dir) => {
+    (s, dir, g) => {
       val partial = tableStream(s, dir, "documents")
         .select(col("source"), col("lang"), col("n_chars"),
                 col("text").isNull.cast("long").as("is_null"),
                 graft.text.TextOps.contentHash(col("text")).as("ch"))
-      val sunk = runToSink(s, dir, partial, "graft_q_stream_source_report")
+      val sunk = g.drain(partial)
       sunk.groupBy("source", "lang")
         .agg(count(lit(1)).as("n_docs"),
              sum("n_chars").as("sum_chars"),
@@ -1071,29 +985,19 @@ object StreamingQueries {
     CurationQueries.qSourceReport.oracle
   )
 
-  /** Shared staging for the windowed-count gates
+  /** Shared body of the windowed-count gates
     * ([[qStreamWindowed]]/[[qStreamLeaderboard]]/[[qStreamAnomaly]]):
-    * the events table persisted as stream input with the single
-    * watermark-flush sentinel row (event_type `zz`, one gap horizon
-    * past the corpus max) appended, replayed as a file stream, drained
-    * through [[graft.streaming.StreamingFeed.windowedCounts]], sentinel
-    * filtered back out. Returns the drained `(window_start_us,
-    * event_type, n_events)` table. */
+    * the events table replayed with the flush sentinel (event_type
+    * `zz`), drained through
+    * [[graft.streaming.StreamingFeed.windowedCounts]], sentinel filtered
+    * back out. Returns the drained `(window_start_us, event_type,
+    * n_events)` table. */
   private def drainedWindowedCounts(s: SparkSession, dir: String,
-                                    suffix: String): DataFrame = {
-    import s.implicits._
-    val ev = Tables.events(s, dir).select(col("event_type"), col("ts_us"),
-                                          col("ts_t"))
-    val inDir = LayoutQueries.derivedDir(s, dir, suffix)
-    ev.coalesce(1).write.mode("overwrite").parquet(inDir)
-    val maxTs = stagedMaxTsUs(s, inDir, ev)
-    Seq(("zz", maxTs + 1000L * Schemas.SessionGapUs)).toDF("event_type", "ts_us")
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
-      .coalesce(1).write.mode("append").parquet(inDir)
-    val stream = s.readStream.schema(s.read.parquet(inDir).schema)
-      .parquet(inDir)
-    runToSink(s, dir, graft.streaming.StreamingFeed.windowedCounts(stream),
-              s"graft_q_$suffix".replace('-', '_'))
+                                    g: Gate): DataFrame = {
+    val stream = g.replay(
+      Tables.events(s, dir).select(col("event_type"), col("ts_us"), col("ts_t")),
+      flush = Map("event_type" -> "zz"))
+    g.drain(graft.streaming.StreamingFeed.windowedCounts(stream))
       .filter(col("event_type") =!= "zz")
       .select(unix_micros(col("window_start")).as("window_start_us"),
               col("event_type"), col("n_events"))
@@ -1109,9 +1013,9 @@ object StreamingQueries {
    * oracle states directly. Same single-sentinel watermark flush as the
    * sessionize gates (sentinel event_type `zz`, filtered).
    */
-  val qStreamWindowed = Q(
+  val qStreamWindowed = gate(
     "q_stream_windowed",
-    (s, dir) => drainedWindowedCounts(s, dir, "stream-windowed"),
+    (s, dir, g) => drainedWindowedCounts(s, dir, g),
     Some("""SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS window_start_us,
       |       event_type, COUNT(*) AS n_events
       |FROM events
@@ -1132,13 +1036,13 @@ object StreamingQueries {
    * The gate's final `groupBy(lang, reg).max` IS that compaction, and
    * its output must hash-match the one-shot batch build exactly.
    */
-  val qStreamHll = Q(
+  val qStreamHll = gate(
     "q_stream_hll",
-    (s, dir) => {
+    (s, dir, g) => {
       val partials = TextStatsQueries.hllRows(
         tableStream(s, dir, "documents").select(col("lang"), col("text")),
         "lang")
-      runToSink(s, dir, partials, "graft_q_stream_hll")
+      g.drain(partials)
         .groupBy("lang", "reg").agg(max("rho").as("max_rho"))
     },
     TextStatsQueries.qHllRegisters.oracle
@@ -1157,9 +1061,9 @@ object StreamingQueries {
    * compaction (the [[qStreamHll]] pattern: per-arrival work streams,
    * order-insensitive merge work compacts downstream at any cadence).
    */
-  val qStreamSpan = Q(
+  val qStreamSpan = gate(
     "q_stream_span",
-    (s, dir) => {
+    (s, dir, g) => {
       val docs = Tables.read(s, dir, "documents")
       val corpusH = DedupQueries.spanHashes(DedupQueries.spanChunks(
           docs.filter(col("doc_id") % 5 =!= 4)))
@@ -1170,7 +1074,7 @@ object StreamingQueries {
         .spanHashes(DedupQueries.spanChunks(arriving))
         .join(corpusH, Seq("h"), "left_anti")
         .select("doc_id", "pos", "h")
-      val sunk = runToSink(s, dir, fresh, "graft_q_stream_span")
+      val sunk = g.drain(fresh)
       val keptPos = sunk.groupBy("h")
         .agg(min(struct(col("doc_id"), col("pos"))).as("o"))
         .groupBy(col("o.doc_id").as("doc_id"))
@@ -1205,9 +1109,9 @@ object StreamingQueries {
    * h)` — text never reaches the sink — and the first-occurrence rule
    * + reassembly run at compaction (the [[qStreamHll]] pattern).
    */
-  val qStreamSpanCdc = Q(
+  val qStreamSpanCdc = gate(
     "q_stream_span_cdc",
-    (s, dir) => {
+    (s, dir, g) => {
       val docs = Tables.read(s, dir, "documents")
       val corpusH = DedupQueries
         .spanHashes(DedupQueries.cdcChunks(docs.filter(col("doc_id") % 5 =!= 4)))
@@ -1218,7 +1122,7 @@ object StreamingQueries {
         .spanHashes(DedupQueries.cdcChunks(arriving))
         .join(corpusH, Seq("h"), "left_anti")
         .select("doc_id", "pos", "h")
-      val sunk = runToSink(s, dir, fresh, "graft_q_stream_span_cdc")
+      val sunk = g.drain(fresh)
       DedupQueries.reassembleSpans(
         DedupQueries.cdcChunks(docs.filter(col("doc_id") % 5 === 4)),
         DedupQueries.firstOccurrenceKeepers(sunk))
@@ -1240,9 +1144,9 @@ object StreamingQueries {
    * occurrence as covered — equivalent to the batch face's
    * in-corpus-OR-non-first rule — then strips and reassembles.
    */
-  val qStreamSubstr = Q(
+  val qStreamSubstr = gate(
     "q_stream_substr",
-    (s, dir) => {
+    (s, dir, g) => {
       val docs = Tables.read(s, dir, "documents")
       val corpusH = DedupQueries
         .substrGrams(docs.filter(col("doc_id") % 5 =!= 4))
@@ -1252,7 +1156,7 @@ object StreamingQueries {
       val fresh = DedupQueries.substrGrams(arriving)
         .join(corpusH, Seq("h"), "left_anti")
         .select("doc_id", "pos", "h")
-      val sunk = runToSink(s, dir, fresh, "graft_q_stream_substr")
+      val sunk = g.drain(fresh)
       val keepers = sunk.groupBy("h")
         .agg(min(struct(col("doc_id"), col("pos"))).as("o"))
         .select(col("o.doc_id").as("doc_id"), col("o.pos").as("pos"))
@@ -1285,9 +1189,9 @@ object StreamingQueries {
    * so degenerate mega-buckets that the guard would DROP are handled
    * here exactly — the guard never fires at oracle-checked scales.
    */
-  val qStreamMinhash = Q(
+  val qStreamMinhash = gate(
     "q_stream_minhash",
-    (s, dir) => {
+    (s, dir, g) => {
       val docs = Tables.read(s, dir, "documents")
       val idx = DedupQueries
         .bandSignaturesOf(docs.filter(col("doc_id") % 5 =!= 4)
@@ -1302,7 +1206,7 @@ object StreamingQueries {
         .select(col("doc_id"), col("b.band").as("band"),
                 col("b.sig0").as("sig0"), col("b.sig1").as("sig1"))
         .join(idx, Seq("band", "sig0", "sig1"), "left")
-      val sunk = runToSink(s, dir, flagged, "graft_q_stream_minhash")
+      val sunk = g.drain(flagged)
       val corpusHit = sunk.filter(col("hit").isNotNull)
         .select("doc_id").distinct()
       // Losers derive by joining the flat sunk rows back against the
@@ -1342,9 +1246,9 @@ object StreamingQueries {
    * stored labels ∪ sunk assignments — the batch gate's read-back
    * shape.
    */
-  val qStreamClusterAssign = Q(
+  val qStreamClusterAssign = gate(
     "q_stream_cluster_assign",
-    (s, dir) => {
+    (s, dir, g) => {
       import graft.vector.VectorOps
       val out = SimQueries.evenClusterLayout(s, dir)
       val (seeds, ccell) = SimQueries.clusterRouter(s, out)
@@ -1369,16 +1273,9 @@ object StreamingQueries {
                 (VectorOps.intDot(col("q"), c.getField("cq")).cast("double")
                    / sqrt(c.getField("cn").cast("double"))).as("ckey"),
                 c.getField("cluster_id").as("cluster_id"))),
-              (l, r) =>
-                when(l.getField("ckey") > r.getField("ckey"), -1)
-                  .when(l.getField("ckey") < r.getField("ckey"), 1)
-                  .when(l.getField("cluster_id") < r.getField("cluster_id"),
-                        -1)
-                  .when(l.getField("cluster_id") > r.getField("cluster_id"),
-                        1)
-                  .otherwise(0)),
+              byKeyDescIdAsc("ckey", "cluster_id")),
             1).getField("cluster_id").as("cluster_id"))
-      val sunk = runToSink(s, dir, assigned, "graft_q_stream_cluster_assign")
+      val sunk = g.drain(assigned)
       graft.sources.AtomicPublish.readCommitted(s, out, "members")
         .select("vec_id", "cluster_id")
         .unionByName(sunk.select("vec_id", "cluster_id"))
@@ -1399,9 +1296,9 @@ object StreamingQueries {
    * exactly. Snapshot derivation mirrors the batch gate (old = % 7 ≠ 1
    * with % 7 == 2 reversed; arrivals = % 7 ≠ 3).
    */
-  val qStreamDiff = Q(
+  val qStreamDiff = gate(
     "q_stream_diff",
-    (s, dir) => {
+    (s, dir, g) => {
       val docs = Tables.read(s, dir, "documents")
       val old = docs.filter(col("doc_id") % 7 =!= 1)
         .select(col("doc_id"),
@@ -1414,9 +1311,7 @@ object StreamingQueries {
       val arrivals = tableStream(s, dir, "documents")
         .filter(col("doc_id") % 7 =!= 3)
         .select("doc_id", "text")
-      try runToSink(s, dir,
-        graft.streaming.StreamingDiff.diffHits(arrivals, idx),
-        "graft_q_stream_diff")
+      try g.drain(graft.streaming.StreamingDiff.diffHits(arrivals, idx))
       finally idx.unpersist()
     },
     DedupQueries.qCorpusDiff.oracle.map(sql =>
@@ -1437,12 +1332,12 @@ object StreamingQueries {
    * `groupBy.count` IS the compaction, and must hash-match the
    * one-shot batch build.
    */
-  val qStreamCms = Q(
+  val qStreamCms = gate(
     "q_stream_cms",
-    (s, dir) => {
+    (s, dir, g) => {
       val obs = TextStatsQueries.cmsRows(
         tableStream(s, dir, "documents").select(col("text")))
-      runToSink(s, dir, obs, "graft_q_stream_cms")
+      g.drain(obs)
         .groupBy("hrow", "bucket").agg(count(lit(1)).as("cnt"))
     },
     TextStatsQueries.qCmsSketch.oracle
@@ -1460,19 +1355,17 @@ object StreamingQueries {
    * correctly-rounded expression tree, so the gate hash-matches
    * `q_tfidf_terms`' oracle exactly.
    */
-  val qStreamTfidf = Q(
+  val qStreamTfidf = gate(
     "q_stream_tfidf",
-    (s, dir) => {
+    (s, dir, g) => {
       val stats = graft.streaming.StreamingTfidf.corpusStats(
         Tables.read(s, dir, "documents").select("doc_id", "text")).cache()
       stats.count()
-      try runToSink(s, dir,
-        graft.streaming.StreamingTfidf.tfidfHits(
+      try g.drain(graft.streaming.StreamingTfidf.tfidfHits(
           // fanOut: the per-row HOF scoring is compute-dense and the
           // staged fixture is one file -> one scan task (round-21)
           fanOut(tableStream(s, dir, "documents").select("doc_id", "text")),
-          stats, TextStatsQueries.TfidfK),
-        "graft_q_stream_tfidf")
+          stats, TextStatsQueries.TfidfK))
       finally stats.unpersist()
     },
     TextStatsQueries.qTfidfTerms.oracle
@@ -1494,19 +1387,17 @@ object StreamingQueries {
    * semantics statement — so any weight/ordering drift between the
    * formulations hash-mismatches here.
    */
-  val qStreamTfidfJoin = Q(
+  val qStreamTfidfJoin = gate(
     "q_stream_tfidf_join",
-    (s, dir) => {
+    (s, dir, g) => {
       // frozen df index, built and materialized offline (qStreamDecontam
       // rule: index construction never bills to the first micro-batch)
       val (dfreq0, nDocs) = graft.streaming.StreamingTfidf.dfTable(
         Tables.read(s, dir, "documents").select("doc_id", "text"))
       val dfreq = checkpointCompact(dfreq0)
-      val scoreLog = runToSink(s, dir,
-        graft.streaming.StreamingTfidf.termScores(
+      val scoreLog = g.drain(graft.streaming.StreamingTfidf.termScores(
           tableStream(s, dir, "documents").select("doc_id", "text"),
-          dfreq, nDocs),
-        "graft_q_stream_tfidf_join")
+          dfreq, nDocs))
       graft.streaming.StreamingTfidf.topKHits(scoreLog,
                                               TextStatsQueries.TfidfK)
     },
@@ -1516,7 +1407,7 @@ object StreamingQueries {
   /**
    * Streaming windowed LEADERBOARD (15th gate): the hourly top-2 event
    * types — [[qStreamWindowed]]'s watermarked tumbling-window counts
-   * drained through the file sink, then the rank CUT at compaction
+   * drained through the sink, then the rank CUT at compaction
    * over the already-aggregated (window, type) table: a
    * window-partitioned row_number whose group count grows with time
    * (scales out) over windows×types rows, never events. The per-window
@@ -1525,10 +1416,10 @@ object StreamingQueries {
    * ROW_NUMBER. The sketch/compaction split is the [[qStreamHll]]
    * discipline: per-arrival work streams, rank work compacts.
    */
-  val qStreamLeaderboard = Q(
+  val qStreamLeaderboard = gate(
     "q_stream_leaderboard",
-    (s, dir) => {
-      val counts = drainedWindowedCounts(s, dir, "stream-leaderboard")
+    (s, dir, g) => {
+      val counts = drainedWindowedCounts(s, dir, g)
       val wR = org.apache.spark.sql.expressions.Window
         .partitionBy("window_start_us")
         .orderBy(col("n_events").desc, col("event_type").asc)
@@ -1572,9 +1463,9 @@ object StreamingQueries {
    * [[qStreamDecontam]]/[[qStreamHll]] split: per-arrival probes
    * stream, set subtraction compacts at any cadence.
    */
-  val qStreamBloom = Q(
+  val qStreamBloom = gate(
     "q_stream_bloom",
-    (s, dir) => {
+    (s, dir, g) => {
       import graft.text.TextOps
       val d = Tables.read(s, dir, "documents")
       val corpus = d.filter(col("doc_id") % 5 < 4)
@@ -1610,8 +1501,7 @@ object StreamingQueries {
                 col("bs.sig0").as("sig0"), col("bs.sig1").as("sig1"))
         .join(bands, Seq("band", "sig0", "sig1"))
         .select("doc_id")
-      val hitLog = runToSink(s, dir, exactHits.unionByName(nearHits),
-                             "graft_q_stream_bloom")
+      val hitLog = g.drain(exactHits.unionByName(nearHits))
       d.filter(col("doc_id") % 5 === 4).select("doc_id")
         .join(hitLog.distinct(), Seq("doc_id"), "left_anti")
     },
@@ -1631,11 +1521,11 @@ object StreamingQueries {
    * compaction recomputes cheaply at any cadence. The oracle replays
    * both halves in one statement.
    */
-  val qStreamAnomaly = Q(
+  val qStreamAnomaly = gate(
     "q_stream_anomaly",
-    (s, dir) =>
+    (s, dir, g) =>
       CoreQueries.anomalyOverCounts(
-          drainedWindowedCounts(s, dir, "stream-anomaly")
+          drainedWindowedCounts(s, dir, g)
             .withColumnRenamed("window_start_us", "day"))
         .withColumnRenamed("day", "window_start_us"),
     Some("""WITH c AS (
@@ -1670,28 +1560,19 @@ object StreamingQueries {
    * (gaps-and-islands with the OR'd boundary) — `q_run_length`'s shape
    * plus the gap predicate.
    */
-  val qStreamRuns = Q(
+  val qStreamRuns = gate(
     "q_stream_runs",
-    (s, dir) => {
+    (s, dir, g) => {
       import s.implicits._
-      val ev = Tables.events(s, dir).select(col("user_id"), col("event_id"),
-                                            col("ts_us"), col("event_type"),
-                                            col("ts_t"))
-      val inDir = LayoutQueries.derivedDir(s, dir, "stream-runs")
-      ev.coalesce(1).write.mode("overwrite").parquet(inDir)
-      val maxTs = stagedMaxTsUs(s, inDir, ev)
-      Seq((-1L, -1L, maxTs + 1000L * Schemas.SessionGapUs, "zz"))
-        .toDF("user_id", "event_id", "ts_us", "event_type")
-        .withColumn("ts_t", timestamp_micros(col("ts_us")))
-        .coalesce(1).write.mode("append").parquet(inDir)
-      val stream = s.readStream.schema(s.read.parquet(inDir).schema)
-        .parquet(inDir)
+      val stream = g.replay(
+          Tables.events(s, dir).select(col("user_id"), col("event_id"),
+                                       col("ts_us"), col("event_type"),
+                                       col("ts_t")),
+          flush = Map("user_id" -> -1L, "event_id" -> -1L, "event_type" -> "zz"))
         .withColumn("user_id", col("user_id").cast("string"))
         .withWatermark("ts_t", Schemas.SessionGap)
         .as[graft.streaming.RunEvent]
-      runToSink(s, dir,
-                graft.streaming.StatefulRuns.runs(s, stream).toDF(),
-                "graft_q_stream_runs")
+      g.drain(graft.streaming.StatefulRuns.runs(s, stream).toDF())
         .filter(col("user_id") =!= "-1")
         .select(col("user_id").cast("long").as("user_id"),
                 col("run_start_us"), col("run_end_us"), col("event_type"),
@@ -1733,9 +1614,9 @@ object StreamingQueries {
    * projection formulation ≡ the broadcast-join aggregation under the
    * driver's independent replay, not just under the spec's assert.
    */
-  val qStreamQuality = Q(
+  val qStreamQuality = gate(
     "q_stream_quality",
-    (s, dir) => {
+    (s, dir, g) => {
       val weights = CurationQueries.trainQualityWeights(
         Tables.read(s, dir, "documents").filter(col("doc_id") % 5 =!= 4))
       val arrivals = tableStream(s, dir, "documents")
@@ -1747,7 +1628,7 @@ object StreamingQueries {
           CurationQueries.qualityScoreCol(col("text"), weights)
             .as("score_sum"))
         .withColumn("pred_pos", when(col("score_sum") > 0, 1L).otherwise(0L))
-      runToSink(s, dir, scored, "graft_q_stream_quality")
+      g.drain(scored)
     },
     CurationQueries.qQualityClassifier.oracle
   )
@@ -1760,37 +1641,14 @@ object StreamingQueries {
    * quarantine sink with reason codes in the same trigger that parses
    * the good ones. Gate reuses the batch oracle verbatim.
    */
-  val qStreamQuarantine = Q(
+  val qStreamQuarantine = gate(
     "q_stream_quarantine",
-    (s, dir) => {
-      val feedDir = LayoutQueries.derivedDir(s, dir, "stream-quarantine")
-      graft.ingest.FeedSynth.synthLines(
-          distributeBy(Tables.events(s, dir), col("event_id")))
-        .coalesce(1).write.mode("overwrite").text(feedDir)
-      val raw = s.readStream.format("text")
-        .schema("value STRING").load(feedDir)
-      runToSink(s, dir, graft.ingest.HitParser.quarantine(raw),
-                "graft_q_stream_quarantine")
+    (s, dir, g) => {
+      val raw = g.replay(graft.ingest.FeedSynth.synthLines(
+        distributeBy(Tables.events(s, dir), col("event_id"))), "text")
+      g.drain(graft.ingest.HitParser.quarantine(raw))
     },
     IngestQueries.qTsvQuarantine.oracle
-  )
-
-  /**
-   * Intra-document span dedup at ingest — the within-page boilerplate
-   * strip as a stream: [[DedupQueries.intraDocDedup]] is a zero-shuffle
-   * pure projection (no corpus state consulted), so the streaming face
-   * is the batch body applied verbatim per micro-batch — no join, no
-   * state store, no watermark — and the gate reuses the batch oracle
-   * unchanged.
-   */
-  val qStreamIntradoc = Q(
-    "q_stream_intradoc",
-    (s, dir) => {
-      val cleaned = DedupQueries.intraDocDedup(
-        tableStream(s, dir, "documents"))
-      runToSink(s, dir, cleaned, "graft_q_stream_intradoc")
-    },
-    DedupQueries.qIntradocDedup.oracle
   )
 
   /**
@@ -1804,9 +1662,9 @@ object StreamingQueries {
    * oracle verbatim, proving projection ≡ broadcast-join aggregation
    * under the driver's independent replay.
    */
-  val qStreamDsir = Q(
+  val qStreamDsir = gate(
     "q_stream_dsir",
-    (s, dir) => {
+    (s, dir, g) => {
       val w = CurationQueries.trainDsirWeights(s, dir)
       val arrivals = fanOut(tableStream(s, dir, "documents")
         .filter(col("text").isNotNull))
@@ -1816,7 +1674,7 @@ object StreamingQueries {
           size(feats).cast("long").as("n_feats"),
           CurationQueries.dsirScoreCol(feats, w).as("imp_sum"))
         .withColumn("imp_bp", expr("imp_sum div n_feats"))
-      runToSink(s, dir, scored, "graft_q_stream_dsir")
+      g.drain(scored)
     },
     CurationQueries.qDsirWeights.oracle
   )
@@ -1831,9 +1689,9 @@ object StreamingQueries {
    * reproduce every subword of every word (the md5-over-all-subwords
    * hash), not just counts.
    */
-  val qStreamBpe = Q(
+  val qStreamBpe = gate(
     "q_stream_bpe",
-    (s, dir) => {
+    (s, dir, g) => {
       val merges = TextStatsQueries.bpeLearnMerges(
         Tables.read(s, dir, "documents"))
       import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -1848,7 +1706,7 @@ object StreamingQueries {
                 size(col("subs")).cast("long").as("n_subwords"),
                 md5(array_join(col("subs"), TextStatsQueries.BpeSep))
                   .as("subword_hash"))
-      runToSink(s, dir, scored, "graft_q_stream_bpe")
+      g.drain(scored)
     },
     TextStatsQueries.qBpeEncode.oracle
   )
@@ -1861,228 +1719,55 @@ object StreamingQueries {
    * (regex pre-tokenization + the hex-pair merge fixpoint are
    * row-local — no state store). Batch oracle verbatim.
    */
-  val qStreamByteBpe = Q(
+  val qStreamByteBpe = gate(
     "q_stream_byte_bpe",
-    (s, dir) => {
+    (s, dir, g) => {
       val merges = TextStatsQueries.byteBpeLearnMerges(
         TextStatsQueries.byteDocsOf(Tables.read(s, dir, "documents")))
-      runToSink(s, dir,
-        TextStatsQueries.byteBpeEncodedOf(
+      g.drain(TextStatsQueries.byteBpeEncodedOf(
           TextStatsQueries.byteDocsOf(tableStream(s, dir, "documents")),
-          merges),
-        "graft_q_stream_byte_bpe")
+          merges))
     },
     TextStatsQueries.qByteBpeEncode.oracle
   )
 
-  /**
-   * The safety wordlist gate AT INGEST — the blocklist is a broadcast
-   * literal inside a stateless projection ([[WebQueries.safetyFrame]]
-   * applied verbatim per micro-batch), so arriving documents are
-   * reason-coded in the same trigger that lands them: the dead-letter
-   * discipline of [[qStreamQuarantine]] for the curation chain's
-   * safety stage. Batch oracle verbatim.
-   */
-  val qStreamSafety = Q(
-    "q_stream_safety",
-    (s, dir) => runToSink(s, dir,
-      WebQueries.safetyFrame(tableStream(s, dir, "documents")),
-      "graft_q_stream_safety"),
-    WebQueries.qSafetyFilter.oracle
-  )
-
-  /**
-   * Unicode normalization + mojibake repair AT INGEST — the codegen'd
-   * [[graft.expr.MojibakeRepair]]/[[graft.expr.NfcNormalize]]
-   * expressions are pure row functions, so
-   * [[WebQueries.normalizeFrame]] runs per micro-batch unchanged (the
-   * transcode-at-the-front-door posture E1 establishes for bytes,
-   * applied at the codepoint layer). Batch oracle verbatim.
-   */
-  val qStreamNormalize = Q(
-    "q_stream_normalize",
-    (s, dir) => runToSink(s, dir,
-      WebQueries.normalizeFrame(tableStream(s, dir, "documents")),
-      "graft_q_stream_normalize"),
-    WebQueries.qTextNormalize.oracle
-  )
-
-  /**
-   * HTML boilerplate extraction AT INGEST — the crawl front door as a
-   * stream: [[WebQueries.htmlExtractFrame]]'s regex/HOF tree is
-   * stateless per row, so each arriving page extracts in its own
-   * micro-batch with zero state store. Batch oracle verbatim.
-   */
-  val qStreamHtml = Q(
-    "q_stream_html",
-    (s, dir) => runToSink(s, dir,
-      WebQueries.htmlExtractFrame(tableStream(s, dir, "documents")),
-      "graft_q_stream_html"),
-    WebQueries.qHtmlExtract.oracle
-  )
-
-  /**
-   * Weight-based upsampling AT INGEST — the epoch expansion of
-   * `q_upsample_epoch` ([[CurationQueries.upsampleFrame]], shared not
-   * copied) per micro-batch: an arriving document materializes its
-   * ⌊w⌋ + [h < frac(w)] copies and their per-copy permutation keys in
-   * the trigger that lands it. Stateless projection + weight-bounded
-   * explode — append mode, no watermark, no state store. Batch oracle
-   * verbatim.
-   */
-  val qStreamUpsample = Q(
-    "q_stream_upsample",
-    (s, dir) => runToSink(s, dir,
-      CurationQueries.upsampleFrame(tableStream(s, dir, "documents")),
-      "graft_q_stream_upsample"),
-    CurationQueries.qUpsampleEpoch.oracle
-  )
-
-  /**
-   * The composed crawl-admission decision AT INGEST — the whole front
-   * door (extract → normalize → safety → verdict,
-   * [[WebQueries.crawlAdmitFrame]] — shared, not copied) as one
-   * stateless projection chain per micro-batch: an arriving page is
-   * admitted or reason-coded in the trigger that lands it. Batch
-   * oracle verbatim.
-   */
-  val qStreamCrawl = Q(
-    "q_stream_crawl",
-    (s, dir) => runToSink(s, dir,
-      WebQueries.crawlAdmitFrame(tableStream(s, dir, "documents")),
-      "graft_q_stream_crawl"),
-    WebQueries.qCrawlAdmit.oracle
-  )
-
-  /**
-   * WARC container ingestion AT INGEST — the true crawl arrival shape:
-   * a micro-batch of WARC container strings is framed into records,
-   * header-parsed, truncation-quarantined, and boilerplate-extracted
-   * ([[WebQueries.warcExtractFrame]] — shared, not copied) in the
-   * trigger that lands it. Stateless per row (record framing and the
-   * HTTP split are row-local expressions), so append mode with no
-   * state store. Batch oracle verbatim.
-   */
-  val qStreamWarc = Q(
-    "q_stream_warc",
-    (s, dir) => runToSink(s, dir,
-      WebQueries.warcExtractFrame(tableStream(s, dir, "documents")),
-      "graft_q_stream_warc"),
-    WebQueries.qWarcExtract.oracle
-  )
-
-  /**
-   * The COMPLETE crawl ingest AT INGEST — [[qStreamWarc]] composed to
-   * the admission verdict: an arriving WARC container is framed,
-   * truncation-quarantined, extracted, normalized, safety/robots/
-   * license-screened, and every page reason-coded in the trigger that
-   * lands it ([[WebQueries.warcAdmitFrame]] — shared, not copied).
-   * Stateless end to end; append mode, no state store. Batch oracle
-   * verbatim.
-   */
-  val qStreamWarcAdmit = Q(
-    "q_stream_warc_admit",
-    (s, dir) => runToSink(s, dir,
-      WebQueries.warcAdmitFrame(tableStream(s, dir, "documents")),
-      "graft_q_stream_warc_admit"),
-    WebQueries.qWarcAdmit.oracle
-  )
-
-  /**
-   * GZIP WARC ingestion AT INGEST — `.warc.gz` members decoded
-   * row-locally (strict [[graft.expr.GzipDecode]], malformed members
-   * → accountable NULLs) and parsed in the trigger that lands them:
-   * the compressed-arrival shape of [[qStreamWarc]], stateless end to
-   * end. Batch oracle verbatim (the lossless-codec rule).
-   */
-  val qStreamWarcGzip = Q(
-    "q_stream_warc_gzip",
-    (s, dir) => runToSink(s, dir,
-      WebQueries.warcGzipFrame(tableStream(s, dir, "documents")),
-      "graft_q_stream_warc_gzip"),
-    WebQueries.qWarcExtract.oracle
-  )
-
-  /**
-   * Repeated-line boilerplate stripping AT INGEST — the
-   * `q_boilerplate_lines` billing split made literal: the frequent-line
-   * hash set is built OFFLINE on the standing corpus (the bounded
-   * artifact — ≤ BoilerCap 32-byte hashes), then rides the stateless
-   * drop projection as a literal array, so an arriving page is stripped
-   * of corpus-chrome in the trigger that lands it. Batch oracle
-   * verbatim.
-   */
-  val qStreamBoilerplate = Q(
-    "q_stream_boilerplate",
-    (s, dir) => runToSink(s, dir,
-      WebQueries.boilerplateFrame(Tables.read(s, dir, "documents"),
-                                  tableStream(s, dir, "documents")),
-      "graft_q_stream_boilerplate"),
-    WebQueries.qBoilerplateLines.oracle
-  )
-
-  /**
-   * Binary `.warc.gz` FILE ingestion AT INGEST — the landing-dir
-   * shape a real crawl runs: container FILES arrive in a directory,
-   * the binaryFile stream source picks each up whole (one task per
-   * container, the same per-file parallelism as the batch scan), and
-   * the octet-exact member walk + extraction
-   * ([[WebQueries.warcFilesExtract]] — shared, not copied) lands the
-   * pages in the trigger that saw the file. Stateless end to end;
-   * append mode, no state store. Batch oracle verbatim.
-   */
-  val qStreamWarcFiles = Q(
-    "q_stream_warc_files",
-    (s, dir) => runToSink(s, dir,
-      WebQueries.warcFilesExtract(
-        s.readStream.format("binaryFile")
-          // the binaryFile source's FIXED schema, stated explicitly —
-          // file STREAM sources can't infer (the files may not exist
-          // yet when the query is planned)
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("path",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("modificationTime",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField("length",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("content",
-              org.apache.spark.sql.types.BinaryType))))
-          .option("pathGlobFilter", "*.warc.gz")
-          .load(WebQueries.warcFilesDir(s, dir))
-          .select(col("content"))),
-      "graft_q_stream_warc_files"),
-    WebQueries.qWarcFiles.oracle
-  )
-
-  /**
-   * JSONL.gz corpus files as a STREAM — the landing-directory
-   * arrival mode of [[IngestQueries.qJsonlFiles]]: a binaryFile
-   * stream watches the dump directory and the identical parse chain
-   * ([[IngestQueries.jsonlFilesParse]] — shared, not copied) lands
-   * the typed rows in the trigger that saw the file. Stateless end to
-   * end; append mode, no state store. Batch oracle verbatim.
-   */
-  val qStreamJsonlFiles = Q(
-    "q_stream_jsonl_files",
-    (s, dir) => runToSink(s, dir,
-      IngestQueries.jsonlFilesParse(
-        s.readStream.format("binaryFile")
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("path",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("modificationTime",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField("length",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("content",
-              org.apache.spark.sql.types.BinaryType))))
-          .option("pathGlobFilter", "*.jsonl.gz")
-          .load(IngestQueries.jsonlFilesDir(s, dir))
-          .select(col("content"))),
-      "graft_q_stream_jsonl_files"),
-    IngestQueries.qJsonlFiles.oracle
-  )
+  /** The stateless faces: `(stream gate, batch gate, stream frame)`. Each
+    * frame is the batch gate's own frame function applied per
+    * micro-batch: a pure row function or a stateless projection over a
+    * frozen literal (the blocklist, the boilerplate hash set), so it runs
+    * in the trigger that lands the arrival, in append mode, with no join
+    * against the stream, no state store and no watermark. Each stream
+    * gate's oracle is its batch gate's oracle verbatim. The front-door
+    * frames arrive as documents; the `_files` faces watch the staged
+    * container dirs through a binaryFile stream. */
+  private[graft] val faces: Seq[(String, Q, (SparkSession, String) => DataFrame)] = {
+    def docs(f: DataFrame => DataFrame) =
+      (s: SparkSession, dir: String) => f(tableStream(s, dir, "documents"))
+    Seq(
+      ("q_stream_safety", WebQueries.qSafetyFilter, docs(WebQueries.safetyFrame(_))),
+      ("q_stream_normalize", WebQueries.qTextNormalize,
+       docs(WebQueries.normalizeFrame(_))),
+      ("q_stream_html", WebQueries.qHtmlExtract, docs(WebQueries.htmlExtractFrame(_))),
+      ("q_stream_upsample", CurationQueries.qUpsampleEpoch,
+       docs(CurationQueries.upsampleFrame(_))),
+      ("q_stream_crawl", WebQueries.qCrawlAdmit, docs(WebQueries.crawlAdmitFrame(_))),
+      ("q_stream_warc", WebQueries.qWarcExtract, docs(WebQueries.warcExtractFrame(_))),
+      ("q_stream_warc_admit", WebQueries.qWarcAdmit,
+       docs(WebQueries.warcAdmitFrame(_))),
+      // gzip members decode row-locally to the same records (lossless codec)
+      ("q_stream_warc_gzip", WebQueries.qWarcExtract, docs(WebQueries.warcGzipFrame(_))),
+      ("q_stream_boilerplate", WebQueries.qBoilerplateLines,
+       (s, dir) => WebQueries.boilerplateFrame(Tables.read(s, dir, "documents"),
+                                               tableStream(s, dir, "documents"))),
+      ("q_stream_intradoc", DedupQueries.qIntradocDedup,
+       docs(DedupQueries.intraDocDedup(_))),
+      ("q_stream_warc_files", WebQueries.qWarcFiles,
+       (s, dir) => WebQueries.warcFilesExtract(
+         binaryFileStream(s, WebQueries.warcFilesDir(s, dir), "*.warc.gz"))),
+      ("q_stream_jsonl_files", IngestQueries.qJsonlFiles,
+       (s, dir) => IngestQueries.jsonlFilesParse(
+         binaryFileStream(s, IngestQueries.jsonlFilesDir(s, dir), "*.jsonl.gz"))))
+  }
 
   val all: Seq[Q] = Seq(qStreamDecontam, qStreamSessionize, qStreamDedup,
                         qStreamCurate, qStreamSessionizeState, qStreamJoin,
@@ -2093,14 +1778,13 @@ object StreamingQueries {
                         qStreamTfidfJoin, qStreamLeaderboard, qStreamBloom,
                         qStreamAnomaly, qStreamRuns, qStreamSemanticDecontam,
                         qStreamLmScore, qStreamQuality, qStreamBpe,
-                        qStreamDsir, qStreamIntradoc, qStreamQuarantine,
+                        qStreamDsir, qStreamQuarantine,
                         qStreamPhash, qStreamAudioFp, qStreamIndex,
                         qStreamSourceReport,
                         qStreamAnn, qStreamHardNegatives,
                         qStreamAnnProbe, qStreamHardNegativesProbe,
-                        qStreamByteBpe,
-                        qStreamSafety, qStreamNormalize, qStreamHtml,
-                        qStreamUpsample, qStreamBoilerplate, qStreamCrawl,
-                        qStreamWarc, qStreamWarcAdmit, qStreamWarcGzip,
-                        qStreamWarcFiles, qStreamJsonlFiles)
+                        qStreamByteBpe) ++
+    faces.map { case (name, batch, frame) =>
+      gate(name, (s, dir, g) => g.drain(frame(s, dir)), batch.oracle)
+    }
 }

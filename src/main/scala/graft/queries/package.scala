@@ -79,23 +79,6 @@ package object queries {
     else df.repartition(target)
   }
 
-  /** [[fanOut]] keyed: hash-distribute by `keys` at the fan-out target —
-    * for compute-dense stages whose DOWNSTREAM (a key-equi-join, a
-    * clustered aggregate) needs the key partitioning, so the pinned
-    * exchange is also the one the join/aggregate reuses instead of
-    * planting a second planner-managed (and AQE-recoalesced) shuffle.
-    * Same already-wide pass-through and `spark.graft.fanout.parts`
-    * kill-switch as [[fanOut]]. */
-  private[graft] def fanOutBy(df: DataFrame, keys: Column*): DataFrame = {
-    val s = df.sparkSession
-    val target = s.conf.getOption("spark.graft.fanout.parts")
-      .map(_.trim.toInt)
-      .getOrElse(s.sparkContext.defaultParallelism)
-    if (target <= 1) df
-    else if (!df.isStreaming && df.rdd.getNumPartitions >= target) df
-    else df.repartition(target, keys: _*)
-  }
-
   /** `localCheckpoint` at DISK_ONLY — the storage level for CORPUS- or
     * EDGE-scale checkpoints (exploded gram/shingle tables, pair lists,
     * edge frames). Chosen by eliminating the two memory-resident levels

@@ -15,8 +15,8 @@ import graft.sources.Tables
 class PipelineSpec extends SparkSpec {
 
   test("run: feed glob → hits/visits/visitors exports with Beam shard names") {
-    val inDir = Files.createTempDirectory("graft-pipeline-in").toString
-    val outDir = s"${Files.createTempDirectory("graft-pipeline-out")}/exports"
+    val inDir = tempDir("graft-pipeline-in").toString
+    val outDir = s"${tempDir("graft-pipeline-out")}/exports"
     val lines = FeedSynth.synthLines(Tables.events(spark, "/root/testdata/sf0.001"))
     lines.write.mode("overwrite").text(inDir)
     val nIn = lines.count()
@@ -45,9 +45,9 @@ class PipelineSpec extends SparkSpec {
   test("run: an empty and an all-malformed feed give exact counts and the export layout") {
     for ((name, content, want) <- Seq(("empty", "", (0L, 0L)),
                                       ("malformed", "not\ta\thit\n", (1L, 0L)))) {
-      val inDir = Files.createTempDirectory(s"graft-pipeline-$name").toString
+      val inDir = tempDir(s"graft-pipeline-$name").toString
       Files.writeString(Path.of(s"$inDir/feed.tsv"), content)
-      val outDir = Files.createTempDirectory("graft-pipeline-out").toString
+      val outDir = tempDir("graft-pipeline-out").toString
       Files.writeString(Path.of(s"$outDir/sibling.txt"), "kept")
 
       assert(Pipeline.run(spark, s"$inDir/*.tsv", outDir) === want, name)
@@ -65,10 +65,10 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("run with Spark's shard names keeps the part-files' .csv suffix") {
-    val inDir = Files.createTempDirectory("graft-pipeline-sparknames").toString
+    val inDir = tempDir("graft-pipeline-sparknames").toString
     Files.writeString(Path.of(s"$inDir/feed.tsv"),
       "1000\tu\t1\tTRK\t\t1\tpage\tsrv\tibm\tscv\n")
-    val outDir = Files.createTempDirectory("graft-pipeline-sparknames-out").toString
+    val outDir = tempDir("graft-pipeline-sparknames-out").toString
     assert(Pipeline.run(spark, s"$inDir/*.tsv", outDir, beamNames = false) === ((1L, 1L)))
     Exports.Names.foreach { e =>
       val parts = new File(s"$outDir/$e").list()

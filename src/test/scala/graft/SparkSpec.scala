@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session, built
@@ -9,8 +13,22 @@ object SparkSpec {
   lazy val session: SparkSession = Sessions.local()
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  private val scratch = new ConcurrentLinkedQueue[Path]()
+
+  /** A fresh dir under the JVM's tmpdir whose tree is deleted when the
+    * suite ends. */
+  protected def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    scratch.add(d)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try scratch.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
 
   /** Run `body` with AQE off and restore the PRIOR value after:
     * `qe.observedMetrics` cannot see a CollectMetrics node inside an

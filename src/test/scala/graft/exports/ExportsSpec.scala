@@ -37,7 +37,7 @@ class ExportsSpec extends SparkSpec {
     spark.read.text(dir).collect().map(_.getString(0)).toSeq.sorted
 
   test("writeAll: three sharded CSV dirs, row counts consistent") {
-    val dir = Files.createTempDirectory("graft-exports").toString
+    val dir = tempDir("graft-exports").toString
     Exports.writeAll(parsed, dir)
     val hits = spark.read.csv(s"$dir/hits")
     val visits = spark.read.csv(s"$dir/visits")
@@ -52,8 +52,8 @@ class ExportsSpec extends SparkSpec {
   }
 
   test("writeAll's exports equal the per-export frames written as CSV, line for line") {
-    val all = Files.createTempDirectory("graft-exports-all").toString
-    val ref = Files.createTempDirectory("graft-exports-ref").toString
+    val all = tempDir("graft-exports-all").toString
+    val ref = tempDir("graft-exports-ref").toString
     Exports.writeAll(tricky, all)
     Exports.hitsFrame(tricky).write.csv(s"$ref/hits")
     Exports.visitsFrame(tricky).write.csv(s"$ref/visits")
@@ -101,7 +101,7 @@ class ExportsSpec extends SparkSpec {
         Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
           .foreach(markers.add)
     }
-    val dir = Files.createTempDirectory("graft-exports-onejob").toString
+    val dir = tempDir("graft-exports-onejob").toString
     spark.catalog.clearCache()
     sc.addSparkListener(listener)
     try {
@@ -118,7 +118,7 @@ class ExportsSpec extends SparkSpec {
   }
 
   test("a job failing inside writeAll keeps the previous exports and leaves no staging") {
-    val dir = Files.createTempDirectory("graft-exports-fail").toString
+    val dir = tempDir("graft-exports-fail").toString
     Exports.writeAll(tricky, dir)
     val before = Exports.Names.map(e => lines(s"$dir/$e"))
     val poisoned = tricky.withColumn("page",
@@ -146,8 +146,8 @@ class ExportsSpec extends SparkSpec {
   test("transcodeFeed: gzip ISO-8859-1 in, gzip UTF-8 out (encoding_update.py parity)") {
     import java.io.{FileOutputStream, OutputStreamWriter}
     import java.util.zip.{GZIPInputStream, GZIPOutputStream}
-    val in = Files.createTempDirectory("graft-transcode-in").toString
-    val out = s"${Files.createTempDirectory("graft-transcode-out")}/feeds"
+    val in = tempDir("graft-transcode-in").toString
+    val out = s"${tempDir("graft-transcode-out")}/feeds"
     val line = "1000\tu\tv\tTRK\t\t2\tcafé\tsrv\ti\ts"
     val w = new OutputStreamWriter(
       new GZIPOutputStream(new FileOutputStream(s"$in/feed.tsv.gz")), "ISO-8859-1")
@@ -169,8 +169,8 @@ class ExportsSpec extends SparkSpec {
   test("transcodeFeed fails on sentinel-tainted input and deletes the partial output") {
     import java.io.{FileOutputStream, OutputStreamWriter}
     import java.util.zip.GZIPOutputStream
-    val in = Files.createTempDirectory("graft-taint-in").toString
-    val out = s"${Files.createTempDirectory("graft-taint-out")}/feeds"
+    val in = tempDir("graft-taint-in").toString
+    val out = s"${tempDir("graft-taint-out")}/feeds"
     val w = new OutputStreamWriter(
       new GZIPOutputStream(new FileOutputStream(s"$in/feed.tsv.gz")), "UTF-8")
     try w.write("good\tline\nbad\u0001line") finally w.close()
@@ -181,7 +181,7 @@ class ExportsSpec extends SparkSpec {
   }
 
   test("beamShardNames renames part-files to <prefix>-SSSSS-of-NNNNN") {
-    val dir = Files.createTempDirectory("graft-shardnames").toString
+    val dir = tempDir("graft-shardnames").toString
     Exports.visitsFrame(parsed).repartition(3)
       .write.mode("overwrite").csv(s"$dir/visits")
     val names = Exports.beamShardNames(spark, s"$dir/visits", "visits.csv")
@@ -195,7 +195,7 @@ class ExportsSpec extends SparkSpec {
   }
 
   test("beamShardNames orders shards numerically, not lexicographically") {
-    val dir = Files.createTempDirectory("graft-shardnum").toString
+    val dir = tempDir("graft-shardnum").toString
     // "part-100000" < "part-99999" as strings — the shard index must
     // follow the numeric task id regardless
     java.nio.file.Files.writeString(

@@ -560,6 +560,37 @@ class SqlSurfaceSpec extends SparkSpec {
       CurationQueries.pretrainCorpusOf(pDocs).collect().toSet)
   }
 
+  test("graft_temperature_mixture and graft_mixture_sample resolve and explain without running a job") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("-"))
+    }
+    (0L until 30L).map(i => (i, s"doc $i", if (i < 27) "en" else "de"))
+      .toDF("doc_id", "text", "lang").createOrReplaceTempView("tmix_nojob")
+    sc.addSparkListener(listener)
+    try {
+      for (tvf <- Seq("graft_temperature_mixture('tmix_nojob', 'lang')",
+                      "graft_mixture_sample('tmix_nojob', 'lang', 'en:90,de:10')")) {
+        spark.sql(s"SELECT * FROM $tvf").queryExecution.explainString(
+          org.apache.spark.sql.execution.ExtendedMode)
+        spark.sql(s"EXPLAIN SELECT * FROM $tvf").collect()
+      }
+      // the bus delivers in order: once the marker job is seen, so is
+      // every job that started before it
+      sc.setJobGroup("tmix-nojob-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      def next() = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      var seen = List.empty[String]
+      var g = next()
+      while (g != null && g != "tmix-nojob-end") { seen ::= g; g = next() }
+      assert(g === "tmix-nojob-end", "marker job not seen")
+      assert(seen.isEmpty, s"jobs ran while the TVF resolved: $seen")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("table functions reject non-constant and missing arguments") {
     trades.createOrReplaceTempView("trades")
     quotes.createOrReplaceTempView("quotes")

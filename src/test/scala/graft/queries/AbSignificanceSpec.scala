@@ -8,7 +8,7 @@ class AbSignificanceSpec extends SparkSpec {
   import spark.implicits._
 
   private def run(rows: Seq[(Long, String)]) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ab").toString
+    val dir = tempDir("graft-ab").toString
     rows.zipWithIndex.map { case ((user, ty), i) =>
       (i.toLong, java.sql.Timestamp.valueOf("2024-01-01 12:00:00"),
        user, ty, 1.0, "{\"k\": 1}")

@@ -20,7 +20,7 @@ class ArtifactMemoSpec extends SparkSpec {
   /** Run `body` on a fresh, writable copy of the sf0.001 tables (its
     * own memo keys), deleted afterwards. */
   private def withSfCopy(body: String => Unit): Unit = {
-    val d = Files.createTempDirectory("graft-memo-sf")
+    val d = tempDir("graft-memo-sf")
     try {
       Files.list(Paths.get(Sf)).forEach(p => Files.copy(p, d.resolve(p.getFileName)))
       body(d.toString)
@@ -32,7 +32,7 @@ class ArtifactMemoSpec extends SparkSpec {
     * a build in this test can have written. */
   private def rewrite(dir: String, table: String, keep: Column): Unit = {
     val target = Paths.get(dir, s"$table.parquet")
-    val tmp = Files.createTempDirectory("graft-memo-rw")
+    val tmp = tempDir("graft-memo-rw")
     try {
       spark.read.parquet(target.toString).filter(keep)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)

@@ -9,7 +9,7 @@ class AttributionSpec extends SparkSpec {
   import spark.implicits._
 
   private def run(q: Q, rows: Seq[(Long, Long, Long, String)]) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
+    val dir = tempDir("graft-attr").toString
     rows.toDF("event_id", "user_id", "ts_us", "event_type")
       .withColumn("ts", org.apache.spark.sql.functions
         .timestamp_micros($"ts_us"))

@@ -35,7 +35,7 @@ class BackfillSpec extends SparkSpec {
     (1 to 4).map(d => (f"2024-01-0$d", n(d))).toDF("day", "v")
 
   test("dynamic overwrite replaces targeted partitions and leaves others' files alone") {
-    val dir = Files.createTempDirectory("graft-backfill").toString
+    val dir = tempDir("graft-backfill").toString
     writeDaily(table(d => d.toLong * 10), dir, dynamic = false)
     val before = files(dir, "2024-01-01")
     assert(before.nonEmpty)
@@ -51,7 +51,7 @@ class BackfillSpec extends SparkSpec {
   }
 
   test("static overwrite is the failure mode: it deletes the untouched partitions") {
-    val dir = Files.createTempDirectory("graft-backfill-static").toString
+    val dir = tempDir("graft-backfill-static").toString
     writeDaily(table(d => d.toLong * 10), dir, dynamic = false)
     writeDaily(table(d => d.toLong * 100).filter($"day" >= "2024-01-03"),
                dir, dynamic = false)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -23,7 +22,7 @@ class BandIndexSpec extends SparkSpec {
   }
 
   test("probe: corpus near-dup dies, novel survives, batch-internal larger id dies") {
-    val out = Files.createTempDirectory("graft-band-idx").toString
+    val out = tempDir("graft-band-idx").toString
     val corpus = Seq((1L, text("c"))).toDF("doc_id", "text")
     DedupQueries.writeBandIndex(corpus, out)
     val batch = Seq(
@@ -37,7 +36,7 @@ class BandIndexSpec extends SparkSpec {
   }
 
   test("append: a survivor's signatures become frozen state for the next batch") {
-    val out = Files.createTempDirectory("graft-band-idx2").toString
+    val out = tempDir("graft-band-idx2").toString
     DedupQueries.writeBandIndex(
       Seq((1L, text("c"))).toDF("doc_id", "text"), out)
     val batch1 = Seq((10L, text("n"))).toDF("doc_id", "text")

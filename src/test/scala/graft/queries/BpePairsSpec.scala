@@ -15,7 +15,7 @@ class BpePairsSpec extends SparkSpec {
     // reuse the query body via a throwaway parquet-free path: the Q fn
     // reads testdata, so re-derive with the same expressions here —
     // instead, exercise the full operator through a temp dir
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
+    val dir = tempDir("bpe").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     TextStatsQueries.qBpePairs.fn(spark, dir)
       .select(col("pair"), col("cnt")).as[(String, Long)].collect().toMap

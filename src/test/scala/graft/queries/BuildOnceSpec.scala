@@ -11,7 +11,7 @@ import graft.SparkSpec
 class BuildOnceSpec extends SparkSpec {
 
   private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("builds once while the source is unchanged; rebuilds on source change") {
     val src = tmpDir("bo-src")

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -14,7 +13,7 @@ class CanonicalCorpusSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-canon").toString
+    val d = tempDir("graft-canon").toString
     Seq(
       // exact-dup component (case variants normalize equal): the FULL
       // copy (500 chars) has the larger id — the production case

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions.col
 
@@ -18,7 +17,7 @@ class ClusterAppendSpec extends SparkSpec {
     * arrivals = fresh ids near axis X or axis Y, plus one zero vector
     * (no direction — must still be assigned deterministically). */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-cl-append").toString
+    val d = tempDir("graft-cl-append").toString
     def axis(k: Int): Seq[Float] =
       Seq.tabulate(16)(i => if (i >= 5 * k && i < 5 * k + 5) 1.0f else 0.0f)
     def near(base: Seq[Float], j: Int): Seq[Float] =
@@ -50,7 +49,7 @@ class ClusterAppendSpec extends SparkSpec {
   }
 
   private def buildAndAppend(): String = {
-    val out = Files.createTempDirectory("graft-cl-app-out").toString
+    val out = tempDir("graft-cl-app-out").toString
     SimQueries.writeClustersOf(e, out)
     SimQueries.appendToClusters(spark, out, arrivals)
     out

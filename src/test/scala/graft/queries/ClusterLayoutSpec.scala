@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -19,7 +18,7 @@ class ClusterLayoutSpec extends SparkSpec {
   /** Three orthogonal clusters (the SimIvfSpec dir3 fixture): X =
     * {0..5, 100}, Y = {200..205, 300}, Z = {400..405}. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-cluster-layout").toString
+    val d = tempDir("graft-cluster-layout").toString
     def axis(k: Int): Seq[Float] =
       Seq.tabulate(16)(i => if (i >= 5 * k && i < 5 * k + 5) 1.0f else 0.0f)
     def near(base: Seq[Float], j: Int): Seq[Float] =
@@ -39,7 +38,7 @@ class ClusterLayoutSpec extends SparkSpec {
   private lazy val e = SimQueries.quantizedFrame(spark, dir)
 
   test("probe through the layout ≡ from-scratch cluster membership; scan is pruned, shuffle-free") {
-    val out = Files.createTempDirectory("graft-cl-out").toString
+    val out = tempDir("graft-cl-out").toString
     SimQueries.writeClustersOf(e, out)
     val labels = SimQueries.semanticClustersOf(e)
       .as[(Long, Long)].collect().toMap
@@ -66,7 +65,7 @@ class ClusterLayoutSpec extends SparkSpec {
   }
 
   test("sample through the layout ≡ from-scratch balanced sample") {
-    val out = Files.createTempDirectory("graft-cl-sample").toString
+    val out = tempDir("graft-cl-sample").toString
     SimQueries.writeClustersOf(e, out)
     val stored = SimQueries.clusterSampleFromLayout(spark, out)
       .as[(Long, Long, Long)].collect().toSet
@@ -76,7 +75,7 @@ class ClusterLayoutSpec extends SparkSpec {
   }
 
   test("every vector lands in the layout exactly once, each cluster in one bucket") {
-    val out = Files.createTempDirectory("graft-cl-inv").toString
+    val out = tempDir("graft-cl-inv").toString
     SimQueries.writeClustersOf(e, out)
     val members = spark.read.parquet(s"$out/members")
     assert(members.count() === e.count())
@@ -88,7 +87,7 @@ class ClusterLayoutSpec extends SparkSpec {
   }
 
   test("stored centroids are the members' per-dimension floor-mean; staleness is tight") {
-    val out = Files.createTempDirectory("graft-cl-cent").toString
+    val out = tempDir("graft-cl-cent").toString
     SimQueries.writeClustersOf(e, out)
     val members = spark.read.parquet(s"$out/members")
       .select("cluster_id", "vec_id", "q")
@@ -120,7 +119,7 @@ class ClusterLayoutSpec extends SparkSpec {
   }
 
   test("probing a vec_id absent from the layout fails loudly, not with NoSuchElement") {
-    val out = Files.createTempDirectory("graft-cl-miss").toString
+    val out = tempDir("graft-cl-miss").toString
     SimQueries.writeClustersOf(e, out)
     val err = intercept[IllegalArgumentException] {
       SimQueries.probeClusters(spark, out, vecId = 999999L)
@@ -152,7 +151,7 @@ class ClusterLayoutSpec extends SparkSpec {
     try {
       drainTo("cluster-group-start")
       for (g <- Seq("cluster-build-a", "cluster-build-b")) {
-        val out = Files.createTempDirectory("graft-cl-group").toString
+        val out = tempDir("graft-cl-group").toString
         underGroup(g)(SimQueries.writeClustersOf(e, out))
         val seen = drainTo(s"$g-end")
         assert(seen.nonEmpty)
@@ -168,7 +167,7 @@ class ClusterLayoutSpec extends SparkSpec {
     val big = (0L until 1200L).map(i =>
         (i, (i % 7).toInt, Seq.tabulate(8)(d => ((i * 31 + d * 17) % 50) - 25)))
       .toDF("vec_id", "label", "q")
-    val out = Files.createTempDirectory("graft-cl-rg").toString
+    val out = tempDir("graft-cl-rg").toString
     val hconf = spark.sparkContext.hadoopConfiguration
     // tiny row groups AND an eager size check: the writer only
     // evaluates block.size every row.check.min records, so small files

@@ -10,7 +10,7 @@ class CompactFilesSpec extends SparkSpec {
   import spark.implicits._
 
   test("file count is ceil(bytes/target), files land, content survives byte-exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact").toString
     // a deliberately fragmented table: 20 files for ~2k rows
     val d = (1L to 2000L).map(i => (i, s"row $i payload ${"x" * 50}"))
       .toDF("id", "payload")
@@ -33,7 +33,7 @@ class CompactFilesSpec extends SparkSpec {
   }
 
   test("tiny input compacts to exactly one file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact1").toString
+    val dir = tempDir("graft-compact1").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .repartition(5).write.mode("overwrite").parquet(s"$dir/frag")
     val n = LayoutQueries.compactTo(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -13,7 +12,7 @@ class CurationQueriesSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-curation").toString
+    val d = tempDir("graft-curation").toString
     Seq(
       (0L, "spam spam spam spam spam spam", "en", "s", 29L),   // degenerate
       (1L, "the quick brown fox jumps over a lazy dog", "en", "s", 41L),
@@ -142,7 +141,7 @@ class CurationQueriesSpec extends SparkSpec {
     * not an exact dup. Their content buckets are 8 (val) and 6 (train):
     * the plain hash split provably scatters them across the boundary. */
   private lazy val clusterDir: String = {
-    val d = Files.createTempDirectory("graft-splitcluster").toString
+    val d = tempDir("graft-splitcluster").toString
     Seq(
       (10L, "alpha beta gamma alpha beta gamma", "en", "s", 33L),
       (11L, "alpha beta gamma alpha beta gamma alpha beta gamma", "en", "s", 50L),
@@ -179,7 +178,7 @@ class CurationQueriesSpec extends SparkSpec {
   }
 
   test("q_upsample_epoch: exact integer copy counts, bounded fanout, per-copy keys") {
-    val d = Files.createTempDirectory("graft-upsample").toString
+    val d = tempDir("graft-upsample").toString
     // h = first-32-md5('upsample:'+id) mod 1000, precomputed:
     // 0→214, 1→53, 2→549, 3→294, 4→811, 5→212, 6→629, 7→763
     Seq((0L, "a b", "de"), (2L, "c d", "de"),   // 2500: 3 and 2 copies

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 
@@ -16,7 +15,7 @@ class DedupQueriesSpec extends SparkSpec {
   /** Planted corpus: 0 and 1 identical (modulo case/whitespace); 2 and 3
     * near-identical (one token changed in 12); 4 unrelated. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-dedup").toString
+    val d = tempDir("graft-dedup").toString
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     Seq(
       (0L, base, "en", "s0", base.length.toLong),
@@ -40,7 +39,7 @@ class DedupQueriesSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, dir)
 
   test("q_dedup_clusters: a corpus with zero candidate pairs is all singletons (empty-edge regression)") {
-    val d = Files.createTempDirectory("graft-nodups").toString
+    val d = tempDir("graft-nodups").toString
     // four documents sharing no 3-gram shingles at all
     Seq(
       (0L, "aa bb cc dd ee ff gg hh", "en", "s", 10L),
@@ -345,7 +344,7 @@ class DedupQueriesSpec extends SparkSpec {
   }
 
   test("q_simhash_pairs: a degenerate corpus of 1000 identical docs completes via the skew guard") {
-    val d = Files.createTempDirectory("graft-skew").toString
+    val d = tempDir("graft-skew").toString
     val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     (0L until 1000L).map(i => (i, text, "en", "s", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

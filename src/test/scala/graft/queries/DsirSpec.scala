@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -20,7 +19,7 @@ class DsirSpec extends SparkSpec {
   private val vocabB = Seq("qq1", "qq2", "qq3", "junk4", "junk5", "junk6")
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-dsir").toString
+    val d = tempDir("graft-dsir").toString
     val target = (0L until 20L).map { i =>
       (i, (vocabA ++ vocabA).mkString(" "), "en", "web", 10L)
     }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -22,7 +21,7 @@ class ExactOverlapSpec extends SparkSpec {
     "red orange yellow green blue indigo violet black white gray brown pink gold"
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-overlap").toString
+    val d = tempDir("graft-overlap").toString
     val rows =
       (0L until 30L).map(i => (i, s"$body13 tail$i")) ++
         (100L until 120L).map(i => (i, s"$body12 tail$i")) ++

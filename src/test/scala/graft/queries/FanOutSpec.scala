@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions.col
-
 import graft.SparkSpec
 
 /** Round-21 fan-out helper semantics: widen a narrow compute-dense frame
@@ -41,17 +39,6 @@ class FanOutSpec extends SparkSpec {
       assert(fanOut(d) eq d)
       spark.conf.set(key, "3")
       assert(parts(fanOut(d)) === 3)
-      assert(parts(fanOutBy(d, col("doc_id"))) === 3)
     } finally spark.conf.unset(key)
-  }
-
-  test("fanOutBy establishes the keyed partitioning a downstream join reuses") {
-    val target = spark.sparkContext.defaultParallelism
-    val d = (0L until 100L).map(i => (i, i % 7)).toDF("id", "k").coalesce(1)
-    val w = fanOutBy(d, col("k"))
-    assert(parts(w) === target)
-    // same key, same rows per key — the hash distribution is total
-    assert(w.groupBy("k").count().as[(Long, Long)].collect().sortBy(_._1) ===
-             d.groupBy("k").count().as[(Long, Long)].collect().sortBy(_._1))
   }
 }

@@ -85,7 +85,7 @@ class HierQuantizerSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val cap = SimQueries.HierGateCap
     val qz = SimQueries.trainCellQuantizer(e, cap)
-    val out = java.nio.file.Files.createTempDirectory("graft-qz-lay").toString
+    val out = tempDir("graft-qz-lay").toString
     SimQueries.writeQuantizerLayout(spark, qz, out)
     val stored = SimQueries.assignCells(
       e.select(col("vec_id"), col("q")),

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -16,7 +15,7 @@ class IndexLayoutSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-index-layout").toString
+    val d = tempDir("graft-index-layout").toString
     val docs = Seq(
       (1L, "alpha beta gamma alpha"),
       (2L, "beta delta"),
@@ -29,7 +28,7 @@ class IndexLayoutSpec extends SparkSpec {
   }
 
   test("probe through the layout ≡ from-scratch index row; scan is pruned, shuffle-free") {
-    val out = Files.createTempDirectory("graft-idx-out").toString
+    val out = tempDir("graft-idx-out").toString
     LayoutQueries.writeIndex(spark, dir, out)
     // probe 'alpha' explicitly (the gate derives its term from data;
     // here the fixture is ours, so pin the interesting multi-doc term)

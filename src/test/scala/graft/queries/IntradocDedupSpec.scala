@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -18,7 +17,7 @@ class IntradocDedupSpec extends SparkSpec {
   private val b = span("b")
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-intradoc").toString
+    val d = tempDir("graft-intradoc").toString
     Seq(
       // A B A: the second A is a within-doc repeat
       (0L, s"$a $b $a", "en", "web", 10L),

@@ -10,7 +10,7 @@ class JsonExtractSpec extends SparkSpec {
   import spark.implicits._
 
   private def run(rows: Seq[(String, String)]) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-json").toString
+    val dir = tempDir("graft-json").toString
     rows.zipWithIndex.map { case ((ty, props), i) =>
       (i.toLong, java.sql.Timestamp.valueOf("2024-01-01 12:00:00"),
        i.toLong, ty, 1.0, props)

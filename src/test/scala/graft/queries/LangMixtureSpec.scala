@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -15,7 +14,7 @@ class LangMixtureSpec extends SparkSpec {
   private val bTok = (1 to 10).map(i => s"blangword$i")
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-langmix").toString
+    val d = tempDir("graft-langmix").toString
     val mono =
       (0L until 20L).map(i => (i, Seq.fill(4)(aTok).flatten.mkString(" "), "aa")) ++
         (100L until 120L).map(i => (i, Seq.fill(4)(bTok).flatten.mkString(" "), "bb"))

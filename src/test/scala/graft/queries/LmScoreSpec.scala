@@ -8,7 +8,7 @@ class LmScoreSpec extends SparkSpec {
   import spark.implicits._
 
   test("familiarity is the exact mean of floored bigram conditionals") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lm").toString
+    val dir = tempDir("graft-lm").toString
     Seq(
       (1L, "a b a b"),  // bigrams (a,b) (b,a) (a,b)
       (2L, "a b"),

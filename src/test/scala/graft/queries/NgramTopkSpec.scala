@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -14,7 +13,7 @@ class NgramTopkSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val fixtureDir: String = {
-    val dir = Files.createTempDirectory("graft-ngram-topk").toString
+    val dir = tempDir("graft-ngram-topk").toString
     // "a b" x4 (two docs), "b c" x2, then singleton grams; with K≥2 the
     // planted counts force a tie band at cnt=2
     Seq(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -16,7 +15,7 @@ class PhraseIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-phrase-index").toString
+    val d = tempDir("graft-phrase-index").toString
     val docs = Seq(
       (1L, "alpha beta gamma alpha beta"), // phrase at 0 and 3
       (2L, "beta alpha"),                  // both terms, never adjacent
@@ -37,7 +36,7 @@ class PhraseIndexSpec extends SparkSpec {
   }
 
   test("each term side reads ONE pruned bucket with the term filter pushed") {
-    val out = Files.createTempDirectory("graft-phrase-out").toString
+    val out = tempDir("graft-phrase-out").toString
     LayoutQueries.writePhraseIndex(spark, dir, out)
     val t = "alpha"
     val probe = spark.read.parquet(s"$out/pos")

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -14,7 +13,7 @@ class PrioritySampleSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeDocs(n: Int): String = {
-    val d = Files.createTempDirectory("graft-prio").toString
+    val d = tempDir("graft-prio").toString
     (0 until n).map { i =>
       (i.toLong, s"doc body number $i with words", "en", "web",
        (10 + 7 * (i % 13)).toLong) // varied positive weights

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -22,7 +21,7 @@ class QualityClassifierSpec extends SparkSpec {
   private val bad = Seq("zz1", "zz2", "zz3", "spam4", "spam5", "spam6")
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-qc").toString
+    val d = tempDir("graft-qc").toString
     val ref = (0L until 40L).filter(_ % 5 != 4).map { i =>
       if (i % 2 == 0) (i, (good ++ good).mkString(" "), "en", "web", 10L)
       else (i, (bad ++ bad).mkString(" "), "de", "web", 10L)

@@ -9,7 +9,7 @@ class RunLengthSpec extends SparkSpec {
   import spark.implicits._
 
   test("runs split on value change, not time; ties order by event_id") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rle").toString
+    val dir = tempDir("graft-rle").toString
     Seq(
       // user 1: A A B A — three runs despite wildly uneven time gaps
       (1L, 1L, 0L, "A"), (2L, 1L, 999999999L, "A"),

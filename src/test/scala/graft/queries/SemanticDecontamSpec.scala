@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -11,7 +10,7 @@ class SemanticDecontamSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-semdecon").toString
+    val d = tempDir("graft-semdecon").toString
     def axis(k: Int): Seq[Float] =
       Seq.tabulate(16)(i => if (i >= 5 * k && i < 5 * k + 5) 1.0f else 0.0f)
     // eval ids are % 5 == 4: 4 (axis-0 — the "leaked" eval doc), 9
@@ -37,7 +36,7 @@ class SemanticDecontamSpec extends SparkSpec {
   test("pairs orient train->eval regardless of id order") {
     // train ids 0..3 < eval id 4 here; also plant a HIGH train id
     // against a LOW eval id to pin orientation
-    val d = Files.createTempDirectory("graft-semdecon2").toString
+    val d = tempDir("graft-semdecon2").toString
     def axis(k: Int): Seq[Float] =
       Seq.tabulate(16)(i => if (i >= 5 * k && i < 5 * k + 5) 1.0f else 0.0f)
     // id 200 doubles as the stride seed (ivfSeeds keeps multiples of

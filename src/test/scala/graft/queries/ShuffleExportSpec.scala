@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -15,7 +14,7 @@ class ShuffleExportSpec extends SparkSpec {
   private val nDocs = 500
 
   private lazy val fixtureDir: String = {
-    val dir = Files.createTempDirectory("graft-shuffle-export").toString
+    val dir = tempDir("graft-shuffle-export").toString
     (0 until nDocs).map(i => (i.toLong, s"doc number $i"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -64,7 +63,7 @@ class ShuffleExportSpec extends SparkSpec {
     assert(m === manifest(fixtureDir), "re-derived manifest is identical")
     // mutate ONE document's content (same ids ⇒ same permutation): only
     // that doc's shard checksum may change, every other row is identical
-    val dir2 = Files.createTempDirectory("graft-manifest2").toString
+    val dir2 = tempDir("graft-manifest2").toString
     (0 until nDocs).map(i =>
         (i.toLong, if (i == 123) "tampered payload" else s"doc number $i"))
       .toDF("doc_id", "text")

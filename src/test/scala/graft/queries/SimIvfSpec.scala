@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -13,7 +12,7 @@ class SimIvfSpec extends SparkSpec {
   /** Two orthogonal clusters whose centroids sit at the deterministic
     * centroid ids (0, 200); query id 100 belongs to cluster X. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-ivf").toString
+    val d = tempDir("graft-ivf").toString
     val ex = Seq.fill(8)(1.0f) ++ Seq.fill(8)(0.0f) // cluster X direction
     val ey = Seq.fill(8)(0.0f) ++ Seq.fill(8)(1.0f) // cluster Y direction
     def near(base: Seq[Float], k: Int): Seq[Float] =
@@ -43,7 +42,7 @@ class SimIvfSpec extends SparkSpec {
     * subset, so routing is load-bearing (with two cells, nprobe=2 would
     * trivially find everything). */
   private lazy val dir3: String = {
-    val d = Files.createTempDirectory("graft-ivf3").toString
+    val d = tempDir("graft-ivf3").toString
     def axis(k: Int): Seq[Float] =
       Seq.tabulate(16)(i => if (i >= 5 * k && i < 5 * k + 5) 1.0f else 0.0f)
     def near(base: Seq[Float], j: Int): Seq[Float] =
@@ -73,7 +72,7 @@ class SimIvfSpec extends SparkSpec {
   }
 
   test("ivfTrain: trained centroid is the members' per-dimension FLOOR-mean (incl. negatives)") {
-    val d = Files.createTempDirectory("graft-ivf-lloyd").toString
+    val d = tempDir("graft-ivf-lloyd").toString
     // all three vectors land in the single seed cell (vec_id 0); the
     // trained centroid must floor-average them per dimension:
     // dim0: (-1000 - 900 - 351)/3 = -750.33… → FLOOR −751 (truncation
@@ -91,7 +90,7 @@ class SimIvfSpec extends SparkSpec {
   test("IVF layout: probe prunes to nprobe cell partitions and matches the in-memory ranking") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.functions.col
-    val out = Files.createTempDirectory("graft-ivf-layout").toString
+    val out = tempDir("graft-ivf-layout").toString
     SimQueries.writeIvfLayout(spark, dir3, out)
     val qv = SimQueries.quantizedFrame(spark, dir3)
       .filter(col("vec_id") === 100L).select("q").as[Seq[Long]].head()
@@ -115,8 +114,8 @@ class SimIvfSpec extends SparkSpec {
   test("incremental append: probe over build ∪ append ≡ probe over full rebuild") {
     import org.apache.spark.sql.functions.col
     val e = SimQueries.quantizedFrame(spark, dir3)
-    val incDir = Files.createTempDirectory("graft-ivf-inc").toString
-    val fullDir = Files.createTempDirectory("graft-ivf-reb").toString
+    val incDir = tempDir("graft-ivf-inc").toString
+    val fullDir = tempDir("graft-ivf-reb").toString
     // build without one member per cluster, then append exactly those —
     // in-distribution growth against frozen centroids
     val newIds = Seq(5L, 205L, 405L)
@@ -139,7 +138,7 @@ class SimIvfSpec extends SparkSpec {
   test("ivfStaleness: flat under in-distribution appends, rises under drift") {
     import org.apache.spark.sql.functions.{avg, col}
     val e = SimQueries.quantizedFrame(spark, dir3)
-    val d = Files.createTempDirectory("graft-ivf-stale").toString
+    val d = tempDir("graft-ivf-stale").toString
     SimQueries.writeIvfLayoutOf(e, d)
     def overallDist: Double = SimQueries.ivfStaleness(spark, d)
       .agg(avg("mean_cos_dist")).head().getDouble(0)
@@ -183,7 +182,7 @@ class SimIvfSpec extends SparkSpec {
     * (A 151, B 15, C 12 members) — seed ids 0/200/400 land one per
     * cluster, Lloyd must keep the small clusters' cells distinct. */
   private lazy val dirSkew: String = {
-    val d = Files.createTempDirectory("graft-ivf-skew").toString
+    val d = tempDir("graft-ivf-skew").toString
     def axis(k: Int): Seq[Float] =
       Seq.tabulate(16)(i => if (i >= 5 * k && i < 5 * k + 5) 1.0f else 0.0f)
     def near(base: Seq[Float], j: Int): Seq[Float] =

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -21,7 +20,7 @@ class SimLshGuardSpec extends SparkSpec {
   /** 60 vectors, 16 dims, every coordinate in (0, 2] — strictly positive,
     * so every raw sign bucket is 0xFF. Deterministic coords (no RNG). */
   private lazy val uncenteredDir: String = {
-    val d = Files.createTempDirectory("graft-lsh-guard").toString
+    val d = tempDir("graft-lsh-guard").toString
     (0L until 60L).map { i =>
       val v = Seq.tabulate(16)(j => 0.05f + ((i * 7 + j * 13) % 40) * 0.05f)
       (i, v, (i % 3).toInt)

@@ -8,7 +8,7 @@ class SourceReportSpec extends SparkSpec {
   import spark.implicits._
 
   test("per-source duplication accounting is exact, null text never inflates it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-srcrep").toString
+    val dir = tempDir("graft-srcrep").toString
     Seq(
       (1L, "x y", "en", "A", 3L),
       (2L, "  X  y ", "en", "A", 7L),   // normalized dup of doc 1

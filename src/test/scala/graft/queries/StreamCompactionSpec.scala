@@ -26,8 +26,7 @@ class StreamCompactionSpec extends SparkSpec {
         ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
 
   test("a torn stream compaction is INVISIBLE; completing the commit publishes it whole") {
-    val layout = java.nio.file.Files
-      .createTempDirectory("graft-stream-compact").toString
+    val layout = tempDir("graft-stream-compact").toString
 
     // micro-batch 1 compacts and COMMITS → version 1
     LayoutQueries.compactStreamSink(
@@ -75,8 +74,7 @@ class StreamCompactionSpec extends SparkSpec {
   }
 
   test("posting-prefix merge stays capped and exact through compaction") {
-    val layout = java.nio.file.Files
-      .createTempDirectory("graft-stream-compact2").toString
+    val layout = tempDir("graft-stream-compact2").toString
     val cap = TextStatsQueries.PostingsCap
     // two batches whose doc ids interleave: the merged prefix must be
     // the smallest `cap` of the UNION (the containment argument)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -20,7 +19,7 @@ class StreamProbeSpec extends SparkSpec {
   /** The SimIvfSpec two-cluster corpus: X members near vec 0, Y members
     * near vec 200 — cell membership is known by construction. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-sprobe").toString
+    val d = tempDir("graft-sprobe").toString
     val ex = Seq.fill(8)(1.0f) ++ Seq.fill(8)(0.0f)
     val ey = Seq.fill(8)(0.0f) ++ Seq.fill(8)(1.0f)
     def near(base: Seq[Float], k: Int): Seq[Float] =
@@ -35,7 +34,7 @@ class StreamProbeSpec extends SparkSpec {
 
   test("probeIvfLayoutBatch prunes to the arriving cells' partitions") {
     import graft.vector.VectorOps
-    val out = Files.createTempDirectory("graft-sprobe-ivf").toString
+    val out = tempDir("graft-sprobe-ivf").toString
     SimQueries.writeIvfLayout(spark, dir, out)
     // batch = two X-cluster queries → ONE arriving cell of the 2 stored
     val batch = SimQueries.quantizedFrame(spark, dir)
@@ -60,7 +59,7 @@ class StreamProbeSpec extends SparkSpec {
   }
 
   test("probeIvfLayoutBatch ≡ per-query probeIvfLayout at nprobe = 1") {
-    val out = Files.createTempDirectory("graft-sprobe-eq").toString
+    val out = tempDir("graft-sprobe-eq").toString
     SimQueries.writeIvfLayout(spark, dir, out)
     val e = SimQueries.quantizedFrame(spark, dir)
     val batch = e.select(col("vec_id").as("q_id"), col("q").as("qq"))
@@ -81,7 +80,7 @@ class StreamProbeSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val e = SimQueries.quantizedFrame(spark, sf)
     val qz = SimQueries.gateQuantizer(spark, sf)
-    val out = Files.createTempDirectory("graft-sprobe-hn").toString
+    val out = tempDir("graft-sprobe-hn").toString
     // the members layout the probe face commits, built inline here
     SimQueries.assignCells(
         e.select(col("vec_id"), col("label"), col("q")), qz)

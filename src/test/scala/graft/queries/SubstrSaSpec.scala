@@ -44,7 +44,7 @@ class SubstrSaSpec extends SparkSpec {
   }
 
   test("index path ≡ from-scratch rolling pass at SaMinLen") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sa").toString
+    val dir = tempDir("graft-sa").toString
     DedupQueries.writeSubstrIndex(frame, dir)
     val viaIdx = DedupQueries.substrReassemble(
         frame, DedupQueries.saDuplicatesFromIndex(spark, dir),
@@ -58,7 +58,7 @@ class SubstrSaSpec extends SparkSpec {
   }
 
   test("arriving-batch probe reads the stored index, catches the short dup") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sa3").toString
+    val dir = tempDir("graft-sa3").toString
     // corpus = docs 1 and 3 (doc 1 owns the block); batch = doc 2
     val corpus = frame.filter($"doc_id" =!= 2L)
     DedupQueries.writeSubstrIndex(corpus, dir)
@@ -87,7 +87,7 @@ class SubstrSaSpec extends SparkSpec {
   }
 
   test("width mismatch between build and probe is an ERROR, not a no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sa4").toString
+    val dir = tempDir("graft-sa4").toString
     DedupQueries.writeSubstrIndex(frame, dir, w = DedupQueries.SaMinLen)
     // a probe at a different width would hash into a disjoint gram
     // domain and silently strip nothing (ADVICE r19) — it must throw
@@ -103,7 +103,7 @@ class SubstrSaSpec extends SparkSpec {
   }
 
   test("stored layout: one triple per token position, sorted by (h, doc, pos)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sa2").toString
+    val dir = tempDir("graft-sa2").toString
     DedupQueries.writeSubstrIndex(frame, dir)
     val idx = graft.sources.AtomicPublish.readCommitted(spark, dir, "grams")
     val w = DedupQueries.SaMinLen

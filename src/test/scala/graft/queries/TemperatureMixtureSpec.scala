@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -12,7 +11,7 @@ class TemperatureMixtureSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-tmix").toString
+    val d = tempDir("graft-tmix").toString
     val en = (0L until 100L).map(i => (i, s"en doc $i", "en", "web", 10L))
     val de = (200L until 204L).map(i => (i, s"de doc $i", "de", "web", 10L))
     (en ++ de).toDF("doc_id", "text", "lang", "source", "n_chars")

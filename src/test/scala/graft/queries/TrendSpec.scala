@@ -12,7 +12,7 @@ class TrendSpec extends SparkSpec {
     // one event per (day, type) occurrence listed; build a tiny events
     // table via timestamps at noon of each day
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-trend").toString
+    val dir = tempDir("graft-trend").toString
     rows.zipWithIndex.map { case ((day, ty), i) =>
       (i.toLong, java.sql.Timestamp.valueOf(s"$day 12:00:00"), 1L, ty, 1.0,
        "{\"k\": 1}")

@@ -29,7 +29,7 @@ class WarcOffsetIndexSpec extends SparkSpec {
   }
 
   private lazy val warcDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-woff").toString
+    val d = tempDir("graft-woff").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(d, "one.warc.gz"), container(7, "a"))
     java.nio.file.Files.write(
@@ -57,7 +57,7 @@ class WarcOffsetIndexSpec extends SparkSpec {
   }
 
   test("probe face ≡ direct face, with intra-container parallelism") {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-woff-idx").toString
+    val idxDir = tempDir("graft-woff-idx").toString
     WebQueries.writeWarcOffsetIndex(spark, warcDir, idxDir)
     assert(spark.read.parquet(s"$idxDir/offsets").count() === 12)
     val slices = WebQueries.warcSlicesViaIndex(spark, idxDir, 6)
@@ -80,12 +80,12 @@ class WarcOffsetIndexSpec extends SparkSpec {
   }
 
   test("malformed container: zero index rows — both faces quarantine alike") {
-    val bad = java.nio.file.Files.createTempDirectory("graft-woff-bad").toString
+    val bad = tempDir("graft-woff-bad").toString
     val torn = container(3, "c").dropRight(9) // torn trailer
     java.nio.file.Files.write(
       java.nio.file.Paths.get(bad, "torn.warc.gz"), torn)
     assert(graft.expr.WarcBinOps.memberOffsets(torn) == null)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-woff-bidx").toString
+    val idxDir = tempDir("graft-woff-bidx").toString
     WebQueries.writeWarcOffsetIndex(spark, bad, idxDir)
     assert(spark.read.parquet(s"$idxDir/offsets").count() === 0)
     assert(graft.expr.WarcBinOps.records(torn) == null) // direct agrees

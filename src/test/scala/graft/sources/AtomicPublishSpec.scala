@@ -15,7 +15,7 @@ class AtomicPublishSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-publish").toString
+    tempDir("graft-publish").toString
 
   test("uncommitted layout refuses; commit publishes; versions are monotonic") {
     val dir = tmp()

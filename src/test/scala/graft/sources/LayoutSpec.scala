@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -16,7 +15,7 @@ import graft.{SparkEntry, SparkSpec}
 class LayoutSpec extends SparkSpec {
 
   test("bucketed co-located join plans with zero shuffle exchanges") {
-    val dir = Files.createTempDirectory("graft-bucket").toString
+    val dir = tempDir("graft-bucket").toString
     val lineitem = Tables.read(spark, "/root/testdata/sf0.001", "lineitem")
     val orders = Tables.read(spark, "/root/testdata/sf0.001", "orders")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_layout LOCATION '$dir'")
@@ -45,7 +44,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("partition pruning: a partition filter reaches the scan and prunes files") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part").toString
     Tables.read(spark, "/root/testdata/sf0.001", "orders")
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite")
@@ -69,7 +68,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactParquet collapses a many-file layout into size-targeted files") {
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact").toString
     val src = Tables.read(spark, "/root/testdata/sf0.001", "lineitem")
     src.repartition(24).write.mode("overwrite").parquet(s"$dir/scattered")
     val scattered = new java.io.File(s"$dir/scattered").listFiles()
@@ -88,7 +87,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactParquet preserves a partitioned layout when given its partition columns") {
-    val dir = Files.createTempDirectory("graft-compact-part").toString
+    val dir = tempDir("graft-compact-part").toString
     Tables.read(spark, "/root/testdata/sf0.001", "orders")
       .withColumn("o_year", year(col("o_orderdate")))
       .repartition(8)

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.io.{FileOutputStream, OutputStreamWriter}
-import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
 import org.apache.logging.log4j.LogManager
@@ -43,7 +42,7 @@ class TablesSpec extends SparkSpec {
 
   for ((reader, read) <- readers) {
     test(s"$reader reads gzip ISO-8859-1 feeds without a separate transcode pass") {
-      val dir = Files.createTempDirectory("graft-feed").toString
+      val dir = tempDir("graft-feed").toString
       // é in the page field: ISO-8859-1 byte 0xE9, not valid UTF-8
       val line = "1000\tu\tv\tTRK\t\t2\tcafé\tsrv\ti\ts"
       writeGz(s"$dir/feed.tsv.gz", "ISO-8859-1", Seq(line))
@@ -53,7 +52,7 @@ class TablesSpec extends SparkSpec {
     }
 
     test(s"$reader passes quote and comma characters through verbatim (CSV quoting disabled)") {
-      val dir = Files.createTempDirectory("graft-quotes").toString
+      val dir = tempDir("graft-quotes").toString
       // page field contains quotes and commas — the CSV-reader-based line
       // source must not interpret them
       val line = "1000\tu\tv\t\t\t2\tsaid \"hi\", twice\tsrv\ti\ts"
@@ -64,7 +63,7 @@ class TablesSpec extends SparkSpec {
     }
 
     test(s"$reader's sentinel-sep contract: the live delimiter is u0001 and nothing else") {
-      val dir = Files.createTempDirectory("graft-sep").toString
+      val dir = tempDir("graft-sep").toString
       // Pin the delimiter the rawFeed scaladoc documents: sep is explicitly
       // the \u0001 sentinel. A planted \u0001 DOES split (truncating to
       // the one-column schema) -- proving which character is live -- while
@@ -77,7 +76,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("rawFeed glob expansion reads multiple shards (Beam ReadFromText parity)") {
-    val dir = Files.createTempDirectory("graft-shards").toString
+    val dir = tempDir("graft-shards").toString
     writeGz(s"$dir/part-0.tsv.gz", "UTF-8", Seq("1000\tu\tv\t\t\t2\tp\tsrv\ti\ts"))
     writeGz(s"$dir/part-1.tsv.gz", "UTF-8", Seq("2000\tu\tv\t\t\t2\tp\tsrv\ti\ts"))
     val n = Tables.rawFeed(spark, s"$dir/part-*.tsv.gz").count()
@@ -85,7 +84,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("rawFeed on a glob reads every match without a FileStreamSink metadata probe") {
-    val dir = Files.createTempDirectory("graft-glob-probe").toString
+    val dir = tempDir("graft-glob-probe").toString
     writeGz(s"$dir/part-0.tsv.gz", "UTF-8", Seq("a\t1"))
     writeGz(s"$dir/part-1.tsv.gz", "UTF-8", Seq("b\t2"))
     val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()

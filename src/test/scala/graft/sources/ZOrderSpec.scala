@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -54,7 +53,7 @@ class ZOrderSpec extends SparkSpec {
         .select(avg("sx"), avg("sy")).head()
       (spans.getDouble(0), spans.getDouble(1))
     }
-    val zDir = Files.createTempDirectory("graft-zorder").toString
+    val zDir = tempDir("graft-zorder").toString
     Layouts.writeZOrdered(grid, col("x"), col("y"), s"$zDir/z", nFiles = 16)
     val (zx, zy) = meanSpans(s"$zDir/z")
     // 16 z-files over a 64x64 grid = 4x4 curve blocks of 16x16 cells:
@@ -117,7 +116,7 @@ class ZOrderSpec extends SparkSpec {
         .select(avg("sx"), avg("sy"), avg("sz")).head()
       (spans.getDouble(0), spans.getDouble(1), spans.getDouble(2))
     }
-    val dir = Files.createTempDirectory("graft-zorder3").toString
+    val dir = tempDir("graft-zorder3").toString
     Layouts.writeZOrdered3(cube, col("x"), col("y"), col("z"), s"$dir/z3",
                            nFiles = 16)
     val (sx, sy, sz) = meanSpans(s"$dir/z3")
@@ -134,7 +133,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("box predicates reach the parquet scan as pushed filters") {
-    val dir = Files.createTempDirectory("graft-zorder-scan").toString
+    val dir = tempDir("graft-zorder-scan").toString
     val rows = (0 until 1000).map(i => (i.toLong % 100, i.toLong / 100)).toDF("x", "y")
     Layouts.writeZOrdered(rows, col("x"), col("y"), dir, nFiles = 4)
     val exec = spark.read.parquet(dir)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -30,7 +29,7 @@ class StreamingCurationSpec extends SparkSpec {
   )
 
   private lazy val batchDir: String = {
-    val d = Files.createTempDirectory("graft-scur").toString
+    val d = tempDir("graft-scur").toString
     docs.toDF().write.mode("overwrite").parquet(s"$d/documents.parquet")
     d
   }

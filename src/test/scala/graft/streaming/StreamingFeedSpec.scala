@@ -19,7 +19,7 @@ class StreamingFeedSpec extends SparkSpec {
     Files.write(Paths.get(dir, name), lines.mkString("", "\n", "\n").getBytes("UTF-8"))
 
   test("streaming TSV feed → parse → sessionize ≡ batch on the same files") {
-    val dir = Files.createTempDirectory("graft-streamfeed").toString
+    val dir = tempDir("graft-streamfeed").toString
     val u = Seq("10001026", "3484482593")
     def line(ts: Long) =
       s"$ts\t${u(0)}\t${u(1)}\tTRK\t\t2,12\tM:Home\tsrv\ti1\ts1"
