@@ -23,48 +23,66 @@ import graft.model.Schemas
  *    `main.py:88-92`) — but, realizing the reference's TODO at
  *    `main.py:80`, the drop count is observable via [[parseWithMetrics]].
  *
- * Implementation is pure `org.apache.spark.sql.functions` — no UDFs — so the
- * whole parse stays inside whole-stage codegen and filters/projections remain
- * visible to Catalyst.
+ * One split, one rule list: each line is split once on tab and fields 4
+ * and 5 once on `;` and `,` ([[fields]]); the three drop rules are one
+ * `reason` expression over those splits, and [[parse]] keeps exactly the
+ * lines whose reason is null while [[quarantine]] lists the rest. Both
+ * select through `inline(when(…))`, so Catalyst cannot push a filter below
+ * the split and substitute the split back into it once per rule. Pure
+ * `org.apache.spark.sql.functions` — no UDFs — so the parse stays inside
+ * whole-stage codegen.
  */
 object HitParser {
 
-  /** 0/1 int flag: does the comma-separated event list contain `code`? */
-  def eventFlag(eventsCol: Column, code: String): Column =
-    array_contains(split(eventsCol, ","), code).cast("int")
+  private val c = col("c")
+
+  /** Tab field `i` of the line; null past the end of a short row. */
+  private def field(i: Int): Column = get(c, lit(i))
+
+  /** Each line split once: `c` on tab, `products` (field 4) on `;`,
+    * `events` (field 5) on `,`, and `ts` — field 0 as a long, null unless
+    * it is all digits and fits one, so no line can fail the cast. */
+  private def fields(raw: DataFrame): DataFrame =
+    raw.select(col("value"), split(col("value"), "\t").as("c"))
+      .select(
+        col("value"), c,
+        when(field(0).rlike("^[0-9]+$"), field(0).try_cast("long")).as("ts"),
+        split(field(4), ";").as("products"),
+        split(field(5), ",").as("events"))
+
+  /** The first drop rule a line of [[fields]] breaks, or null if it parses.
+    * A null line (the reader yields one for a line that starts with the
+    * U+0001 sentinel) has no columns: `short_row`. */
+  private val reason: Column =
+    when(c.isNull || size(c) < 10, "short_row")
+      .when(col("ts").isNull, "bad_ts")
+      .when(field(4) =!= "" && size(col("products")) < 2, "bad_product")
+
+  /** 0/1 int flag: does the split event list contain `code`? */
+  private def eventFlag(code: String): Column =
+    array_contains(col("events"), code).cast("int")
 
   /**
    * Parse raw feed lines (single `value: string` column, as produced by
    * [[graft.sources.Tables.rawFeed]]) into typed hits. Drop-malformed.
    */
-  def parse(raw: DataFrame): DataFrame = {
-    val c = split(col("value"), "\t")
-    raw
-      .select(c.as("c"))
-      // ≥10 columns, numeric non-empty ts, products either empty or with a
-      // SKU field — everything else is a reference-parity drop.
-      .filter(size(col("c")) >= 10)
-      .filter(col("c")(0).rlike("^[0-9]+$"))
-      .filter(col("c")(4) === "" || size(split(col("c")(4), ";")) >= 2)
-      .select(
-        col("c")(0).cast("long").as("ts"),
-        concat_ws("_", col("c")(1), col("c")(2)).as("user_id"),
-        col("c")(3).as("tracking_code"),
-        when(col("c")(4) === "", lit(""))
-          .otherwise(element_at(split(col("c")(4), ";"), 2))
-          .as("line_number"),
-        col("c")(6).as("page"),
-        col("c")(7).as("site_server"),
-        col("c")(8).as("ibm_id"),
-        col("c")(9).as("scv_id"),
-        eventFlag(col("c")(5), Schemas.eventCodes("order")).as("order"),
-        eventFlag(col("c")(5), Schemas.eventCodes("pdp_view")).as("pdp_view"),
-        eventFlag(col("c")(5), Schemas.eventCodes("checkout")).as("checkout"),
-        eventFlag(col("c")(5), Schemas.eventCodes("atb")).as("atb"),
-        eventFlag(col("c")(5), Schemas.eventCodes("bag")).as("bag_view"),
-        eventFlag(col("c")(5), Schemas.eventCodes("payment")).as("payment")
-      )
-  }
+  def parse(raw: DataFrame): DataFrame =
+    fields(raw).select(inline(when(reason.isNull, array(struct(
+      col("ts"),
+      concat_ws("_", field(1), field(2)).as("user_id"),
+      field(3).as("tracking_code"),
+      when(field(4) === "", lit("")).otherwise(get(col("products"), lit(1)))
+        .as("line_number"),
+      field(6).as("page"),
+      field(7).as("site_server"),
+      field(8).as("ibm_id"),
+      field(9).as("scv_id"),
+      eventFlag(Schemas.eventCodes("order")).as("order"),
+      eventFlag(Schemas.eventCodes("pdp_view")).as("pdp_view"),
+      eventFlag(Schemas.eventCodes("checkout")).as("checkout"),
+      eventFlag(Schemas.eventCodes("atb")).as("atb"),
+      eventFlag(Schemas.eventCodes("bag")).as("bag_view"),
+      eventFlag(Schemas.eventCodes("payment")).as("payment"))))))
 
   /**
    * Parse with drop observability (the reference's unimplemented TODO,
@@ -79,26 +97,15 @@ object HitParser {
 
   /**
    * The DEAD-LETTER side of [[parse]]: every line parse drops, with the
-   * FIRST-failing rule (in [[parse]]'s filter order) as a reason code —
-   * the quarantine output a production feed pipeline writes beside the
-   * parsed table so "silently discarded" ([[parse]]'s reference-parity
-   * contract, `main.py:78-81`) becomes "discarded, attributed, and
-   * re-processable". [[parse]] ∪ this = the input, exactly
-   * (spec-pinned conservation): the predicates here are the literal
-   * negations of [[parse]]'s filters, stated once each. Pure
-   * projection + filter — codegen'd, no shuffle.
+   * first rule it breaks as a reason code — the quarantine output a
+   * production feed pipeline writes beside the parsed table so "silently
+   * discarded" ([[parse]]'s reference-parity contract, `main.py:78-81`)
+   * becomes "discarded, attributed, and re-processable". [[parse]] ∪ this
+   * = the input, exactly (spec-pinned conservation): both read the one
+   * `reason` expression. Pure projection — codegen'd, no shuffle.
    */
-  def quarantine(raw: DataFrame): DataFrame = {
-    val c = split(col("value"), "\t")
-    raw
-      .select(col("value"), c.as("c"))
-      .withColumn(
-        "reason",
-        when(size(col("c")) < 10, "short_row")
-          .when(!col("c")(0).rlike("^[0-9]+$"), "bad_ts")
-          .when(col("c")(4) =!= "" && size(split(col("c")(4), ";")) < 2,
-                "bad_product"))
-      .filter(col("reason").isNotNull)
-      .select(col("value").as("line"), col("reason"))
-  }
+  def quarantine(raw: DataFrame): DataFrame =
+    fields(raw).select(col("value"), reason.as("reason"))
+      .select(inline(when(col("reason").isNotNull,
+        array(struct(col("value").as("line"), col("reason"))))))
 }

@@ -34,10 +34,8 @@ object StreamingFeed {
       .schema("value STRING")
       .csv(path)
 
-  /** Parsed hit stream with event-time columns (ts is unix seconds).
-    * NOT fanned out before the parse (round-21 warm A/B: 3.90→4.31 s
-    * widened — the session-window state commit, not the single-task
-    * 14-field parse, dominates this gate's micro-batch). */
+  /** Parsed hit stream with event-time columns (ts is unix seconds); not
+    * fanned out before the parse (OPTIMIZATION_r21.md, `q_stream_feed`). */
   def parsedStream(spark: SparkSession, path: String,
                    encoding: String = "UTF-8"): DataFrame =
     HitParser.parse(rawFeedStream(spark, path, encoding))

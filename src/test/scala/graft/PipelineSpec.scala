@@ -64,6 +64,16 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("run: an all-digit ts too long for a long is counted as dropped") {
+    val inDir = tempDir("graft-pipeline-overflow").toString
+    Files.writeString(Path.of(s"$inDir/feed.tsv"),
+      "1000\tu\t1\tTRK\t\t1\tpage\tsrv\tibm\tscv\n" +
+      "99999999999999999999\tu\t1\tTRK\t\t1\tpage\tsrv\tibm\tscv\n")
+    val outDir = tempDir("graft-pipeline-overflow-out").toString
+    assert(Pipeline.run(spark, s"$inDir/*.tsv", outDir) === ((2L, 1L)))
+    assert(spark.read.csv(s"$outDir/hits").count() === 1)
+  }
+
   test("run with Spark's shard names keeps the part-files' .csv suffix") {
     val inDir = tempDir("graft-pipeline-sparknames").toString
     Files.writeString(Path.of(s"$inDir/feed.tsv"),

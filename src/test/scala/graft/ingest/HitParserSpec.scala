@@ -1,9 +1,16 @@
 package graft.ingest
 
-import org.apache.spark.sql.Row
+import java.nio.charset.StandardCharsets.ISO_8859_1
+import java.nio.file.{Files, Path}
+
+import scala.util.Random
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, StringSplit}
 
 import graft.SparkSpec
 import graft.ingest.FeedSynth
+import graft.sources.Tables
 
 /** Parser contract tests (reference `main.py:44-81`; fixture shapes from
   * FIXTURES.md §1, including the 8-column legacy rows that zeroed the
@@ -126,5 +133,127 @@ class HitParserSpec extends SparkSpec {
       lines(5) -> "short_row"))
     // conservation: parse keeps exactly the lines quarantine rejects nothing of
     assert(HitParser.parse(raw).count() + q.size === lines.size)
+  }
+
+  private def feedFile(dir: Path, lines: Seq[String]): String = {
+    val f = dir.resolve("feed.tsv")
+    Files.write(f, lines.map(_ + "\n").mkString.getBytes(ISO_8859_1))
+    f.toString
+  }
+
+  test("an all-digit ts too long for a long is bad_ts, not a failed run") {
+    val overflow = happy.replaceFirst("^[0-9]+", "99999999999999999999")
+    val raw = Seq(happy, overflow).toDF("value")
+    assert(HitParser.parse(raw).collect().map(_.getAs[Long]("ts")).toSeq ===
+             Seq(1517958846L))
+    assert(HitParser.quarantine(raw).as[(String, String)].collect().toSeq ===
+             Seq(overflow -> "bad_ts"))
+  }
+
+  test("a line the reader yields as null is quarantined as short_row") {
+    // the CSV reader's nullValue is "", so a leading U+0001 (its
+    // delimiter) makes the line's only column null
+    val raw = Tables.rawFeed(spark, feedFile(tempDir("graft-parse-null"),
+                                             Seq(happy, "\u0001" + happy)))
+    assert(raw.filter($"value".isNull).count() === 1)
+    val q = HitParser.quarantine(raw).collect()
+    assert(q.map(r => (Option(r.getString(0)), r.getString(1))).toSeq ===
+             Seq((None, "short_row")))
+    assert(HitParser.parse(raw).count() + q.length === raw.count())
+  }
+
+  test("parse and quarantine split each line on tab once (executed plan)") {
+    val raw = Tables.rawFeed(spark, feedFile(tempDir("graft-parse-plan"), Seq(happy)))
+    for ((name, df) <- Seq("parse" -> HitParser.parse(raw),
+                           "quarantine" -> HitParser.quarantine(raw))) {
+      df.collect()
+      val splits = df.queryExecution.executedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case s @ StringSplit(a: AttributeReference, _, _) if a.name == "value" => s
+      }))
+      assert(splits.size === 1, s"$name:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("fuzz: parse ∪ quarantine = input, and parse equals the filter formulation") {
+    val rnd = new Random(7)
+    val alphabet = "abcXYZ019 ;,:-_\u00e9\u00fc\u00df\u00ff\u00a0"
+    def text(max: Int) = Seq.fill(rnd.nextInt(max + 1))(alphabet(rnd.nextInt(alphabet.length))).mkString
+    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.length))
+    val overflowTs = "99999999999999999999"
+    val lines = Seq.fill(3000) {
+      val ts = pick(rnd.nextInt(Int.MaxValue).toString, "", "12ab", "+5", " 7", "-3",
+                    overflowTs, "0000000000000000000001517958846", "9223372036854775807")
+      val products = pick("", "P;SKU1;2", "NOSEMI", ";", "a;b;c;d", text(6))
+      val events = pick("", "1,2,11", "12,204", "13", text(8))
+      val full = Seq(ts, text(9), rnd.nextInt(1000).toString, text(4), products, events,
+                     text(12), text(6), text(4), text(4)) ++ Seq.fill(pick(0, 0, 2))(text(3))
+      val cut = if (rnd.nextInt(6) == 0) full.take(rnd.nextInt(10)) else full
+      val fields = cut.map(f => if (rnd.nextInt(12) == 0) "" else f)
+      val line = fields.mkString("\t") + pick("", "", "", "\r")
+      val k = rnd.nextInt(line.length + 1)
+      pick(line, line, line, line, line, line, line,
+           "\u0001" + line, line.take(k) + "\u0001" + line.drop(k))
+    }
+    val all = Tables.rawFeed(spark, feedFile(tempDir("graft-parse-fuzz"), lines), "ISO-8859-1")
+    // lines whose ts field is the overflow value crashed the filter formulation
+    val safe = Tables.rawFeed(spark, feedFile(tempDir("graft-parse-fuzz-safe"),
+                                              lines.filterNot(_.startsWith(overflowTs))),
+                              "ISO-8859-1")
+    val parsed = HitParser.parse(all).cache()
+    val quarantined = HitParser.quarantine(all).cache()
+    try {
+      assert(parsed.count() + quarantined.count() === all.count())
+      assert(quarantined.select("reason").distinct().as[String].collect().toSet ===
+               Set("short_row", "bad_ts", "bad_product"))
+      assert(quarantined.filter($"line".isNull).count() > 0)
+      assert(quarantined.filter($"line".startsWith(overflowTs)).count() > 0)
+      // the left-out lines all drop, so parse over every line must match
+      val oracle = FilterParse(safe)
+      assert(parsed.count() > 0)
+      assert(parsed.exceptAll(oracle).isEmpty, "parse rows the filter formulation drops")
+      assert(oracle.exceptAll(parsed).isEmpty, "filter formulation rows parse drops")
+    } finally { parsed.unpersist(); quarantined.unpersist() }
+  }
+}
+
+/** `HitParser.parse` as a chain of filters over one tab split — the
+  * formulation before the one-split rewrite, kept verbatim as the fuzz's
+  * equivalence oracle. Its ANSI cast fails a run on an all-digit ts that
+  * does not fit a long, so the fuzz feeds it no such line. */
+private object FilterParse {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions._
+  import graft.model.Schemas
+
+  def eventFlag(eventsCol: Column, code: String): Column =
+    array_contains(split(eventsCol, ","), code).cast("int")
+
+  def apply(raw: DataFrame): DataFrame = {
+    val c = split(col("value"), "\t")
+    raw
+      .select(c.as("c"))
+      // ≥10 columns, numeric non-empty ts, products either empty or with a
+      // SKU field — everything else is a reference-parity drop.
+      .filter(size(col("c")) >= 10)
+      .filter(col("c")(0).rlike("^[0-9]+$"))
+      .filter(col("c")(4) === "" || size(split(col("c")(4), ";")) >= 2)
+      .select(
+        col("c")(0).cast("long").as("ts"),
+        concat_ws("_", col("c")(1), col("c")(2)).as("user_id"),
+        col("c")(3).as("tracking_code"),
+        when(col("c")(4) === "", lit(""))
+          .otherwise(element_at(split(col("c")(4), ";"), 2))
+          .as("line_number"),
+        col("c")(6).as("page"),
+        col("c")(7).as("site_server"),
+        col("c")(8).as("ibm_id"),
+        col("c")(9).as("scv_id"),
+        eventFlag(col("c")(5), Schemas.eventCodes("order")).as("order"),
+        eventFlag(col("c")(5), Schemas.eventCodes("pdp_view")).as("pdp_view"),
+        eventFlag(col("c")(5), Schemas.eventCodes("checkout")).as("checkout"),
+        eventFlag(col("c")(5), Schemas.eventCodes("atb")).as("atb"),
+        eventFlag(col("c")(5), Schemas.eventCodes("bag")).as("bag_view"),
+        eventFlag(col("c")(5), Schemas.eventCodes("payment")).as("payment")
+      )
   }
 }
