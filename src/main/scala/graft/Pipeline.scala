@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,15 +28,13 @@ import graft.sources.Tables
  *   --encoding <cs>     feed charset (default UTF-8; ISO-8859-1 feeds
  *                       fold the `encoding_update.py` transcode into the
  *                       scan — no separate re-encode job)
- *   --master <url>      Spark master when not launched via spark-submit
- *                       (default local[*]); the reference's
- *                       DirectRunner/DataflowRunner switch — on a real
- *                       cluster, spark-submit supplies it instead
- *   --spark-names       keep Spark's part-* shard names (skip the Beam
- *                       rename)
+ *   --master <url>      Spark master; the reference's
+ *                       DirectRunner/DataflowRunner switch. Without it,
+ *                       the launcher's (spark-submit's `--master`) is
+ *                       kept, and `local[*]` is used when there is none
  *
- * The three exports come out of one job over one sessionized pass
- * ([[Exports.writeAll]]), then get their Beam shard names.
+ * The three exports come out of one job over one sessionized pass, Beam
+ * shard names and all ([[Exports.writeAll]]).
  *
  * Drop accounting (the reference's TODO at `main.py:80`): input and
  * parsed row counts ride that job as `observe` metrics — no extra scan.
@@ -48,12 +47,11 @@ object Pipeline {
 
   final case class Args(input: String, output: String,
                         encoding: String = "UTF-8",
-                        master: String = "local[*]",
-                        beamNames: Boolean = true)
+                        master: Option[String] = None)
 
   private val usage =
     "usage: graft.Pipeline --input <glob> --output <dir> " +
-      "[--encoding <charset>] [--master <url>] [--spark-names]"
+      "[--encoding <charset>] [--master <url>]"
 
   private[graft] def parseArgs(argv: Seq[String]): Args = {
     def loop(rest: List[String], acc: Args, seen: Set[String]): (Args, Set[String]) =
@@ -61,8 +59,7 @@ object Pipeline {
         case "--input" :: v :: t    => loop(t, acc.copy(input = v), seen + "input")
         case "--output" :: v :: t   => loop(t, acc.copy(output = v), seen + "output")
         case "--encoding" :: v :: t => loop(t, acc.copy(encoding = v), seen)
-        case "--master" :: v :: t   => loop(t, acc.copy(master = v), seen)
-        case "--spark-names" :: t   => loop(t, acc.copy(beamNames = false), seen)
+        case "--master" :: v :: t   => loop(t, acc.copy(master = Some(v)), seen)
         case Nil                    => (acc, seen)
         case bad :: _ => throw new IllegalArgumentException(s"$usage (got: $bad)")
       }
@@ -76,17 +73,13 @@ object Pipeline {
     * Returns (input_rows, parsed_rows); the difference is the
     * drop-malformed count. */
   def run(spark: SparkSession, input: String, output: String,
-          encoding: String = "UTF-8", beamNames: Boolean = true): (Long, Long) = {
+          encoding: String = "UTF-8"): (Long, Long) = {
     val inObs = Observation("graft_pipeline_in")
     val outObs = Observation("graft_pipeline_out")
     val raw = Tables.rawFeed(spark, input, encoding)
     val parsed = HitParser.parse(raw.observe(inObs, count(lit(1)).as("input_rows")))
       .observe(outObs, count(lit(1)).as("parsed_rows"))
     Exports.writeAll(parsed, output)
-    if (beamNames)
-      Exports.Names.foreach { e =>
-        Exports.beamShardNames(spark, s"$output/$e", s"$e.csv")
-      }
     def observed(obs: Observation, key: String, recount: => Long): Long =
       obs.get.get(key).map(_.asInstanceOf[Long]).getOrElse(recount)
     (observed(inObs, "input_rows", raw.count()),
@@ -104,17 +97,23 @@ object Pipeline {
       .put("output", output))
   }
 
+  /** The master [[main]] sets: `--master` when given, else none when the
+    * launcher configured `spark.master`, else `local[*]`. */
+  private[graft] def masterToSet(flag: Option[String],
+                                 launcher: Option[String]): Option[String] =
+    flag.orElse(Option.when(launcher.isEmpty)("local[*]"))
+
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv.toIndexedSeq)
-    val spark = SparkSession.builder()
-      .master(args.master)
+    val builder = SparkSession.builder()
       .appName("graft-pipeline")
       .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    masterToSet(args.master, new SparkConf().getOption("spark.master"))
+      .foreach(builder.master)
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
-      val (in, out) = run(spark, args.input, args.output, args.encoding,
-                          args.beamNames)
+      val (in, out) = run(spark, args.input, args.output, args.encoding)
       println(summaryJson(in, out, args.output))
     } finally spark.stop()
   }

@@ -12,15 +12,20 @@ import graft.sources.Tables
 
 /**
  * The reference's three denormalized exports (SURVEY.md §1.5, K1 sink —
- * `main.py:229-234`) as real sharded CSV writes: one part-file per task
- * and export, exactly Beam's `WriteToText` shard model. Writing is
- * embarrassingly parallel — no coalesce, no global sort; at 100 TB the
- * sink scales with the task count.
+ * `main.py:229-234`) as real sharded CSV writes: one shard per task and
+ * export, exactly Beam's `WriteToText` shard model, with its
+ * `<prefix>-SSSSS-of-NNNNN` names. Writing is embarrassingly parallel —
+ * no coalesce, no global sort; at 100 TB the sink scales with the task
+ * count.
  *
  * Input is the parsed-hit frame ([[graft.ingest.HitParser.parse]] output:
  * ts in unix seconds + the 13 reference fields). Each export has exactly
  * ONE definition, a column list over the sessionized frame; the public
  * per-frame API and [[writeAll]] both go through it.
+ *
+ * Every file output ([[writeAll]]'s exports, [[transcodeFeed]]'s feeds)
+ * is finished in a staging directory first; one step, `replace`, then
+ * puts it over the previous output — as Beam's finalize step does.
  */
 object Exports {
 
@@ -51,12 +56,9 @@ object Exports {
   def visitsFrame(parsedHits: DataFrame): DataFrame =
     sessionized(parsedHits).filter(col("session_first")).select(visitsColumns: _*)
 
-  /** visitors.csv frame; `dedup = true` is the honest variant the
-    * reference lacked. */
-  def visitorsFrame(parsedHits: DataFrame, dedup: Boolean = false): DataFrame = {
-    val v = parsedHits.select(visitorsColumns: _*)
-    if (dedup) v.dropDuplicates() else v
-  }
+  /** visitors.csv frame. */
+  def visitorsFrame(parsedHits: DataFrame): DataFrame =
+    parsedHits.select(visitorsColumns: _*)
 
   /** Write all three exports under `baseDir/{hits,visits,visitors}` as
     * sharded CSV (part-file per task ≡ Beam shard-per-bundle), in ONE job
@@ -64,14 +66,16 @@ object Exports {
     * shape (`main.py:207-234`). Every hit emits its hits and visitors CSV
     * lines and, on its session's first row, its visits line, each tagged
     * with its export; one text write partitioned by that tag lands them
-    * in a staging directory under `baseDir`, whose `export=<e>`
-    * directories then replace `baseDir/<e>`. The shuffle stays visible to
+    * in a staging directory under `baseDir`. The shuffle stays visible to
     * AQE, so task and file counts follow the data.
     *
-    * Layout per export is what a `.csv` write leaves: `part-*.csv` files
-    * (one empty part-file when there are no rows) and `_SUCCESS`. A failed
-    * job leaves the previous exports in place; the staging directory is
-    * removed either way, and nothing else under `baseDir` is touched. */
+    * Each staged `export=<e>` directory is finished before any target is
+    * touched: an export with no rows gets one empty shard, and every
+    * shard gets its Beam name `<e>.csv-SSSSS-of-NNNNN` there. Only then
+    * does each replace `baseDir/<e>`, gaining a `_SUCCESS` marker. A
+    * failed job leaves the previous exports in place; the staging
+    * directory is removed either way, and nothing else under `baseDir` is
+    * touched. */
   def writeAll(parsedHits: DataFrame, baseDir: String): Unit = {
     def line(name: String, columns: Seq[Column]): Column =
       struct(lit(name).as("export"), to_csv(struct(columns: _*)).as("value"))
@@ -85,24 +89,21 @@ object Exports {
     val staging = new Path(base, s"_exports-staging-${UUID.randomUUID}")
     try {
       lines.write.partitionBy("export").text(staging.toString)
-      Names.foreach(e => publish(fs, new Path(staging, s"export=$e"), new Path(base, e)))
+      val staged = Names.map(e => e -> new Path(staging, s"export=$e"))
+      staged.foreach { case (e, dir) =>
+        if (!fs.exists(dir)) fs.create(new Path(dir, "part-00000")).close()
+        beamShardNames(parsedHits.sparkSession, dir.toString, s"$e.csv")
+      }
+      staged.foreach { case (e, dir) => replace(fs, dir, new Path(base, e)) }
     } finally fs.delete(staging, true)
   }
 
-  /** Moves one staged export over `target`, with a `.csv` write's names. */
-  private def publish(fs: FileSystem, staged: Path, target: Path): Unit = {
+  /** Puts the finished `staged` directory over `target`, with a
+    * `_SUCCESS` marker: the one step that deletes or renames an output
+    * directory. */
+  private def replace(fs: FileSystem, staged: Path, target: Path): Unit = {
     if (fs.exists(target)) require(fs.delete(target, true), s"cannot replace $target")
-    if (fs.exists(staged)) require(fs.rename(staged, target), s"rename failed: $staged")
-    else {
-      require(fs.mkdirs(target), s"cannot create $target")
-      fs.create(new Path(target, s"part-00000-${UUID.randomUUID}-c000.csv")).close()
-    }
-    fs.listStatus(target).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".txt"))
-      .foreach { p =>
-        val csv = new Path(target, p.getName.stripSuffix(".txt") + ".csv")
-        require(fs.rename(p, csv), s"rename failed: $p")
-      }
+    require(fs.rename(staged, target), s"rename failed: $staged")
     fs.create(new Path(target, "_SUCCESS")).close()
   }
 
@@ -115,39 +116,44 @@ object Exports {
    * always emits UTF-8, so the decode IS the transcode). Unlike the
    * reference's single-node 64 KiB-block loop, this is one distributed
    * map: no shuffle, one output shard per input split, scales with tasks.
+   * The feeds are written into a `_`-prefixed staging directory beside
+   * `outDir` and replace it only when no input line is tainted (below),
+   * so a tainted or failed transcode keeps the previous output.
    */
   def transcodeFeed(spark: SparkSession, inGlob: String, outDir: String,
                     fromEncoding: String = "ISO-8859-1"): Unit = {
-    // overwrite deletes outDir before the lazy read runs - refuse an
-    // output that is the input's own directory
-    val outPath = new Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.makeQualified(outPath) != fs.makeQualified(new Path(inGlob).getParent),
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val target = fs.makeQualified(new Path(outDir))
+    // replacing the output deletes it - refuse an output that is the
+    // input's own directory, which would take the input feeds with it
+    require(target != fs.makeQualified(new Path(inGlob).getParent),
       s"transcodeFeed cannot write into its input directory ($outDir)")
+    val staging = new Path(target.getParent, s"_${target.getName}-staging-${UUID.randomUUID}")
     // Single-pass \u0001 guard: rawFeed's line contract uses \u0001 as
     // the live delimiter (see Tables.rawFeed), so a line CONTAINING it
     // would be silently truncated - tolerable for in-engine scans, not
     // for a file-producing job external consumers read. Reading with a
     // second schema column catches exactly those lines (the split
-    // remainder lands in `extra`), an `observe` counts them DURING the
-    // transcode's own scan (no second decompress pass), and a nonzero
-    // count fails the job after deleting the partial output -
-    // write-then-verify.
+    // remainder lands in `extra`), and an `observe` counts them DURING the
+    // transcode's own scan (no second decompress pass). The output is
+    // staged, so a nonzero count fails the job before the previous
+    // output is touched - write-then-verify.
     val obs = org.apache.spark.sql.Observation("graft_transcode_guard")
-    Tables.rawFeedWithSchema(spark, inGlob, fromEncoding,
-                             "value STRING, extra STRING")
-      .observe(obs, sum(when(col("extra").isNotNull, 1L).otherwise(0L))
-                      .as("tainted"))
-      .select("value")
-      .write.mode("overwrite")
-      .option("compression", "gzip")
-      .text(outDir)
-    val tainted = Option(obs.get("tainted")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    if (tainted > 0L) {
-      fs.delete(outPath, true)
-      throw new IllegalStateException(
-        s"$tainted input line(s) contain \\u0001 - transcode output deleted")
-    }
+    try {
+      Tables.rawFeedWithSchema(spark, inGlob, fromEncoding,
+                               "value STRING, extra STRING")
+        .observe(obs, sum(when(col("extra").isNotNull, 1L).otherwise(0L))
+                        .as("tainted"))
+        .select("value")
+        .write
+        .option("compression", "gzip")
+        .text(staging.toString)
+      val tainted = Option(obs.get("tainted")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      if (tainted > 0L)
+        throw new IllegalStateException(
+          s"$tainted input line(s) contain \\u0001 - previous output kept")
+      replace(fs, staging, target)
+    } finally fs.delete(staging, true)
   }
 
   /**
@@ -158,7 +164,8 @@ object Exports {
    * FileSystem API (works on HDFS/object stores, O(#shards), no data
    * movement — renames are what Beam's own finalize step does). Shard
    * order follows part-file name order, matching the task-number order
-   * both systems use. Returns the new names.
+   * both systems use. [[writeAll]] names its shards before it publishes,
+   * so on its exports this only lists the names. Returns the new names.
    */
   def beamShardNames(spark: SparkSession, dir: String,
                      prefix: String): Seq[String] = {

@@ -49,6 +49,13 @@ class PipelineSpec extends SparkSpec {
       Files.writeString(Path.of(s"$inDir/feed.tsv"), content)
       val outDir = tempDir("graft-pipeline-out").toString
       Files.writeString(Path.of(s"$outDir/sibling.txt"), "kept")
+      // a previous run's three-shard exports, which the run replaces whole
+      Exports.Names.foreach { e =>
+        Files.createDirectories(Path.of(s"$outDir/$e"))
+        (0 until 3).foreach { i =>
+          Files.writeString(Path.of(f"$outDir/$e/$e.csv-$i%05d-of-00003"), "old")
+        }
+      }
 
       assert(Pipeline.run(spark, s"$inDir/*.tsv", outDir) === want, name)
 
@@ -74,20 +81,6 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.csv(s"$outDir/hits").count() === 1)
   }
 
-  test("run with Spark's shard names keeps the part-files' .csv suffix") {
-    val inDir = tempDir("graft-pipeline-sparknames").toString
-    Files.writeString(Path.of(s"$inDir/feed.tsv"),
-      "1000\tu\t1\tTRK\t\t1\tpage\tsrv\tibm\tscv\n")
-    val outDir = tempDir("graft-pipeline-sparknames-out").toString
-    assert(Pipeline.run(spark, s"$inDir/*.tsv", outDir, beamNames = false) === ((1L, 1L)))
-    Exports.Names.foreach { e =>
-      val parts = new File(s"$outDir/$e").list()
-        .filterNot(n => n.startsWith(".") || n.startsWith("_"))
-      assert(parts.nonEmpty && parts.forall(_.matches("part-\\d{5}-.*\\.csv")),
-             parts.mkString(","))
-    }
-  }
-
   test("summaryJson: the closing line is one JSON object with the run's counts") {
     val line = Pipeline.summaryJson(10L, 7L, "out/\"x\"")
     assert(!line.contains("\n"))
@@ -99,16 +92,21 @@ class PipelineSpec extends SparkSpec {
     assert(node.get("output").asText === "out/\"x\"")
   }
 
-  test("parseArgs: required flags, defaults, and the --spark-names switch") {
+  test("parseArgs: required flags and defaults") {
     val a = Pipeline.parseArgs(Seq("--input", "in/*.gz", "--output", "out",
                                    "--encoding", "ISO-8859-1",
-                                   "--master", "local[2]", "--spark-names"))
-    assert(a === Pipeline.Args("in/*.gz", "out", "ISO-8859-1", "local[2]",
-                               beamNames = false))
+                                   "--master", "local[2]"))
+    assert(a === Pipeline.Args("in/*.gz", "out", "ISO-8859-1", Some("local[2]")))
     assert(Pipeline.parseArgs(Seq("--input", "i", "--output", "o")) ===
       Pipeline.Args("i", "o"))
     intercept[IllegalArgumentException](Pipeline.parseArgs(Seq("--input", "i")))
     intercept[IllegalArgumentException](
       Pipeline.parseArgs(Seq("--input", "i", "--output", "o", "--bogus")))
+  }
+
+  test("masterToSet: --master wins, a launcher's master is kept, else local[*]") {
+    assert(Pipeline.masterToSet(Some("local[2]"), Some("yarn")) === Some("local[2]"))
+    assert(Pipeline.masterToSet(None, Some("yarn")) === None)
+    assert(Pipeline.masterToSet(None, None) === Some("local[*]"))
   }
 }

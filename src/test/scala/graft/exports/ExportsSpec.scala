@@ -1,7 +1,8 @@
 package graft.exports
 
-import java.io.File
+import java.io.{File, FileOutputStream, OutputStreamWriter}
 import java.nio.file.Files
+import java.util.zip.GZIPOutputStream
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
@@ -36,6 +37,12 @@ class ExportsSpec extends SparkSpec {
   private def lines(dir: String): Seq[String] =
     spark.read.text(dir).collect().map(_.getString(0)).toSeq.sorted
 
+  /** Writes `text` to `file` gzipped, in `charset`. */
+  private def gzip(file: String, text: String, charset: String): Unit = {
+    val w = new OutputStreamWriter(new GZIPOutputStream(new FileOutputStream(file)), charset)
+    try w.write(text) finally w.close()
+  }
+
   test("writeAll: three sharded CSV dirs, row counts consistent") {
     val dir = tempDir("graft-exports").toString
     Exports.writeAll(parsed, dir)
@@ -63,11 +70,12 @@ class ExportsSpec extends SparkSpec {
     assert(lines(s"$all/visits").size === 3)
     // the fixture reaches the quoting paths: an embedded quote and comma
     assert(lines(s"$all/hits").exists(_.contains(""""say \"hi\", then go"""")))
-    // a .csv write's layout: part-*.csv files and a _SUCCESS marker
+    // Beam's layout: a _SUCCESS marker and a contiguous set of
+    // <e>.csv-SSSSS-of-NNNNN shards
     Exports.Names.foreach { e =>
-      val names = new File(s"$all/$e").list().filterNot(_.startsWith("."))
-      assert(names.contains("_SUCCESS"), e)
-      assert(names.filter(_ != "_SUCCESS").forall(n => n.startsWith("part-") && n.endsWith(".csv")),
+      val names = new File(s"$all/$e").list().filterNot(_.startsWith(".")).sorted.toSeq
+      val n = names.size - 1
+      assert(n > 0 && names === "_SUCCESS" +: (0 until n).map(i => f"$e.csv-$i%05d-of-$n%05d"),
              names.mkString(","))
     }
   }
@@ -144,14 +152,11 @@ class ExportsSpec extends SparkSpec {
   }
 
   test("transcodeFeed: gzip ISO-8859-1 in, gzip UTF-8 out (encoding_update.py parity)") {
-    import java.io.{FileOutputStream, OutputStreamWriter}
-    import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+    import java.util.zip.GZIPInputStream
     val in = tempDir("graft-transcode-in").toString
     val out = s"${tempDir("graft-transcode-out")}/feeds"
     val line = "1000\tu\tv\tTRK\t\t2\tcafé\tsrv\ti\ts"
-    val w = new OutputStreamWriter(
-      new GZIPOutputStream(new FileOutputStream(s"$in/feed.tsv.gz")), "ISO-8859-1")
-    try w.write(line) finally w.close()
+    gzip(s"$in/feed.tsv.gz", line, "ISO-8859-1")
     Exports.transcodeFeed(spark, s"$in/*.tsv.gz", out)
     // the produced artifact must be gzip whose UNCOMPRESSED BYTES are UTF-8
     val gz = new java.io.File(out).listFiles().filter(_.getName.endsWith(".gz"))
@@ -167,17 +172,31 @@ class ExportsSpec extends SparkSpec {
   }
 
   test("transcodeFeed fails on sentinel-tainted input and deletes the partial output") {
-    import java.io.{FileOutputStream, OutputStreamWriter}
-    import java.util.zip.GZIPOutputStream
     val in = tempDir("graft-taint-in").toString
     val out = s"${tempDir("graft-taint-out")}/feeds"
-    val w = new OutputStreamWriter(
-      new GZIPOutputStream(new FileOutputStream(s"$in/feed.tsv.gz")), "UTF-8")
-    try w.write("good\tline\nbad\u0001line") finally w.close()
+    gzip(s"$in/feed.tsv.gz", "good\tline\nbad\u0001line", "UTF-8")
     val e = intercept[IllegalStateException](
       Exports.transcodeFeed(spark, s"$in/*.tsv.gz", out))
     assert(e.getMessage.contains("1 input line"))
-    assert(!new java.io.File(out).exists()) // partial output removed
+    assert(!new java.io.File(out).exists()) // nothing published
+  }
+
+  test("a tainted transcodeFeed keeps the previous output byte-identical and leaves no staging") {
+    val good = tempDir("graft-taint-keep-good").toString
+    val tainted = tempDir("graft-taint-keep-tainted").toString
+    val parent = tempDir("graft-taint-keep-out")
+    val out = s"$parent/feeds"
+    gzip(s"$good/feed.tsv.gz", "1000\tu\tv\tTRK\t\t2\tcafé\tsrv\ti\ts", "ISO-8859-1")
+    gzip(s"$tainted/feed.tsv.gz", "good\tline\nbad\u0001line", "ISO-8859-1")
+    Exports.transcodeFeed(spark, s"$good/*.tsv.gz", out)
+    def snapshot: Map[String, Seq[Byte]] = new File(out).listFiles()
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    val before = snapshot
+    assert(before.keys.exists(_.endsWith(".gz")))
+
+    intercept[IllegalStateException](Exports.transcodeFeed(spark, s"$tainted/*.tsv.gz", out))
+    assert(snapshot === before)
+    assert(parent.toFile.list().toSeq === Seq("feeds"))
   }
 
   test("beamShardNames renames part-files to <prefix>-SSSSS-of-NNNNN") {
@@ -207,12 +226,5 @@ class ExportsSpec extends SparkSpec {
     // the lower task id must have become shard 0
     assert(java.nio.file.Files.readString(
       java.nio.file.Path.of(s"$dir/x.csv-00000-of-00002")) === "low-task")
-  }
-
-  test("visitors dedup variant collapses duplicates") {
-    val raw = Exports.visitorsFrame(parsed)
-    val dedup = Exports.visitorsFrame(parsed, dedup = true)
-    assert(dedup.count() === parsed.select("user_id").distinct().count())
-    assert(dedup.count() < raw.count())
   }
 }
