@@ -36,10 +36,11 @@ object Exports {
     * from `main.py:104-107`). One row per hit. */
   private val hitsColumns: Seq[Column] = Schemas.hitsExportColumns.map(col)
 
-  /** visits fields (`main.py:99-102`), read off a session's first row. */
+  /** visits fields (`main.py:99-102`), read off a session's closing row,
+    * whose ts is the visit's end. */
   private val visitsColumns: Seq[Column] = Seq(
     col("visit_key"), col("user_id"),
-    col("visit_start_us").as("visit_start"), col("visit_end_us").as("visit_end"))
+    col("visit_start_us").as("visit_start"), col("ts").as("visit_end"))
 
   /** visitors fields (`main.py:157-160`): reference parity keeps one row
     * per hit (`main.py:214`; SURVEY.md §1.5 quirk). */
@@ -52,9 +53,9 @@ object Exports {
   def hitsFrame(parsedHits: DataFrame): DataFrame =
     sessionized(parsedHits).select(hitsColumns: _*)
 
-  /** visits.csv frame: one row per session, its first hit's. */
+  /** visits.csv frame: one row per session, its closing hit's. */
   def visitsFrame(parsedHits: DataFrame): DataFrame =
-    sessionized(parsedHits).filter(col("session_first")).select(visitsColumns: _*)
+    sessionized(parsedHits).filter(col("session_last")).select(visitsColumns: _*)
 
   /** visitors.csv frame. */
   def visitorsFrame(parsedHits: DataFrame): DataFrame =
@@ -63,11 +64,13 @@ object Exports {
   /** Write all three exports under `baseDir/{hits,visits,visitors}` as
     * sharded CSV (part-file per task ≡ Beam shard-per-bundle), in ONE job
     * over ONE sessionized pass with nothing cached — the reference's
-    * shape (`main.py:207-234`). Every hit emits its hits and visitors CSV
-    * lines and, on its session's first row, its visits line, each tagged
-    * with its export; one text write partitioned by that tag lands them
-    * in a staging directory under `baseDir`. The shuffle stays visible to
-    * AQE, so task and file counts follow the data.
+    * shape (`main.py:207-234`). The pass sorts each user's hits once
+    * (`Sessionize.withSessionBounds`). Every hit emits its hits and
+    * visitors CSV lines and, on its session's closing hit, its visits
+    * line, each tagged with its export; one text write partitioned by
+    * that tag lands them in a staging directory under `baseDir`. The
+    * shuffle stays visible to AQE, so task and file counts follow the
+    * data.
     *
     * Each staged `export=<e>` directory is finished before any target is
     * touched: an export with no rows gets one empty shard, and every
@@ -81,7 +84,7 @@ object Exports {
       struct(lit(name).as("export"), to_csv(struct(columns: _*)).as("value"))
     val perHit = Seq(line("hits", hitsColumns), line("visitors", visitorsColumns))
     val lines = sessionized(parsedHits).select(inline(
-      when(col("session_first"), array(perHit :+ line("visits", visitsColumns): _*))
+      when(col("session_last"), array(perHit :+ line("visits", visitsColumns): _*))
         .otherwise(array(perHit: _*))))
 
     val base = new Path(baseDir)
@@ -129,22 +132,18 @@ object Exports {
     require(target != fs.makeQualified(new Path(inGlob).getParent),
       s"transcodeFeed cannot write into its input directory ($outDir)")
     val staging = new Path(target.getParent, s"_${target.getName}-staging-${UUID.randomUUID}")
-    // Single-pass \u0001 guard: rawFeed's line contract uses \u0001 as
-    // the live delimiter (see Tables.rawFeed), so a line CONTAINING it
-    // would be silently truncated - tolerable for in-engine scans, not
-    // for a file-producing job external consumers read. Reading with a
-    // second schema column catches exactly those lines (the split
-    // remainder lands in `extra`), and an `observe` counts them DURING the
-    // transcode's own scan (no second decompress pass). The output is
-    // staged, so a nonzero count fails the job before the previous
-    // output is touched - write-then-verify.
+    // Single-pass \u0001 guard: rawFeed cuts a line at \u0001 (see
+    // Tables.rawFeed) - tolerable for in-engine scans, not for a
+    // file-producing job external consumers read. The transcode writes
+    // rawFeed's lines before that cut, and an `observe` counts the ones
+    // holding \u0001 DURING the transcode's own scan (no second
+    // decompress pass). The output is staged, so a nonzero count fails
+    // the job before the previous output is touched - write-then-verify.
     val obs = org.apache.spark.sql.Observation("graft_transcode_guard")
     try {
-      Tables.rawFeedWithSchema(spark, inGlob, fromEncoding,
-                               "value STRING, extra STRING")
-        .observe(obs, sum(when(col("extra").isNotNull, 1L).otherwise(0L))
+      Tables.feedLines(spark, inGlob, fromEncoding)
+        .observe(obs, sum(when(col("value").contains("\u0001"), 1L).otherwise(0L))
                         .as("tainted"))
-        .select("value")
         .write
         .option("compression", "gzip")
         .text(staging.toString)

@@ -24,7 +24,8 @@ import graft.model.Schemas
  *     cannot OOM an executor at 100 TB scale.
  *
  *  2. [[withSessionIds]] — gaps-and-islands via window functions
- *     (`lag` → gap flag → running sum): per-row session ids with one
+ *     (`lag` → gap flag → running sum, and a running max of session-start
+ *     ts for `visit_start_us`): per-row session ids under ONE
  *     sort-within-partition, the skew-safe shape for per-hit enrichment and
  *     the formulation a DuckDB/ANSI oracle can replicate exactly.
  *
@@ -83,16 +84,20 @@ object Sessionize {
                      gapUs: Long = Schemas.SessionGapUs,
                      userCol: String = "user_id",
                      tsUsCol: String = "ts_us"): DataFrame =
-    withSessionBounds(events, gapUs, userCol, tsUsCol)
-      .drop("session_first", "visit_end_us")
+    withSessionBounds(events, gapUs, userCol, tsUsCol).drop("session_last")
 
   /**
-   * [[withSessionIds]] plus, on every row, its session's `visit_end_us`
-   * (`max` over the same per-session window as `visit_start_us`) and
-   * `session_first`: true on exactly one row per session, the one that
-   * opens it (no earlier hit of the user, or a gap of at least `gapUs`).
-   * One pass gives both the per-hit rows and, filtered to
-   * `session_first`, one row per visit, with no second shuffle.
+   * [[withSessionIds]] plus `session_last`: true on exactly one row per
+   * session, the one that closes it (no later hit of the user, or a gap
+   * of at least `gapUs` to the next). On that row `tsUsCol` is the
+   * visit's end, so one pass gives both the per-hit rows and, filtered
+   * to `session_last`, one row per visit, with no second shuffle.
+   *
+   * Every column comes from one window spec, `partitionBy(user).orderBy(ts)`,
+   * so the plan sorts once: `lag` and `lead` of ts, then, over the same
+   * order, a running `sum` of breaks (`session_id`) and a running `max`
+   * of the ts that open a session (`visit_start_us`). Rows with equal ts
+   * never split, so the order the sort leaves them in does not matter.
    */
   def withSessionBounds(events: DataFrame,
                         gapUs: Long = Schemas.SessionGapUs,
@@ -100,22 +105,19 @@ object Sessionize {
                         tsUsCol: String = "ts_us"): DataFrame = {
     val byUser = Window.partitionBy(userCol).orderBy(tsUsCol)
     val running = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withSid = events
-      .withColumn("prev_ts_us", lag(tsUsCol, 1).over(byUser))
-      .withColumn(
-        "session_break",
-        when(col(tsUsCol) - col("prev_ts_us") >= gapUs, 1).otherwise(0)
-      )
-      .withColumn("session_id", sum("session_break").over(running))
-      .withColumn("session_first",
-                  col("prev_ts_us").isNull || col("session_break") === 1)
-      .drop("prev_ts_us", "session_break")
-    val bySession = Window.partitionBy(userCol, "session_id")
-    withSid
+    val ts = col(tsUsCol)
+    val (prev, next) = (col("prev_ts_us"), col("next_ts_us"))
+    val break = ts - prev >= gapUs
+    // each select is one Window operator over the one sort
+    events
+      .select(col("*"), lag(ts, 1).over(byUser).as("prev_ts_us"),
+              lead(ts, 1).over(byUser).as("next_ts_us"))
       .select(col("*"),
-              min(tsUsCol).over(bySession).as("visit_start_us"),
-              max(tsUsCol).over(bySession).as("visit_end_us"))
+              sum(when(break, 1).otherwise(0)).over(running).as("session_id"),
+              max(when(prev.isNull || break, ts)).over(running).as("visit_start_us"))
       .withColumn("visit_key", visitKey(col(userCol), col("visit_start_us")))
+      .withColumn("session_last", next.isNull || next - ts >= gapUs)
+      .drop("prev_ts_us", "next_ts_us")
   }
 
   /**

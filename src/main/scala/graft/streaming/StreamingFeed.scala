@@ -23,8 +23,9 @@ import graft.sources.Tables
  */
 object StreamingFeed {
 
-  /** Unbounded raw feed lines (single `value` column), read with the
-    * batch reader's options ([[Tables.rawFeedOptions]]). */
+  /** Unbounded raw feed lines (single `value` column) under the batch
+    * reader's line contract, read by the CSV reader
+    * ([[Tables.rawFeedOptions]] says why). */
   def rawFeedStream(spark: SparkSession, path: String,
                     encoding: String = "UTF-8",
                     maxFilesPerTrigger: Int = 16): DataFrame =

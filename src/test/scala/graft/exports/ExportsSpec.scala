@@ -7,8 +7,14 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.ingest.{FeedSynth, HitParser}
@@ -17,7 +23,7 @@ import graft.sources.Tables
 
 /** The three sharded CSV exports (reference K1, `main.py:229-234`) written
   * and read back — sink glue on top of the proven frames. */
-class ExportsSpec extends SparkSpec {
+class ExportsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private lazy val parsed =
@@ -123,6 +129,31 @@ class ExportsSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
     assert(writes.size === 1)
     assert(!writes.peek().contains("InMemory"), writes.peek())
+  }
+
+  test("writeAll sorts each user's hits once and has no per-session window (executed plan)") {
+    val plans = new LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try Exports.writeAll(tricky, tempDir("graft-exports-plan").toString)
+    finally spark.listenerManager.unregister(listener)
+    val plan = plans.poll(60, TimeUnit.SECONDS)
+    assert(plan != null, "no write plan seen")
+    def leading(s: SortExec): String = s.sortOrder.head match {
+      case SortOrder(a: Attribute, _, _, _) => a.name
+      case o => o.sql
+    }
+    val sorts = collect(plan) { case s: SortExec => leading(s) }
+    assert(sorts.sorted === Seq("export", "user_id"), plan)
+    val bySession = collect(plan) {
+      case w: WindowExec if w.partitionSpec.exists(_.references.exists(_.name == "session_id")) => w
+    }
+    assert(bySession.isEmpty, plan)
   }
 
   test("a job failing inside writeAll keeps the previous exports and leaves no staging") {

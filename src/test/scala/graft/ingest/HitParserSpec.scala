@@ -175,25 +175,8 @@ class HitParserSpec extends SparkSpec {
   }
 
   test("fuzz: parse ∪ quarantine = input, and parse equals the filter formulation") {
-    val rnd = new Random(7)
-    val alphabet = "abcXYZ019 ;,:-_\u00e9\u00fc\u00df\u00ff\u00a0"
-    def text(max: Int) = Seq.fill(rnd.nextInt(max + 1))(alphabet(rnd.nextInt(alphabet.length))).mkString
-    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.length))
-    val overflowTs = "99999999999999999999"
-    val lines = Seq.fill(3000) {
-      val ts = pick(rnd.nextInt(Int.MaxValue).toString, "", "12ab", "+5", " 7", "-3",
-                    overflowTs, "0000000000000000000001517958846", "9223372036854775807")
-      val products = pick("", "P;SKU1;2", "NOSEMI", ";", "a;b;c;d", text(6))
-      val events = pick("", "1,2,11", "12,204", "13", text(8))
-      val full = Seq(ts, text(9), rnd.nextInt(1000).toString, text(4), products, events,
-                     text(12), text(6), text(4), text(4)) ++ Seq.fill(pick(0, 0, 2))(text(3))
-      val cut = if (rnd.nextInt(6) == 0) full.take(rnd.nextInt(10)) else full
-      val fields = cut.map(f => if (rnd.nextInt(12) == 0) "" else f)
-      val line = fields.mkString("\t") + pick("", "", "", "\r")
-      val k = rnd.nextInt(line.length + 1)
-      pick(line, line, line, line, line, line, line,
-           "\u0001" + line, line.take(k) + "\u0001" + line.drop(k))
-    }
+    val overflowTs = FeedFuzz.OverflowTs
+    val lines = FeedFuzz.lines()
     val all = Tables.rawFeed(spark, feedFile(tempDir("graft-parse-fuzz"), lines), "ISO-8859-1")
     // lines whose ts field is the overflow value crashed the filter formulation
     val safe = Tables.rawFeed(spark, feedFile(tempDir("graft-parse-fuzz-safe"),
@@ -213,6 +196,36 @@ class HitParserSpec extends SparkSpec {
       assert(parsed.exceptAll(oracle).isEmpty, "parse rows the filter formulation drops")
       assert(oracle.exceptAll(parsed).isEmpty, "filter formulation rows parse drops")
     } finally { parsed.unpersist(); quarantined.unpersist() }
+  }
+}
+
+/** The seeded feed fuzz: 3,000 lines of random fields with bad `ts`
+  * values, short and long rows, empty fields, trailing `\r`, non-ASCII
+  * Latin-1 text and planted U+0001 (leading and inner). Every char is
+  * Latin-1. */
+private[graft] object FeedFuzz {
+  /** An all-digit `ts` too long for a long. */
+  val OverflowTs = "99999999999999999999"
+
+  def lines(seed: Long = 7L, n: Int = 3000): Seq[String] = {
+    val rnd = new Random(seed)
+    val alphabet = "abcXYZ019 ;,:-_\u00e9\u00fc\u00df\u00ff\u00a0"
+    def text(max: Int) = Seq.fill(rnd.nextInt(max + 1))(alphabet(rnd.nextInt(alphabet.length))).mkString
+    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.length))
+    Seq.fill(n) {
+      val ts = pick(rnd.nextInt(Int.MaxValue).toString, "", "12ab", "+5", " 7", "-3",
+                    OverflowTs, "0000000000000000000001517958846", "9223372036854775807")
+      val products = pick("", "P;SKU1;2", "NOSEMI", ";", "a;b;c;d", text(6))
+      val events = pick("", "1,2,11", "12,204", "13", text(8))
+      val full = Seq(ts, text(9), rnd.nextInt(1000).toString, text(4), products, events,
+                     text(12), text(6), text(4), text(4)) ++ Seq.fill(pick(0, 0, 2))(text(3))
+      val cut = if (rnd.nextInt(6) == 0) full.take(rnd.nextInt(10)) else full
+      val fields = cut.map(f => if (rnd.nextInt(12) == 0) "" else f)
+      val line = fields.mkString("\t") + pick("", "", "", "\r")
+      val k = rnd.nextInt(line.length + 1)
+      pick(line, line, line, line, line, line, line,
+           "\u0001" + line, line.take(k) + "\u0001" + line.drop(k))
+    }
   }
 }
 
