@@ -8,14 +8,10 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Shuffle width defaults to the core count (the driver-bench contract at
-    // sf0.1) but is its own knob for scale soaks: partitions are sized so
-    // per-task sort/aggregate state fits executor memory (BASELINE.md
-    // round-12: 128 partitions bound the 2M-doc soak that OOM'd at 32).
+    // The core count at sf0.1; scale soaks raise it so per-task state fits memory.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", Sessions.cpus.toString)
     val spark = Sessions.local("spark.sql.shuffle.partitions" -> shuffle)
-    // Warmup: absorb session/JIT/codegen spin-up so the first timed query
-    // isn't charged ~3s of one-time cost (r1/r2 bench-order artifact).
+    // Warmup, so the first timed query isn't charged session/JIT/codegen spin-up.
     try {
       spark.range(1000000).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -40,20 +36,11 @@ object Bench {
         SparkEntry.queries.view.filterKeys(names).toMap
       case None => SparkEntry.queries
     }
-    // Deterministic name order: Map iteration order reshuffles whenever the
-    // surface grows, which would silently change every query's predecessor
-    // (and so its JIT/GC neighborhood) between rounds — pinning the order
-    // keeps cross-round per-query ratios meaningful (BASELINE.md r9
-    // q_doc_fingerprint attribution).
+    // Name order: each query keeps its predecessor (its JIT/GC neighbourhood)
+    // when the surface grows, so per-query times stay comparable across runs.
     val timed = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // collect between queries so one query's garbage doesn't surface as a
-      // GC pause inside the next one's wall time (r2 judge re-ran a 11.7s
-      // outlier that measured 1.6s in isolation — cross-query GC noise).
-      // Also unpersist dead checkpoint blocks eagerly: localCheckpoint RDDs
-      // from the PREVIOUS query are only freed when the async
-      // ContextCleaner notices them unreachable, which lags enough that a
-      // 2M-doc chain OOM'd a query that passes standalone in the same
-      // heap (BASELINE.md round-12 2M soak).
+      // Free the previous query's checkpoint blocks (the async ContextCleaner
+      // lags) and garbage, so neither lands in this query's heap or time.
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       System.gc()
       // per-gate drain accounting starts clean (see the stream_split
@@ -91,13 +78,8 @@ object Bench {
       (name, secs,
        graft.queries.StreamingQueries.StreamObservability.drainSecs)
     }
-    // Build/drain split for the streaming gates (round-14 VERDICT item
-    // 5): drain_s is the in-stream execution window the observability
-    // hook accumulated during this query; build_s = total − drain is
-    // the amortizable half (frozen-index construction, input staging,
-    // sink read-back). Keyed per gate so BASELINE.md can pin the drain
-    // alone — a regression in ingest cost is no longer masked by index
-    // build noise. Batch queries never drain (accumulator stays 0).
+    // Stream gates: drain_s is the in-stream window, build_s = total − drain
+    // (index build, staging, read-back). Batch queries never drain.
     val streamSplit = timed.collect { case (n, s, d) if d > 0.0 =>
       n -> ((math.max(0.0, s - d), d))
     }
@@ -112,59 +94,29 @@ object Bench {
     val qs = results.map { case (k, v) => s"${jstr(k)}:${j3(v)}" }.mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // Batch vs streaming subtotals: the streaming gates carry fixed
-    // harness cost (input-file staging, state store, AvailableNow drain)
-    // that is legitimate gate overhead but not comparable to the batch
-    // queries' per-operator cost — a single total across both surfaces
-    // made the vs-baseline ratio ill-defined the round the gates landed
-    // (BASELINE.md "Baseline comparison rule"). Compare each subtotal to
-    // its own pinned baseline.
+    // Separate subtotals: stream gates carry fixed harness cost that batch
+    // per-operator times do not; compare each to its own baseline.
     val isStream = (name: String) => name.startsWith("q_stream_")
     val totalBatch = results.filterNot(r => isStream(r._1)).map(_._2).sum
     val totalStream = results.filter(r => isStream(r._1)).map(_._2).sum
-    // Field order matters for the DRIVER, not for JSON: the driver records
-    // only the last ~2000 chars of stdout, and at 100+ queries the per-query
-    // map alone exceeds that — with the headline fields first they get
-    // truncated out of the recorded tail (BENCH_r12 shows a mid-map cut).
-    // Emitting queries/errors first and the summary scalars last keeps the
-    // line one valid JSON object while guaranteeing metric/value/subtotals
-    // land inside the recorded window.
-    // action/shuffle are part of the line so artifacts are
-    // self-describing: a checksum-mode table diffed against a count-mode
-    // one reads as a systematic regression (checksum forces every output
-    // column); bench_diff.py refuses mismatched actions.
+    // Maps first, scalars last, so a tail-truncated record keeps the summary.
+    // action/shuffle make the artifact self-describing: bench_diff.py
+    // refuses to diff a checksum table against a count one.
     val split = streamSplit.map { case (k, (b, d)) =>
       s"${jstr(k)}:{\"build_s\":${j3(b)},\"drain_s\":${j3(d)}}"
     }.mkString("{", ",", "}")
     val drainStream = streamSplit.map(_._2._2).sum
     val line = s"""{"queries":$qs,"errors":$errs,"stream_split":$split,"metric":"total","value":${j3(total)},"unit":"sec","n_queries":${results.size},"total_batch":${j3(totalBatch)},"total_stream":${j3(totalStream)},"total_stream_drain":${j3(drainStream)},"sf":"$sfDir","action":"$action","shuffle":"$shuffle"}"""
     println(line)
-    // SECOND, summary-only JSON line (round-21 VERDICT item 1, additions
-    // only): with 245 per-query entries the full line is ~14 KB, and the
-    // driver records only the last ~2000 chars of stdout — a full-line
-    // parse can never succeed (PERF_r20/r21 both show parsed: null). This
-    // compact line carries the same summary scalars and NO maps (~220
-    // chars), emitted LAST so it always lands complete inside the recorded
-    // tail; the full line above and the bench_perquery.json artifact keep
-    // the per-query table. "n_errors" stands in for the errors map — a
-    // non-zero count plus the non-zero exit code is the machine-readable
-    // failure signal.
+    // A summary-only line, last: the full line (~14 KB) overflows a recorder
+    // that keeps ~2000 chars of stdout. n_errors stands in for the errors map.
     println(s"""{"metric":"total","value":${j3(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"total_batch":${j3(totalBatch)},"total_stream":${j3(totalStream)},"total_stream_drain":${j3(drainStream)},"sf":"$sfDir","action":"$action","shuffle":"$shuffle"}""")
-    // The driver records only the stdout TAIL (~2000 chars), which at 138
-    // queries truncates the per-query map out of BENCH_rN.json (r12/r13
-    // lost the first half — only 77/138 per-query times were recoverable
-    // for regression diffing). Persist the FULL line as a repo artifact so
-    // every round's per-query table survives; the driver's commit sweep
-    // picks it up. FULL runs only — a SPARK_GRAFT_ONLY subset run (dev
-    // loop, scale soak) overwriting the full table would be worse than
-    // the truncation this fixes — unless the caller names an explicit
-    // output. Best-effort: a read-only CWD must not fail the bench.
+    // The full line goes to bench_perquery.json, where a tail-only recorder
+    // cannot truncate it: full runs only (a SPARK_GRAFT_ONLY subset must not
+    // overwrite the full table) unless an explicit output is named.
     val explicit = sys.env.get("SPARK_GRAFT_PERQUERY_OUT")
-    // The implicit default anchors to the REPO ROOT (nearest ancestor of
-    // the launch CWD containing build.sbt), not the raw CWD: a bench
-    // launched from a scratch dir would otherwise misplace the artifact
-    // the regression differ reads, silently (round-14 ADVICE). Falls back
-    // to the CWD only when no build.sbt ancestor exists.
+    // Default: the nearest ancestor of the CWD holding build.sbt (where
+    // bench_diff.py looks), else the CWD.
     def repoRootDefault: java.nio.file.Path = {
       var d = java.nio.file.Paths.get("").toAbsolutePath
       var found: Option[java.nio.file.Path] = None

@@ -172,23 +172,21 @@ object GraftFunctions {
         "graft_bpe_encode takes (string text, constant array<string> merges)")
     }
   )
+
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(intDot, shingles, pqNearest, ivfNearest, bpeEncode)
 }
 
 /**
  * Session-extension registration (`spark.sql.extensions=graft.expr.GraftExtensions`):
- * exposes the scalar expressions to SQL (`graft_int_dot(a, b)`,
- * `graft_shingles(toks, n)`) and the whole-operator primitives as TABLE
- * functions (`graft_asof_join`, `graft_range_join`, `graft_components`,
- * `graft_topk` — [[GraftTableFunctions]]). The Column-API paths don't
- * need the extension — they build the expressions/plans directly.
+ * exposes the scalar expressions to SQL ([[GraftFunctions.all]]) and the
+ * whole-operator primitives as TABLE functions
+ * ([[GraftTableFunctions.all]]). The Column-API paths don't need the
+ * extension — they build the expressions/plans directly.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.intDot)
-    ext.injectFunction(GraftFunctions.shingles)
-    ext.injectFunction(GraftFunctions.pqNearest)
-    ext.injectFunction(GraftFunctions.ivfNearest)
-    ext.injectFunction(GraftFunctions.bpeEncode)
+    GraftFunctions.all.foreach(ext.injectFunction)
     GraftTableFunctions.all.foreach(ext.injectTableFunction)
   }
 }

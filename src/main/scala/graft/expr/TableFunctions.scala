@@ -1,13 +1,18 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.StringType
 
 import graft.operators.{ConnectedComponents, GlobalRank, Joins, TopK}
+import graft.queries.{CurationQueries, DedupQueries, IngestQueries, SimQueries,
+                      TextStatsQueries, WebQueries}
+import graft.session.Sessionize
+import graft.streaming.StreamingCuration
+import graft.vector.VectorOps
 
 /**
  * SQL TABLE-function surface for the library's whole-operator primitives
@@ -37,134 +42,126 @@ object GraftTableFunctions {
     s
   }
 
-  private def strArg(args: Seq[Expression], i: Int, fn: String): String = {
-    require(i < args.length, s"$fn: missing argument ${i + 1}")
-    val e = args(i)
-    require(e.foldable, s"$fn: argument ${i + 1} must be a constant string")
-    // type-check BEFORE eval: a foldable non-string (graft_x(42, ...))
-    // must fail the promised contract, not coerce via toString
-    require(e.dataType == StringType,
-            s"$fn: argument ${i + 1} must be a constant string, " +
-              s"got ${e.dataType.simpleString}")
-    val v = e.eval()
-    require(v != null, s"$fn: argument ${i + 1} must not be null")
-    v.toString
-  }
+  /** The constant arguments of one call to table function `fn`, read by
+    * position; each reader checks the type (and range) of what it reads
+    * and names `fn` in its error. */
+  private final class Args(fn: String, args: Seq[Expression]) {
+    def n: Int = args.length
 
-  private def longArg(args: Seq[Expression], i: Int, fn: String): Long = {
-    require(i < args.length, s"$fn: missing argument ${i + 1}")
-    val e = args(i)
-    require(e.foldable, s"$fn: argument ${i + 1} must be a constant integer")
-    e.eval() match {
+    def fail(msg: String): Nothing =
+      throw new IllegalArgumentException(s"$fn: $msg")
+
+    def check(cond: Boolean, msg: => String): Unit = if (!cond) fail(msg)
+
+    def str(i: Int): String = {
+      val e = args(i)
+      // type-check BEFORE eval: a foldable non-string (graft_x(42, ...))
+      // must fail the promised contract, not coerce via toString
+      check(e.dataType == StringType,
+            s"argument ${i + 1} must be a constant string, " +
+              s"got ${e.dataType.simpleString}")
+      val v = e.eval()
+      check(v != null, s"argument ${i + 1} must not be null")
+      v.toString
+    }
+
+    def long(i: Int): Long = args(i).eval() match {
       case n: Int => n.toLong
       case n: Long => n
       case n: Short => n.toLong
       case n: Byte => n.toLong
-      case other =>
-        throw new IllegalArgumentException(
-          s"$fn: argument ${i + 1} must be a constant integer, got $other")
+      case other => fail(s"argument ${i + 1} must be a constant integer, got $other")
     }
+
+    /** Integer argument `name`, in `1..Int.MaxValue`. */
+    def int(i: Int, name: String): Int = {
+      val v = long(i)
+      check(v > 0 && v <= Int.MaxValue,
+            s"$name must be positive and at most ${Int.MaxValue}, got $v")
+      v.toInt
+    }
+
+    def csv(i: Int): Seq[String] =
+      str(i).split(',').map(_.trim).filter(_.nonEmpty).toSeq
+
+    /** The table named by argument `i`, on the active session. */
+    def table(i: Int): DataFrame = active.table(str(i))
+
+    /** The `(vec_id, q)` quantized frame of the embeddings table named by
+      * argument `i`. */
+    def vecs(i: Int): DataFrame =
+      table(i).select(col("vec_id"), VectorOps.quantize(col("embedding")).as("q"))
   }
 
-  private def csv(s: String): Seq[String] =
-    s.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+  /** One table function. Its SQL name is the text of `usage` before `(`.
+    * A call takes `arity` arguments (up to `optional` more), each a
+    * constant, and returns the logical plan of the frame `body` builds.
+    * Bodies read `a.int` arguments before resolving tables, so a bad
+    * value fails on its own check rather than on the table's columns. */
+  private def tvf(usage: String, arity: Int, optional: Int = 0)(
+      body: Args => DataFrame): TVF = {
+    val name = usage.takeWhile(_ != '(')
+    require(name.matches("graft_[a-z0-9_]+") && usage.endsWith(")"),
+            s"table-function usage must read 'graft_<name>(…)': $usage")
+    val takes =
+      if (optional > 0) s"$arity or ${arity + optional} arguments"
+      else if (arity == 1) "exactly 1 argument"
+      else s"exactly $arity arguments"
+    (new FunctionIdentifier(name),
+     // 5-arg form: (className, db, name, usage, examples) — the 2-arg
+     // form would silently drop the usage text from DESCRIBE FUNCTION
+     new ExpressionInfo(GraftTableFunctions.getClass.getName, null, name,
+                        usage, ""),
+     (args: Seq[Expression]) => {
+       require(args.length >= arity && args.length <= arity + optional,
+               s"$name takes $takes")
+       args.zipWithIndex.foreach { case (e, i) =>
+         require(e.foldable, s"$name: argument ${i + 1} must be a constant")
+       }
+       body(new Args(name, args)).queryExecution.logical
+     })
+  }
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    // 5-arg form: (className, db, name, usage, examples) — the 2-arg
-    // form would silently drop the usage text from DESCRIBE FUNCTION
-    new ExpressionInfo(GraftTableFunctions.getClass.getName, null, name,
-                       usage, "")
+  val all: Seq[TVF] = Seq(
+    tvf("graft_asof_join(leftTable, rightTable, 'k1,k2', leftTs, rightTs, 'p1,p2')",
+        6) { a =>
+      Joins.asOfJoin(a.table(0), a.table(1), a.csv(2), a.str(3), a.str(4),
+                     a.csv(5))
+    },
 
-  /** `graft_asof_join(left, right, keyCsv, leftT, rightT, payloadCsv)` —
-    * the [[Joins.asOfJoin]] operator from SQL. */
-  val asofJoin: TVF = (
-    new FunctionIdentifier("graft_asof_join"),
-    info("graft_asof_join",
-         "graft_asof_join(leftTable, rightTable, 'k1,k2', leftTs, rightTs, 'p1,p2')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_asof_join"
-      require(args.length == 6, s"$fn takes exactly 6 arguments")
-      val s = active
-      Joins.asOfJoin(
-        s.table(strArg(args, 0, fn)), s.table(strArg(args, 1, fn)),
-        csv(strArg(args, 2, fn)), strArg(args, 3, fn), strArg(args, 4, fn),
-        csv(strArg(args, 5, fn))).queryExecution.logical
-    }
-  )
+    tvf("graft_range_join(intervals, points, 'k1', lo, hi, pt, binWidth, inRangeCol)",
+        8) { a =>
+      Joins.rangeJoinBinned(a.table(0), a.table(1), a.csv(2), a.str(3),
+                            a.str(4), a.str(5), a.long(6), a.str(7))
+    },
 
-  /** `graft_range_join(intervals, points, keyCsv, lo, hi, pt, binWidth,
-    * inRangeCol)` — the [[Joins.rangeJoinBinned]] operator from SQL. */
-  val rangeJoin: TVF = (
-    new FunctionIdentifier("graft_range_join"),
-    info("graft_range_join",
-         "graft_range_join(intervals, points, 'k1', lo, hi, pt, binWidth, inRangeCol)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_range_join"
-      require(args.length == 8, s"$fn takes exactly 8 arguments")
-      val s = active
-      Joins.rangeJoinBinned(
-        s.table(strArg(args, 0, fn)), s.table(strArg(args, 1, fn)),
-        csv(strArg(args, 2, fn)), strArg(args, 3, fn), strArg(args, 4, fn),
-        strArg(args, 5, fn), longArg(args, 6, fn),
-        strArg(args, 7, fn)).queryExecution.logical
-    }
-  )
+    // Connected-component labels (`ConnectedComponents.labels`): one
+    // `(id, lbl)` row per edge-bearing node.
+    tvf("graft_components(pairsTable, aCol, bCol)", 3) { a =>
+      ConnectedComponents.labels(a.table(0), a.str(1), a.str(2))
+    },
 
-  /** `graft_components(pairs, aCol, bCol)` — connected-component labels
-    * ([[ConnectedComponents.labels]]) from SQL: one `(id, lbl)` row per
-    * edge-bearing node. */
-  val components: TVF = (
-    new FunctionIdentifier("graft_components"),
-    info("graft_components", "graft_components(pairsTable, aCol, bCol)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_components"
-      require(args.length == 3, s"$fn takes exactly 3 arguments")
-      ConnectedComponents.labels(
-        active.table(strArg(args, 0, fn)),
-        strArg(args, 1, fn), strArg(args, 2, fn)).queryExecution.logical
-    }
-  )
-
-  /** `graft_topk(table, groupCsv, vCol, idCol, k)` — the map-side-combining
-    * [[TopK.topK]] aggregate from SQL, exploded to ranked rows
-    * `(group…, rnk, v, id)`. */
-  val topk: TVF = (
-    new FunctionIdentifier("graft_topk"),
-    info("graft_topk", "graft_topk(table, 'g1,g2', valueCol, idCol, k)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_topk"
-      require(args.length == 5, s"$fn takes exactly 5 arguments")
-      val s = active
-      val groups = csv(strArg(args, 1, fn))
-      val (v, id) = (strArg(args, 2, fn), strArg(args, 3, fn))
-      val k = longArg(args, 4, fn)
-      require(k > 0 && k <= Int.MaxValue, s"$fn: k out of range: $k")
-      s.table(strArg(args, 0, fn))
-        .groupBy(groups.map(col): _*)
-        .agg(TopK.topK(k.toInt)(col(v), col(id)).as("__topk"))
-        .select(groups.map(col) :+ expr("posexplode(__topk.items)").as(Seq("__pos", "__item")): _*)
-        .select(groups.map(col) ++ Seq(
+    // The map-side-combining `TopK.topK` aggregate, exploded to ranked rows
+    // `(group…, rnk, v, id)`.
+    tvf("graft_topk(table, 'g1,g2', valueCol, idCol, k)", 5) { a =>
+      val groups = a.csv(1).map(col)
+      val (v, id) = (a.str(2), a.str(3))
+      val k = a.int(4, "k")
+      a.table(0)
+        .groupBy(groups: _*)
+        .agg(TopK.topK(k)(col(v), col(id)).as("__topk"))
+        .select(groups :+ expr("posexplode(__topk.items)").as(Seq("__pos", "__item")): _*)
+        .select(groups ++ Seq(
           (col("__pos") + 1).cast("int").as("rnk"),
           col("__item.v").as(v), col("__item.id").as(id)): _*)
-        .queryExecution.logical
-    }
-  )
+    },
 
-  /** `graft_global_rank(table, sortCsv, numPartitions, rankCol)` — the
-    * never-single-partition total-order rank
-    * ([[GlobalRank.withGlobalRank]]) from SQL. Sort columns ascend by
-    * default; suffix `:desc` for descending (`'revenue:desc,id'`).
-    * Include a unique tiebreaker — the operator's determinism
-    * contract. */
-  val globalRank: TVF = (
-    new FunctionIdentifier("graft_global_rank"),
-    info("graft_global_rank",
-         "graft_global_rank(table, 'v:desc,id', numPartitions, rankCol)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_global_rank"
-      require(args.length == 4, s"$fn takes exactly 4 arguments")
-      val s = active
-      val sortCols = csv(strArg(args, 1, fn)).map { spec =>
+    // The never-single-partition total-order rank
+    // (`GlobalRank.withGlobalRank`). Sort columns ascend by default; suffix
+    // `:desc` for descending (`'revenue:desc,id'`). Include a unique
+    // tiebreaker — the operator's determinism contract.
+    tvf("graft_global_rank(table, 'v:desc,id', numPartitions, rankCol)", 4) { a =>
+      val sortCols = a.csv(1).map { spec =>
         // limit -1: bare split(':') drops trailing empty strings, so a
         // truncated "v:" would silently parse as ascending instead of
         // reaching the bad-spec error below
@@ -172,847 +169,362 @@ object GraftTableFunctions {
           case Array(c) if c.nonEmpty => col(c).asc
           case Array(c, "desc") if c.nonEmpty => col(c).desc
           case Array(c, "asc") if c.nonEmpty => col(c).asc
-          case _ => throw new IllegalArgumentException(
-            s"$fn: bad sort spec '$spec' — use 'col' or 'col:desc'")
+          case _ => a.fail(s"bad sort spec '$spec' — use 'col' or 'col:desc'")
         }
       }
-      val n = longArg(args, 2, fn)
-      require(n > 0 && n <= Int.MaxValue, s"$fn: numPartitions out of range: $n")
-      GlobalRank.withGlobalRank(s.table(strArg(args, 0, fn)), sortCols,
-                                n.toInt, strArg(args, 3, fn))
-        .queryExecution.logical
-    }
-  )
+      val n = a.int(2, "numPartitions")
+      GlobalRank.withGlobalRank(a.table(0), sortCols, n, a.str(3))
+    },
 
-  /** `graft_dedup(table, mode)` — corpus deduplication from SQL over any
-    * `(doc_id, text, …)` table, returning the SURVIVING rows.
-    * `mode = 'exact'`: keep the min-doc_id row per normalized content
-    * ([[graft.queries.DedupQueries.exactDedupOf]]).
-    * `mode = 'lsh'`: the full near-dup composition — exact ∪ MinHash-LSH
-    * candidate edges → connected components → one canonical doc per
-    * cluster ([[graft.queries.DedupQueries.dedupedCorpusOf]]). */
-  val dedup: TVF = (
-    new FunctionIdentifier("graft_dedup"),
-    info("graft_dedup", "graft_dedup(docsTable, 'exact'|'lsh')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_dedup"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      val t = active.table(strArg(args, 0, fn))
-      val out = strArg(args, 1, fn) match {
-        case "exact" => graft.queries.DedupQueries.exactDedupOf(t)
-        case "lsh" => graft.queries.DedupQueries.dedupedCorpusOf(t)
-        case other => throw new IllegalArgumentException(
-          s"$fn: unknown mode '$other' — use 'exact' or 'lsh'")
+    // Corpus deduplication over any `(doc_id, text, …)` table, returning the
+    // SURVIVING rows. `exact`: keep the min-doc_id row per normalized content
+    // (`DedupQueries.exactDedupOf`). `lsh`: the full near-dup composition —
+    // exact ∪ MinHash-LSH candidate edges → connected components → one
+    // canonical doc per cluster (`DedupQueries.dedupedCorpusOf`).
+    tvf("graft_dedup(docsTable, 'exact'|'lsh')", 2) { a =>
+      val t = a.table(0)
+      a.str(1) match {
+        case "exact" => DedupQueries.exactDedupOf(t)
+        case "lsh" => DedupQueries.dedupedCorpusOf(t)
+        case other => a.fail(s"unknown mode '$other' — use 'exact' or 'lsh'")
       }
-      out.queryExecution.logical
-    }
-  )
+    },
 
-  /** `graft_decontaminate(trainTable, evalTable)` — cross-corpus LSH
-    * decontamination from SQL: distinct `(train_id, eval_id)` pairs whose
-    * documents share a MinHash band signature
-    * ([[graft.queries.DedupQueries.decontaminatePairs]]). */
-  val decontaminate: TVF = (
-    new FunctionIdentifier("graft_decontaminate"),
-    info("graft_decontaminate", "graft_decontaminate(trainTable, evalTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_decontaminate"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      val s = active
-      graft.queries.DedupQueries.decontaminatePairs(
-        s.table(strArg(args, 0, fn)), s.table(strArg(args, 1, fn)))
-        .queryExecution.logical
-    }
-  )
+    // Cross-corpus LSH decontamination: distinct `(train_id, eval_id)` pairs
+    // whose documents share a MinHash band signature
+    // (`DedupQueries.decontaminatePairs`).
+    tvf("graft_decontaminate(trainTable, evalTable)", 2) { a =>
+      DedupQueries.decontaminatePairs(a.table(0), a.table(1))
+    },
 
-  /** `graft_curate(table)` — the end-to-end curation pipeline from SQL:
-    * dedup (exact ∪ LSH) → repetition quality gate → deterministic
-    * content-hash split; returns surviving rows with their `split`
-    * ([[graft.queries.CurationQueries.curatedCorpusOf]]). */
-  val curate: TVF = (
-    new FunctionIdentifier("graft_curate"),
-    info("graft_curate", "graft_curate(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_curate"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.CurationQueries.curatedCorpusOf(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
+    // The end-to-end curation pipeline: dedup (exact ∪ LSH) → repetition
+    // quality gate → deterministic content-hash split; returns surviving
+    // rows with their `split` (`CurationQueries.curatedCorpusOf`).
+    tvf("graft_curate(docsTable)", 1) { a =>
+      CurationQueries.curatedCorpusOf(a.table(0))
+    },
 
-  /** `graft_sessionize(table, gapSeconds)` — the flagship 30-min-gap
-    * session rollup from SQL over any `(user_id, ts_us, …)` view:
-    * `ts_t` is derived from the µs event time, then the exact batch
-    * operator runs ([[graft.session.Sessionize.visits]] — Beam-exclusive
-    * gap boundary, visit_key derivation and all). */
-  val sessionize: TVF = (
-    new FunctionIdentifier("graft_sessionize"),
-    info("graft_sessionize", "graft_sessionize(eventsTable, gapSeconds)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_sessionize"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      val gapSec = longArg(args, 1, fn)
-      require(gapSec > 0, s"$fn: gapSeconds must be positive, got $gapSec")
-      val ev = active.table(strArg(args, 0, fn))
-        .withColumn("ts_t",
-                    org.apache.spark.sql.functions.timestamp_micros(col("ts_us")))
-      graft.session.Sessionize.visits(ev, gapUs = gapSec * 1000000L)
-        .queryExecution.logical
-    }
-  )
+    // The flagship 30-min-gap session rollup over any `(user_id, ts_us, …)`
+    // view: `ts_t` is derived from the µs event time, then the exact batch
+    // operator runs (`Sessionize.visits` — Beam-exclusive gap boundary,
+    // visit_key derivation and all).
+    tvf("graft_sessionize(eventsTable, gapSeconds)", 2) { a =>
+      val gapUs = a.int(1, "gapSeconds") * 1000000L
+      Sessionize.visits(
+        a.table(0).withColumn("ts_t", timestamp_micros(col("ts_us"))),
+        gapUs = gapUs)
+    },
 
-  /** `graft_span_dedup(docsTable)` — span-level exact dedup from SQL
-    * over any `(doc_id, text, …)` table: every distinct 20-token span
-    * survives once corpus-wide, documents reassembled from surviving
-    * spans ([[graft.queries.DedupQueries.spanDedup]]). */
-  val spanDedup: TVF = (
-    new FunctionIdentifier("graft_span_dedup"),
-    info("graft_span_dedup", "graft_span_dedup(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_span_dedup"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.DedupQueries.spanDedup(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
+    // Span-level exact dedup over any `(doc_id, text, …)` table: every
+    // distinct 20-token span survives once corpus-wide, documents
+    // reassembled from surviving spans (`DedupQueries.spanDedup`).
+    tvf("graft_span_dedup(docsTable)", 1) { a =>
+      DedupQueries.spanDedup(a.table(0))
+    },
 
-  /** `graft_substr_dedup(docsTable[, w])` — EXACT-substring dedup from
-    * SQL over any `(doc_id, text, …)` table: duplicated regions ≥ `w`
-    * tokens (default 13; Lee et al. used ~50) are stripped at token
-    * resolution and at any offset (the ExactSubstr semantics,
-    * [[graft.queries.DedupQueries.substrDedup]]) — the precision
-    * upgrade over `graft_span_dedup`'s fixed 20-token chunks. `w` is
-    * THE recall/aggressiveness knob: smaller strips more. */
-  val substrDedup: TVF = (
-    new FunctionIdentifier("graft_substr_dedup"),
-    info("graft_substr_dedup", "graft_substr_dedup(docsTable[, w])"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_substr_dedup"
-      require(args.length == 1 || args.length == 2,
-              s"$fn takes 1 or 2 arguments")
-      val w = if (args.length == 2) longArg(args, 1, fn) else 13L
-      require(w >= 2 && w <= Int.MaxValue, s"$fn: w out of range: $w")
-      graft.queries.DedupQueries.substrDedup(
-        active.table(strArg(args, 0, fn)), w.toInt)
-        .queryExecution.logical
-    }
-  )
+    // EXACT-substring dedup over any `(doc_id, text, …)` table: duplicated
+    // regions ≥ `w` tokens (default 13; Lee et al. used ~50) are stripped at
+    // token resolution and at any offset (the ExactSubstr semantics,
+    // `DedupQueries.substrDedup`) — the precision upgrade over
+    // `graft_span_dedup`'s fixed 20-token chunks. `w` is THE
+    // recall/aggressiveness knob: smaller strips more.
+    tvf("graft_substr_dedup(docsTable[, w])", 1, optional = 1) { a =>
+      val w = if (a.n == 2) a.int(1, "w") else 13
+      a.check(w >= 2, s"w must be at least 2, got $w")
+      DedupQueries.substrDedup(a.table(0), w)
+    },
 
-  /** `graft_source_cap(docsTable, cap)` — the C4/Gopher hard
-    * per-source document cap from SQL: at most `cap` rows survive per
-    * source, drawn as the salted-md5 rank prefix
-    * ([[graft.queries.CurationQueries.sourceCapOf]]). */
-  val sourceCap: TVF = (
-    new FunctionIdentifier("graft_source_cap"),
-    info("graft_source_cap", "graft_source_cap(docsTable, cap)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_source_cap"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      val cap = longArg(args, 1, fn)
-      require(cap > 0 && cap <= Int.MaxValue, s"$fn: cap out of range: $cap")
-      graft.queries.CurationQueries.sourceCapOf(
-        active.table(strArg(args, 0, fn)), cap.toInt)
-        .queryExecution.logical
-    }
-  )
+    // The C4/Gopher hard per-source document cap: at most `cap` rows survive
+    // per source, drawn as the salted-md5 rank prefix
+    // (`CurationQueries.sourceCapOf`).
+    tvf("graft_source_cap(docsTable, cap)", 2) { a =>
+      val cap = a.int(1, "cap")
+      CurationQueries.sourceCapOf(a.table(0), cap)
+    },
 
-  /** `graft_semantic_dedup(vecsTable, cellCap)` — SemDeDup-style
-    * semantic dedup from SQL over any `(vec_id, embedding, …)` table:
-    * embeddings are quantized, cells trained at `cellCap` (the
-    * recall/cost knob — see
-    * [[graft.queries.DedupQueries.semanticDedup]]), and the kept
-    * `(vec_id, cell)` rows returned. */
-  val semanticDedup: TVF = (
-    new FunctionIdentifier("graft_semantic_dedup"),
-    info("graft_semantic_dedup", "graft_semantic_dedup(vecsTable, cellCap)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_semantic_dedup"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      val cap = longArg(args, 1, fn)
-      require(cap > 0 && cap <= Int.MaxValue, s"$fn: cellCap out of range: $cap")
-      val e = active.table(strArg(args, 0, fn))
-        .select(col("vec_id"),
-                graft.vector.VectorOps.quantize(col("embedding")).as("q"))
-      graft.queries.DedupQueries.semanticDedup(e, cap)
-        .queryExecution.logical
-    }
-  )
+    // SemDeDup-style semantic dedup over any `(vec_id, embedding, …)` table:
+    // embeddings are quantized, cells trained at `cellCap` (the recall/cost
+    // knob — see `DedupQueries.semanticDedup`), and the kept `(vec_id, cell)`
+    // rows returned.
+    tvf("graft_semantic_dedup(vecsTable, cellCap)", 2) { a =>
+      val cap = a.int(1, "cellCap")
+      DedupQueries.semanticDedup(a.vecs(0), cap)
+    },
 
-  /** `graft_semantic_decontam(trainVecs, evalVecs, cellCap)` —
-    * embedding-space train/eval contamination pairs from SQL over two
-    * `(vec_id, embedding, …)` tables (vec_ids disjoint across them —
-    * they key the output): cells train on the union at `cellCap`, and
-    * the (train_id, eval_id, dot) pairs above τ = 0.3 return
-    * ([[graft.queries.DedupQueries.semanticDecontamBetween]]). */
-  val semanticDecontam: TVF = (
-    new FunctionIdentifier("graft_semantic_decontam"),
-    info("graft_semantic_decontam",
-         "graft_semantic_decontam(trainVecs, evalVecs, 256)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_semantic_decontam"
-      require(args.length == 3, s"$fn takes exactly 3 arguments")
-      val cap = longArg(args, 2, fn)
-      require(cap > 0 && cap <= Int.MaxValue, s"$fn: cellCap out of range: $cap")
-      def q(t: String) = active.table(t)
-        .select(col("vec_id"),
-                graft.vector.VectorOps.quantize(col("embedding")).as("q"))
-      graft.queries.DedupQueries.semanticDecontamBetween(
-        q(strArg(args, 0, fn)), q(strArg(args, 1, fn)), cap)
-        .queryExecution.logical
-    }
-  )
+    // Embedding-space train/eval contamination pairs over two
+    // `(vec_id, embedding, …)` tables (vec_ids disjoint across them — they
+    // key the output): cells train on the union at `cellCap`, and the
+    // (train_id, eval_id, dot) pairs above τ = 0.3 return
+    // (`DedupQueries.semanticDecontamBetween`).
+    tvf("graft_semantic_decontam(trainVecs, evalVecs, 256)", 3) { a =>
+      val cap = a.int(2, "cellCap")
+      DedupQueries.semanticDecontamBetween(a.vecs(0), a.vecs(1), cap)
+    },
 
-  /** `graft_lm_score(refTable, candTable)` — LM-familiarity scores
-    * from SQL: bigram counts train on the reference table, candidates
-    * score against them with unseen → 0
-    * ([[graft.queries.TextStatsQueries.lmScoreOf]]). */
-  val lmScore: TVF = (
-    new FunctionIdentifier("graft_lm_score"),
-    info("graft_lm_score", "graft_lm_score(refDocs, candidateDocs)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_lm_score"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      val (c2, c1) = graft.queries.TextStatsQueries.lmCounts(
-        active.table(strArg(args, 0, fn)))
-      graft.queries.TextStatsQueries.lmScoreOf(
-        active.table(strArg(args, 1, fn)), c2, c1)
-        .queryExecution.logical
-    }
-  )
+    // LM-familiarity scores: bigram counts train on the reference table,
+    // candidates score against them with unseen → 0
+    // (`TextStatsQueries.lmScoreOf`).
+    tvf("graft_lm_score(refDocs, candidateDocs)", 2) { a =>
+      val (c2, c1) = TextStatsQueries.lmCounts(a.table(0))
+      TextStatsQueries.lmScoreOf(a.table(1), c2, c1)
+    },
 
-  /** `graft_bm25(docsTable, 'termsCsv', k)` — BM25 relevance top-K from
-    * SQL over any `(doc_id, text, …)` table
-    * ([[graft.queries.TextStatsQueries.bm25Rank]] — the integer-exact
-    * odds-ratio formulation). */
-  val bm25: TVF = (
-    new FunctionIdentifier("graft_bm25"),
-    info("graft_bm25", "graft_bm25(docsTable, 'spark,join', 20)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_bm25"
-      require(args.length == 3, s"$fn takes exactly 3 arguments")
-      val terms = csv(strArg(args, 1, fn))
-      require(terms.nonEmpty, s"$fn: term list must not be empty")
-      val k = longArg(args, 2, fn)
-      require(k > 0 && k <= Int.MaxValue, s"$fn: k out of range: $k")
-      graft.queries.TextStatsQueries.bm25Rank(
-        active.table(strArg(args, 0, fn)), terms, k.toInt)
-        .queryExecution.logical
-    }
-  )
+    // BM25 relevance top-K over any `(doc_id, text, …)` table
+    // (`TextStatsQueries.bm25Rank` — the integer-exact odds-ratio
+    // formulation).
+    tvf("graft_bm25(docsTable, 'spark,join', 20)", 3) { a =>
+      val terms = a.csv(1)
+      a.check(terms.nonEmpty, "term list must not be empty")
+      val k = a.int(2, "k")
+      TextStatsQueries.bm25Rank(a.table(0), terms, k)
+    },
 
-  /** `graft_mixture_sample(docsTable, groupCol, 'en:40,de:60')` — exact
-    * data-mixture sampling from SQL: the largest subset hitting the
-    * target integer-percent group proportions exactly
-    * ([[graft.queries.CurationQueries.mixtureSample]]). */
-  val mixtureSample: TVF = (
-    new FunctionIdentifier("graft_mixture_sample"),
-    info("graft_mixture_sample",
-         "graft_mixture_sample(docsTable, 'lang', 'en:40,de:60')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_mixture_sample"
-      require(args.length == 3, s"$fn takes exactly 3 arguments")
-      val weights = csv(strArg(args, 2, fn)).map { spec =>
+    // Exact data-mixture sampling: the largest subset hitting the target
+    // integer-percent group proportions exactly
+    // (`CurationQueries.mixtureSample`).
+    tvf("graft_mixture_sample(docsTable, 'lang', 'en:40,de:60')", 3) { a =>
+      val weights = a.csv(2).map { spec =>
         spec.split(":", -1) match {
           case Array(g, w) if g.nonEmpty && w.forall(_.isDigit) && w.nonEmpty =>
             (g, w.toInt)
-          case _ => throw new IllegalArgumentException(
-            s"$fn: bad weight spec '$spec' — use 'group:percent'")
+          case _ => a.fail(s"bad weight spec '$spec' — use 'group:percent'")
         }
       }
-      require(weights.map(_._2).sum == 100,
-              s"$fn: weights must sum to 100, got ${weights.map(_._2).sum}")
-      graft.queries.CurationQueries.mixtureSample(
-        active.table(strArg(args, 0, fn)), strArg(args, 1, fn), weights)
-        .queryExecution.logical
+      a.check(weights.map(_._2).sum == 100,
+              s"weights must sum to 100, got ${weights.map(_._2).sum}")
+      CurationQueries.mixtureSample(a.table(0), a.str(1), weights)
+    },
+
+    // Every vector's top-k nearest trained-cell-mates
+    // (`SimQueries.knnGraphOf`).
+    tvf("graft_knn_graph(vecsTable, 3)", 2) { a =>
+      val k = a.int(1, "k")
+      SimQueries.knnGraphOf(a.vecs(0), k)
+    },
+
+    // Mutual-kNN component labels (`SimQueries.semanticClustersOf`).
+    tvf("graft_semantic_clusters(vecsTable, 3)", 2) { a =>
+      val k = a.int(1, "k")
+      SimQueries.semanticClustersOf(a.vecs(0), k)
+    },
+
+    // Cluster-balanced diversity sample (`SimQueries.clusterSampleOf`).
+    tvf("graft_cluster_sample(vecsTable, 3, 5)", 3) { a =>
+      val (k, budget) = (a.int(1, "k"), a.int(2, "budget"))
+      SimQueries.clusterSampleOf(a.vecs(0), k, budget = budget)
+    },
+
+    // The HLL register table of the group column's distinct-`text` sketch
+    // (`TextStatsQueries.hllRegisters`).
+    tvf("graft_hll(docsTable, 'lang')", 2) { a =>
+      TextStatsQueries.hllRegisters(a.table(0), a.str(1))
+    },
+
+    // The count–min counter table of the token stream
+    // (`TextStatsQueries.cmsSketch`).
+    tvf("graft_cms(docsTable)", 1) { a =>
+      TextStatsQueries.cmsSketch(a.table(0))
+    },
+
+    // Per-term df/tf + capped posting prefix
+    // (`TextStatsQueries.invertedIndex`).
+    tvf("graft_inverted_index(docsTable)", 1) { a =>
+      TextStatsQueries.invertedIndex(a.table(0))
+    },
+
+    // SCD-1 snapshot MERGE (`DedupQueries.mergeUpsert`; the changes table
+    // needs `(doc_id, op, text)` with op ∈ upsert|delete).
+    tvf("graft_merge(snapshotTable, changesTable)", 2) { a =>
+      DedupQueries.mergeUpsert(a.table(0), a.table(1))
+    },
+
+    // Corpus snapshot diff (`DedupQueries.corpusDiff`).
+    tvf("graft_diff(oldTable, newTable)", 2) { a =>
+      DedupQueries.corpusDiff(a.table(0), a.table(1))
+    },
+
+    // Overlapping sliding-window chunks (`CurationQueries.chunkOverlap`).
+    tvf("graft_chunk(docsTable)", 1) { a =>
+      CurationQueries.chunkOverlap(a.table(0))
+    },
+
+    // Per-document top-k keywords (`TextStatsQueries.tfidfTerms`).
+    tvf("graft_tfidf(docsTable, 3)", 2) { a =>
+      val k = a.int(1, "k")
+      TextStatsQueries.tfidfTerms(a.table(0), k)
+    },
+
+    // DSIR importance scores for every raw document against a target
+    // corpus's hashed-n-gram distribution (`CurationQueries.dsirScoredOf`).
+    tvf("graft_dsir_score(rawDocs, targetDocs)", 2) { a =>
+      CurationQueries.dsirScoredOf(a.table(0), a.table(1))
+    },
+
+    // Within-document repeated-span strip (`DedupQueries.intraDocDedup`);
+    // zero-shuffle pure projection.
+    tvf("graft_intradoc_dedup(docsTable)", 1) { a =>
+      DedupQueries.intraDocDedup(a.table(0))
+    },
+
+    // The dedup composition keeping the FULLEST member of each duplicate
+    // cluster (`DedupQueries.canonicalCorpusOf`).
+    tvf("graft_canonical_dedup(docsTable)", 1) { a =>
+      DedupQueries.canonicalCorpusOf(a.table(0))
+    },
+
+    // α = 1/2 exponential-smoothing mixture
+    // (`CurationQueries.temperatureMixture`).
+    tvf("graft_temperature_mixture(docsTable, 'lang')", 2) { a =>
+      CurationQueries.temperatureMixture(a.table(0), a.str(1))
+    },
+
+    // The one-call pretraining-corpus composition: canonical dedup →
+    // repetition gate → temperature mixture
+    // (`CurationQueries.pretrainCorpusOf`).
+    tvf("graft_pretrain(docsTable)", 1) { a =>
+      CurationQueries.pretrainCorpusOf(a.table(0))
+    },
+
+    // jusText-lite boilerplate extraction over a named HTML column
+    // (`WebQueries.htmlExtractOf`).
+    tvf("graft_html_extract(table, 'htmlCol')", 2) { a =>
+      WebQueries.htmlExtractOf(a.table(0), a.str(1))
+    },
+
+    // Mojibake repair + NFC over `text` (`WebQueries.normalizeTextOf`).
+    tvf("graft_normalize(docsTable)", 1) { a =>
+      WebQueries.normalizeTextOf(a.table(0))
+    },
+
+    // Blocklist membership with reason codes (`WebQueries.safetyFrame`).
+    tvf("graft_safety(docsTable)", 1) { a =>
+      WebQueries.safetyFrame(a.table(0))
+    },
+
+    // Canonical URL + host key columns appended
+    // (`WebQueries.urlCanonicalOf`).
+    tvf("graft_url_canonical(table, 'urlCol')", 2) { a =>
+      WebQueries.urlCanonicalOf(a.table(0), a.str(1))
+    },
+
+    // WARC container ingestion: one row per response record with header
+    // fields, truncation quarantine flag, and the boilerplate-extracted
+    // payload (`WebQueries.warcExtractOf`).
+    tvf("graft_warc_extract(table, 'warcCol')", 2) { a =>
+      WebQueries.warcExtractOf(a.table(0), a.str(1))
+    },
+
+    // Group-aware train/val/test split: every document keyed to its dedup
+    // component's CANONICAL member, so a near-dup pair never straddles a
+    // train/eval boundary (`CurationQueries.splitClusterOf`).
+    tvf("graft_split_cluster(docsTable)", 1) { a =>
+      CurationQueries.splitClusterOf(a.table(0))
+    },
+
+    // Repeated-line boilerplate stripping over any multi-line
+    // `(doc_id, text, …)` table: lines whose hash appears in ≥ minDocs
+    // documents are dropped from every document
+    // (`WebQueries.boilerplateLinesOf`).
+    tvf("graft_boilerplate(docsTable, minDocs)", 2) { a =>
+      val minDocs = a.int(1, "minDocs")
+      WebQueries.boilerplateLinesOf(a.table(0), minDocs)
+    },
+
+    // Deterministic weight-based epoch upsampling over any
+    // `(doc_id, lang, …)` table: one row per materialized copy with its index
+    // and permutation key (`CurationQueries.upsampleFrame`, library-default
+    // mixture — the `graft_curate` config convention).
+    tvf("graft_upsample(docsTable)", 1) { a =>
+      CurationQueries.upsampleFrame(a.table(0))
+    },
+
+    // Secret/credential class counts, redacted text, and a `secret_free`
+    // flag appended (`StreamingCuration.withSecretScrub` — the shared
+    // batch/stream expression body).
+    tvf("graft_secret_scrub(docsTable)", 1) { a =>
+      StreamingCuration.withSecretScrub(a.table(0))
+    },
+
+    // Per-eval-document exact-13-gram contamination score in basis points
+    // (`DedupQueries.contaminationScoreOf`).
+    tvf("graft_contamination(trainTable, evalTable)", 2) { a =>
+      DedupQueries.contaminationScoreOf(a.table(0), a.table(1))
+    },
+
+    // Span-level language-mixture detection over any
+    // `(doc_id, text, lang, …)` table: per document, chunk-vote counts,
+    // distinct predicted languages, the majority language, and the `mixed`
+    // flag (`TextStatsQueries.langMixtureOf` — profiles trained on that
+    // table's own labels).
+    tvf("graft_lang_mixture(docsTable)", 1) { a =>
+      TextStatsQueries.langMixtureOf(a.table(0))
+    },
+
+    // The composed crawl front door as one reason-coded admission decision
+    // per page (`WebQueries.crawlAdmitFrame`).
+    tvf("graft_crawl_admit(docsTable)", 1) { a =>
+      WebQueries.crawlAdmitFrame(a.table(0))
+    },
+
+    // The crawl admission funnel: each record charged to its FIRST failing
+    // stage in pipeline order (truncated → empty_extract → empty_norm →
+    // safety → robots → license → admitted), counted per stage
+    // (`WebQueries.admitFunnelOf`).
+    tvf("graft_admit_funnel(docsTable)", 1) { a =>
+      WebQueries.admitFunnelOf(a.table(0))
+    },
+
+    // Per-shard counts, position ranges, and order-invariant content
+    // checksums of the deterministic export
+    // (`CurationQueries.exportManifestOf`).
+    tvf("graft_export_manifest(docsTable)", 1) { a =>
+      CurationQueries.exportManifestOf(a.table(0))
+    },
+
+    // Per-language raw vs trained-on token mass under the upsampling mixture
+    // (`CurationQueries.tokenBudgetOf`).
+    tvf("graft_token_budget(docsTable)", 1) { a =>
+      CurationQueries.tokenBudgetOf(a.table(0))
+    },
+
+    // The mergeable rank-error-bounded quantile sketch queried in-plan
+    // (`TextStatsQueries.kllQuantiles`): one (p, est, level, sample_n) row
+    // per target percentile.
+    tvf("graft_kll_quantiles(table, 'idCol', 'valCol')", 3) { a =>
+      TextStatsQueries.kllQuantiles(
+        a.table(0).select(col(a.str(1)).as("doc_id"), col(a.str(2)).as("v")))
+    },
+
+    // GPT-2-class byte-level BPE: merges learned on the table's text, every
+    // document encoded (`TextStatsQueries.byteBpeEncodedOf`). Like
+    // `graft_boilerplate`, the learn pass runs at resolution (bounded
+    // merge-table collect).
+    tvf("graft_byte_bpe(docsTable)", 1) { a =>
+      val d = a.table(0).filter(col("text").isNotNull)
+      TextStatsQueries.byteBpeEncodedOf(d, TextStatsQueries.byteBpeLearnMerges(d))
+    },
+
+    // The JSONL.gz parse chain (strict gunzip → newline framing →
+    // `from_json` → drop-malformed) over any table's binary container
+    // column (`IngestQueries.jsonlFilesParse`).
+    tvf("graft_jsonl_parse(table, 'binCol')", 2) { a =>
+      IngestQueries.jsonlFilesParse(a.table(0).select(col(a.str(1)).as("content")))
+    },
+
+    // The versioned-history MERGE: every changed key's prior row closes at
+    // `epoch`, upserts open a new version, untouched rows stay open
+    // (`DedupQueries.scd2Merge`).
+    tvf("graft_scd2_merge(snapshotTable, changesTable, epoch)", 3) { a =>
+      DedupQueries.scd2Merge(a.table(0), a.table(1), a.long(2))
+    },
+
+    // RFC 9309 robots.txt judgment: parse the named robots DOCUMENT column,
+    // judge the named path for the agent, append `n_rules`/`n_match`/`allowed`
+    // (`WebQueries.robotsCheckOf`).
+    tvf("graft_robots_check(table, 'robotsCol', 'agent', 'pathCol')", 4) { a =>
+      WebQueries.robotsCheckOf(a.table(0), a.str(1), a.str(2), a.str(3))
     }
   )
-
-  /** Quantized `(vec_id, q)` frame for a registered embeddings view —
-    * shared by the vector-family TVFs. */
-  private def quantizedTable(fn: String, args: Seq[Expression]):
-      org.apache.spark.sql.DataFrame =
-    active.table(strArg(args, 0, fn))
-      .select(col("vec_id"),
-              graft.vector.VectorOps.quantize(col("embedding")).as("q"))
-
-  /** `graft_knn_graph(vecsTable, k)` — every vector's top-k nearest
-    * trained-cell-mates ([[graft.queries.SimQueries.knnGraphOf]]). */
-  val knnGraph: TVF = (
-    new FunctionIdentifier("graft_knn_graph"),
-    info("graft_knn_graph", "graft_knn_graph(vecsTable, 3)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_knn_graph"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      val k = longArg(args, 1, fn)
-      require(k > 0 && k <= Int.MaxValue, s"$fn: k out of range: $k")
-      graft.queries.SimQueries.knnGraphOf(quantizedTable(fn, args), k.toInt)
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_semantic_clusters(vecsTable, k)` — mutual-kNN component
-    * labels ([[graft.queries.SimQueries.semanticClustersOf]]). */
-  val semanticClusters: TVF = (
-    new FunctionIdentifier("graft_semantic_clusters"),
-    info("graft_semantic_clusters", "graft_semantic_clusters(vecsTable, 3)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_semantic_clusters"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      val k = longArg(args, 1, fn)
-      require(k > 0 && k <= Int.MaxValue, s"$fn: k out of range: $k")
-      graft.queries.SimQueries
-        .semanticClustersOf(quantizedTable(fn, args), k.toInt)
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_cluster_sample(vecsTable, k, budget)` — cluster-balanced
-    * diversity sample ([[graft.queries.SimQueries.clusterSampleOf]]). */
-  val clusterSample: TVF = (
-    new FunctionIdentifier("graft_cluster_sample"),
-    info("graft_cluster_sample", "graft_cluster_sample(vecsTable, 3, 5)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_cluster_sample"
-      require(args.length == 3, s"$fn takes exactly 3 arguments")
-      val k = longArg(args, 1, fn)
-      val budget = longArg(args, 2, fn)
-      require(k > 0 && k <= Int.MaxValue, s"$fn: k out of range: $k")
-      require(budget > 0 && budget <= Int.MaxValue,
-              s"$fn: budget out of range: $budget")
-      graft.queries.SimQueries
-        .clusterSampleOf(quantizedTable(fn, args), k.toInt,
-                         budget = budget.toInt)
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_hll(docsTable, groupCol)` — the HLL register table of the
-    * group column's distinct-`text` sketch
-    * ([[graft.queries.TextStatsQueries.hllRegisters]]). */
-  val hll: TVF = (
-    new FunctionIdentifier("graft_hll"),
-    info("graft_hll", "graft_hll(docsTable, 'lang')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_hll"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      graft.queries.TextStatsQueries.hllRegisters(
-        active.table(strArg(args, 0, fn)), strArg(args, 1, fn))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_cms(docsTable)` — the count–min counter table of the token
-    * stream ([[graft.queries.TextStatsQueries.cmsSketch]]). */
-  val cms: TVF = (
-    new FunctionIdentifier("graft_cms"),
-    info("graft_cms", "graft_cms(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_cms"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.TextStatsQueries.cmsSketch(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_inverted_index(docsTable)` — per-term df/tf + capped posting
-    * prefix ([[graft.queries.TextStatsQueries.invertedIndex]]). */
-  val invertedIndex: TVF = (
-    new FunctionIdentifier("graft_inverted_index"),
-    info("graft_inverted_index", "graft_inverted_index(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_inverted_index"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.TextStatsQueries.invertedIndex(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_merge(snapshotTable, changesTable)` — SCD-1 snapshot MERGE
-    * ([[graft.queries.DedupQueries.mergeUpsert]]; the changes table
-    * needs `(doc_id, op, text)` with op ∈ upsert|delete). */
-  val mergeUpsert: TVF = (
-    new FunctionIdentifier("graft_merge"),
-    info("graft_merge", "graft_merge(snapshotTable, changesTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_merge"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      graft.queries.DedupQueries.mergeUpsert(
-        active.table(strArg(args, 0, fn)),
-        active.table(strArg(args, 1, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_diff(oldTable, newTable)` — corpus snapshot diff
-    * ([[graft.queries.DedupQueries.corpusDiff]]). */
-  val corpusDiff: TVF = (
-    new FunctionIdentifier("graft_diff"),
-    info("graft_diff", "graft_diff(oldTable, newTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_diff"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      graft.queries.DedupQueries.corpusDiff(
-        active.table(strArg(args, 0, fn)),
-        active.table(strArg(args, 1, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_chunk(docsTable)` — overlapping sliding-window chunks
-    * ([[graft.queries.CurationQueries.chunkOverlap]]). */
-  val chunk: TVF = (
-    new FunctionIdentifier("graft_chunk"),
-    info("graft_chunk", "graft_chunk(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_chunk"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.CurationQueries.chunkOverlap(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_tfidf(docsTable, k)` — per-document top-k keywords
-    * ([[graft.queries.TextStatsQueries.tfidfTerms]]). */
-  val tfidf: TVF = (
-    new FunctionIdentifier("graft_tfidf"),
-    info("graft_tfidf", "graft_tfidf(docsTable, 3)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_tfidf"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      val k = longArg(args, 1, fn)
-      require(k > 0 && k <= Int.MaxValue, s"$fn: k out of range: $k")
-      graft.queries.TextStatsQueries.tfidfTerms(
-        active.table(strArg(args, 0, fn)), k.toInt)
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_dsir_score(rawTable, targetTable)` — DSIR importance scores
-    * for every raw document against a target corpus's hashed-n-gram
-    * distribution ([[graft.queries.CurationQueries.dsirScoredOf]]). */
-  val dsirScore: TVF = (
-    new FunctionIdentifier("graft_dsir_score"),
-    info("graft_dsir_score", "graft_dsir_score(rawDocs, targetDocs)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_dsir_score"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      graft.queries.CurationQueries.dsirScoredOf(
-        active.table(strArg(args, 0, fn)),
-        active.table(strArg(args, 1, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_intradoc_dedup(docsTable)` — within-document repeated-span
-    * strip ([[graft.queries.DedupQueries.intraDocDedup]]); zero-shuffle
-    * pure projection. */
-  val intradocDedup: TVF = (
-    new FunctionIdentifier("graft_intradoc_dedup"),
-    info("graft_intradoc_dedup", "graft_intradoc_dedup(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_intradoc_dedup"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.DedupQueries.intraDocDedup(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_canonical_dedup(docsTable)` — the dedup composition keeping
-    * the FULLEST member of each duplicate cluster
-    * ([[graft.queries.DedupQueries.canonicalCorpusOf]]). */
-  val canonicalDedup: TVF = (
-    new FunctionIdentifier("graft_canonical_dedup"),
-    info("graft_canonical_dedup", "graft_canonical_dedup(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_canonical_dedup"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.DedupQueries.canonicalCorpusOf(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_temperature_mixture(docsTable, groupCol)` — α = 1/2
-    * exponential-smoothing mixture
-    * ([[graft.queries.CurationQueries.temperatureMixture]]). */
-  val temperatureMixture: TVF = (
-    new FunctionIdentifier("graft_temperature_mixture"),
-    info("graft_temperature_mixture",
-         "graft_temperature_mixture(docsTable, 'lang')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_temperature_mixture"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      graft.queries.CurationQueries.temperatureMixture(
-        active.table(strArg(args, 0, fn)), strArg(args, 1, fn))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_pretrain(docsTable)` — the one-call pretraining-corpus
-    * composition: canonical dedup → repetition gate → temperature
-    * mixture ([[graft.queries.CurationQueries.pretrainCorpusOf]]). */
-  val pretrain: TVF = (
-    new FunctionIdentifier("graft_pretrain"),
-    info("graft_pretrain", "graft_pretrain(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_pretrain"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.CurationQueries.pretrainCorpusOf(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_html_extract(table, 'htmlCol')` — jusText-lite boilerplate
-    * extraction over a named HTML column
-    * ([[graft.queries.WebQueries.htmlExtractOf]]). */
-  val htmlExtract: TVF = (
-    new FunctionIdentifier("graft_html_extract"),
-    info("graft_html_extract", "graft_html_extract(table, 'htmlCol')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_html_extract"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      graft.queries.WebQueries.htmlExtractOf(
-        active.table(strArg(args, 0, fn)), strArg(args, 1, fn))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_normalize(docsTable)` — mojibake repair + NFC over `text`
-    * ([[graft.queries.WebQueries.normalizeTextOf]]). */
-  val normalizeText: TVF = (
-    new FunctionIdentifier("graft_normalize"),
-    info("graft_normalize", "graft_normalize(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_normalize"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.WebQueries.normalizeTextOf(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_safety(docsTable)` — blocklist membership with reason codes
-    * ([[graft.queries.WebQueries.safetyFrame]]). */
-  val safety: TVF = (
-    new FunctionIdentifier("graft_safety"),
-    info("graft_safety", "graft_safety(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_safety"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.WebQueries.safetyFrame(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_url_canonical(table, 'urlCol')` — canonical URL + host key
-    * columns appended ([[graft.queries.WebQueries.urlCanonicalOf]]). */
-  val urlCanonical: TVF = (
-    new FunctionIdentifier("graft_url_canonical"),
-    info("graft_url_canonical", "graft_url_canonical(table, 'urlCol')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_url_canonical"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      graft.queries.WebQueries.urlCanonicalOf(
-        active.table(strArg(args, 0, fn)), strArg(args, 1, fn))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_warc_extract(table, 'warcCol')` — WARC container ingestion:
-    * one row per response record with header fields, truncation
-    * quarantine flag, and the boilerplate-extracted payload
-    * ([[graft.queries.WebQueries.warcExtractOf]]). */
-  val warcExtract: TVF = (
-    new FunctionIdentifier("graft_warc_extract"),
-    info("graft_warc_extract", "graft_warc_extract(table, 'warcCol')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_warc_extract"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      graft.queries.WebQueries.warcExtractOf(
-        active.table(strArg(args, 0, fn)), strArg(args, 1, fn))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_split_cluster(docsTable)` — group-aware train/val/test split:
-    * every document keyed to its dedup component's CANONICAL member, so a
-    * near-dup pair never straddles a train/eval boundary
-    * ([[graft.queries.CurationQueries.splitClusterOf]]). */
-  val splitCluster: TVF = (
-    new FunctionIdentifier("graft_split_cluster"),
-    info("graft_split_cluster", "graft_split_cluster(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_split_cluster"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.CurationQueries.splitClusterOf(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_boilerplate(docsTable, minDocs)` — repeated-line boilerplate
-    * stripping over any multi-line `(doc_id, text, …)` table: lines whose
-    * hash appears in ≥ minDocs documents are dropped from every document
-    * ([[graft.queries.WebQueries.boilerplateLinesOf]]). */
-  val boilerplate: TVF = (
-    new FunctionIdentifier("graft_boilerplate"),
-    info("graft_boilerplate", "graft_boilerplate(docsTable, minDocs)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_boilerplate"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      graft.queries.WebQueries.boilerplateLinesOf(
-        active.table(strArg(args, 0, fn)), longArg(args, 1, fn).toInt)
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_upsample(docsTable)` — deterministic weight-based epoch
-    * upsampling over any `(doc_id, lang, …)` table: one row per
-    * materialized copy with its index and permutation key
-    * ([[graft.queries.CurationQueries.upsampleFrame]], library-default
-    * mixture — the `graft_curate` config convention). */
-  val upsample: TVF = (
-    new FunctionIdentifier("graft_upsample"),
-    info("graft_upsample", "graft_upsample(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_upsample"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.CurationQueries.upsampleFrame(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_secret_scrub(docsTable)` — secret/credential class counts,
-    * redacted text, and a `secret_free` flag appended
-    * ([[graft.streaming.StreamingCuration.withSecretScrub]] — the shared
-    * batch/stream expression body). */
-  val secretScrub: TVF = (
-    new FunctionIdentifier("graft_secret_scrub"),
-    info("graft_secret_scrub", "graft_secret_scrub(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_secret_scrub"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.streaming.StreamingCuration.withSecretScrub(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_contamination(trainTable, evalTable)` — per-eval-document
-    * exact-13-gram contamination score in basis points
-    * ([[graft.queries.DedupQueries.contaminationScoreOf]]). */
-  val contamination: TVF = (
-    new FunctionIdentifier("graft_contamination"),
-    info("graft_contamination", "graft_contamination(trainTable, evalTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_contamination"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      val s = active
-      graft.queries.DedupQueries.contaminationScoreOf(
-        s.table(strArg(args, 0, fn)), s.table(strArg(args, 1, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_lang_mixture(docsTable)` — span-level language-mixture
-    * detection over any `(doc_id, text, lang, …)` table: per document,
-    * chunk-vote counts, distinct predicted languages, the majority
-    * language, and the `mixed` flag
-    * ([[graft.queries.TextStatsQueries.langMixtureOf]] — profiles
-    * trained on that table's own labels). */
-  val langMixture: TVF = (
-    new FunctionIdentifier("graft_lang_mixture"),
-    info("graft_lang_mixture", "graft_lang_mixture(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_lang_mixture"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.TextStatsQueries.langMixtureOf(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_crawl_admit(docsTable)` — the composed crawl front door as
-    * one reason-coded admission decision per page
-    * ([[graft.queries.WebQueries.crawlAdmitFrame]]). */
-  val crawlAdmit: TVF = (
-    new FunctionIdentifier("graft_crawl_admit"),
-    info("graft_crawl_admit", "graft_crawl_admit(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_crawl_admit"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.WebQueries.crawlAdmitFrame(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_admit_funnel(docsTable)` — the crawl admission funnel:
-    * each record charged to its FIRST failing stage in pipeline order
-    * (truncated → empty_extract → empty_norm → safety → robots →
-    * license → admitted), counted per stage
-    * ([[graft.queries.WebQueries.admitFunnelOf]]). */
-  val admitFunnel: TVF = (
-    new FunctionIdentifier("graft_admit_funnel"),
-    info("graft_admit_funnel", "graft_admit_funnel(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_admit_funnel"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.WebQueries.admitFunnelOf(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_export_manifest(docsTable)` — per-shard counts, position
-    * ranges, and order-invariant content checksums of the deterministic
-    * export ([[graft.queries.CurationQueries.exportManifestOf]]). */
-  val exportManifest: TVF = (
-    new FunctionIdentifier("graft_export_manifest"),
-    info("graft_export_manifest", "graft_export_manifest(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_export_manifest"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.CurationQueries.exportManifestOf(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_token_budget(docsTable)` — per-language raw vs trained-on
-    * token mass under the upsampling mixture
-    * ([[graft.queries.CurationQueries.tokenBudgetOf]]). */
-  val tokenBudget: TVF = (
-    new FunctionIdentifier("graft_token_budget"),
-    info("graft_token_budget", "graft_token_budget(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_token_budget"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      graft.queries.CurationQueries.tokenBudgetOf(
-        active.table(strArg(args, 0, fn)))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_kll_quantiles(table, 'idCol', 'valCol')` — the mergeable
-    * rank-error-bounded quantile sketch queried in-plan
-    * ([[graft.queries.TextStatsQueries.kllQuantiles]]): one
-    * (p, est, level, sample_n) row per target percentile. */
-  val kllQuantiles: TVF = (
-    new FunctionIdentifier("graft_kll_quantiles"),
-    info("graft_kll_quantiles", "graft_kll_quantiles(table, 'idCol', 'valCol')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_kll_quantiles"
-      require(args.length == 3, s"$fn takes exactly 3 arguments")
-      graft.queries.TextStatsQueries.kllQuantiles(
-        active.table(strArg(args, 0, fn))
-          .select(org.apache.spark.sql.functions.col(strArg(args, 1, fn))
-                    .as("doc_id"),
-                  org.apache.spark.sql.functions.col(strArg(args, 2, fn))
-                    .as("v")))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_byte_bpe(docsTable)` — GPT-2-class byte-level BPE: merges
-    * learned on the table's text, every document encoded
-    * ([[graft.queries.TextStatsQueries.byteBpeEncodedOf]]). Like
-    * `graft_boilerplate`, the learn pass runs at resolution (bounded
-    * merge-table collect). */
-  val byteBpe: TVF = (
-    new FunctionIdentifier("graft_byte_bpe"),
-    info("graft_byte_bpe", "graft_byte_bpe(docsTable)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_byte_bpe"
-      require(args.length == 1, s"$fn takes exactly 1 argument")
-      val d = active.table(strArg(args, 0, fn))
-        .filter(org.apache.spark.sql.functions.col("text").isNotNull)
-      graft.queries.TextStatsQueries.byteBpeEncodedOf(
-        d, graft.queries.TextStatsQueries.byteBpeLearnMerges(d))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_jsonl_parse(table, 'binCol')` — the JSONL.gz parse chain
-    * (strict gunzip → newline framing → `from_json` → drop-malformed)
-    * over any table's binary container column
-    * ([[graft.queries.IngestQueries.jsonlFilesParse]]). */
-  val jsonlParse: TVF = (
-    new FunctionIdentifier("graft_jsonl_parse"),
-    info("graft_jsonl_parse", "graft_jsonl_parse(table, 'binCol')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_jsonl_parse"
-      require(args.length == 2, s"$fn takes exactly 2 arguments")
-      graft.queries.IngestQueries.jsonlFilesParse(
-        active.table(strArg(args, 0, fn))
-          .select(org.apache.spark.sql.functions.col(strArg(args, 1, fn))
-                    .as("content")))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_scd2_merge(snapshotTable, changesTable, epoch)` — the
-    * versioned-history MERGE: every changed key's prior row closes at
-    * `epoch`, upserts open a new version, untouched rows stay open
-    * ([[graft.queries.DedupQueries.scd2Merge]]). */
-  val scd2Merge: TVF = (
-    new FunctionIdentifier("graft_scd2_merge"),
-    info("graft_scd2_merge",
-         "graft_scd2_merge(snapshotTable, changesTable, epoch)"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_scd2_merge"
-      require(args.length == 3, s"$fn takes exactly 3 arguments")
-      graft.queries.DedupQueries.scd2Merge(
-        active.table(strArg(args, 0, fn)),
-        active.table(strArg(args, 1, fn)), longArg(args, 2, fn))
-        .queryExecution.logical
-    }
-  )
-
-  /** `graft_robots_check(table, 'robotsCol', 'agent', 'pathCol')` —
-    * RFC 9309 robots.txt judgment from SQL: parse the named robots
-    * DOCUMENT column, judge the named path for the agent, append
-    * `n_rules`/`n_match`/`allowed`
-    * ([[graft.queries.WebQueries.robotsCheckOf]]). */
-  val robotsCheck: TVF = (
-    new FunctionIdentifier("graft_robots_check"),
-    info("graft_robots_check",
-         "graft_robots_check(table, 'robotsCol', 'agent', 'pathCol')"),
-    (args: Seq[Expression]) => {
-      val fn = "graft_robots_check"
-      require(args.length == 4, s"$fn takes exactly 4 arguments")
-      graft.queries.WebQueries.robotsCheckOf(
-        active.table(strArg(args, 0, fn)), strArg(args, 1, fn),
-        strArg(args, 2, fn), strArg(args, 3, fn))
-        .queryExecution.logical
-    }
-  )
-
-  val all: Seq[TVF] = Seq(asofJoin, rangeJoin, components, topk, globalRank,
-                          dedup, decontaminate, curate, sessionize,
-                          spanDedup, substrDedup, sourceCap,
-                          semanticDedup, semanticDecontam,
-                          bm25, mixtureSample,
-                          knnGraph, semanticClusters, clusterSample, hll,
-                          cms, invertedIndex, mergeUpsert, corpusDiff,
-                          chunk, tfidf, lmScore,
-                          dsirScore, intradocDedup, canonicalDedup,
-                          temperatureMixture, pretrain,
-                          htmlExtract, normalizeText, safety, urlCanonical,
-                          splitCluster, boilerplate,
-                          upsample, secretScrub, contamination, langMixture,
-                          crawlAdmit, admitFunnel, exportManifest, tokenBudget,
-                          warcExtract, kllQuantiles, byteBpe,
-                          jsonlParse, scd2Merge, robotsCheck)
 
   /** Register every table function on an already-built session (tests,
     * notebooks) — the registry twin of the `GraftFunctions` pattern. */

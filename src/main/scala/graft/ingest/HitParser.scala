@@ -21,7 +21,7 @@ import graft.model.Schemas
  *    the `'0'/'1'`-for-summing intent is the comment at `main.py:35`);
  *  - malformed / empty-ts rows silently discarded (`main.py:78-81`,
  *    `main.py:88-92`) — but, realizing the reference's TODO at
- *    `main.py:80`, the drop count is observable via [[parseWithMetrics]].
+ *    `main.py:80`, the drop count is observable via [[graft.Pipeline.run]].
  *
  * One split, one rule list: each line is split once on tab and fields 4
  * and 5 once on `;` and `,` ([[fields]]); the three drop rules are one
@@ -83,17 +83,6 @@ object HitParser {
       eventFlag(Schemas.eventCodes("atb")).as("atb"),
       eventFlag(Schemas.eventCodes("bag")).as("bag_view"),
       eventFlag(Schemas.eventCodes("payment")).as("payment"))))))
-
-  /**
-   * Parse with drop observability (the reference's unimplemented TODO,
-   * `main.py:80`): attaches `observe` metrics — read them from a
-   * `QueryExecutionListener` or `df.collectResult` after an action.
-   * `graft_parse_in.input_rows` − `graft_parse_out.parsed_rows` = drops.
-   */
-  def parseWithMetrics(raw: DataFrame): DataFrame = {
-    val observed = raw.observe("graft_parse_in", count(lit(1)).as("input_rows"))
-    parse(observed).observe("graft_parse_out", count(lit(1)).as("parsed_rows"))
-  }
 
   /**
    * The DEAD-LETTER side of [[parse]]: every line parse drops, with the

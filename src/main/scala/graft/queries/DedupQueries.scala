@@ -231,7 +231,7 @@ object DedupQueries {
    * BEFORE any per-bucket list is materialized, and the drop is accounted
    * via `observe` (`<guard>.skewed_rows` / `.max_bucket`) — the same
    * drop-accounting contract the TSV parser metrics established
-   * ([[graft.ingest.HitParser.parseWithMetrics]]).
+   * ([[graft.Pipeline.run]]).
    *
    * `item` must be a struct whose FIRST field is the unique orderable id:
    * struct comparison is field-lexicographic, so `a < b` canonicalizes

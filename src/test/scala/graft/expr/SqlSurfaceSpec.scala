@@ -613,6 +613,55 @@ class SqlSurfaceSpec extends SparkSpec {
       spark.sql("SELECT * FROM graft_sessionize('trades', 0)").collect()
     }
     assert(g.getMessage.contains("positive"))
+    // every integer argument is range-checked and named: a minDocs past
+    // Int.MaxValue must not wrap (4294967297 read as 1), and a gap whose
+    // µs value overflows a long must not wrap negative
+    corpus.createOrReplaceTempView("corpus_docs")
+    Seq((1L, 0L)).toDF("user_id", "ts_us").createOrReplaceTempView("sess_events")
+    for ((call, arg) <- Seq(
+           "graft_boilerplate('corpus_docs', 4294967297)" -> "minDocs",
+           "graft_boilerplate('corpus_docs', 0)" -> "minDocs",
+           "graft_sessionize('sess_events', 9223372036855)" -> "gapSeconds")) {
+      val r = intercept[Exception](spark.sql(s"SELECT * FROM $call").collect())
+      assert(r.getMessage.contains(arg), call)
+    }
+  }
+
+  test("every table function declares its name once and checks arity and constants") {
+    val names = Seq(
+      "graft_admit_funnel", "graft_asof_join", "graft_bm25", "graft_boilerplate",
+      "graft_byte_bpe", "graft_canonical_dedup", "graft_chunk",
+      "graft_cluster_sample", "graft_cms", "graft_components",
+      "graft_contamination", "graft_crawl_admit", "graft_curate",
+      "graft_decontaminate", "graft_dedup", "graft_diff", "graft_dsir_score",
+      "graft_export_manifest", "graft_global_rank", "graft_hll",
+      "graft_html_extract", "graft_intradoc_dedup", "graft_inverted_index",
+      "graft_jsonl_parse", "graft_kll_quantiles", "graft_knn_graph",
+      "graft_lang_mixture", "graft_lm_score", "graft_merge",
+      "graft_mixture_sample", "graft_normalize", "graft_pretrain",
+      "graft_range_join", "graft_robots_check", "graft_safety",
+      "graft_scd2_merge", "graft_secret_scrub", "graft_semantic_clusters",
+      "graft_semantic_decontam", "graft_semantic_dedup", "graft_sessionize",
+      "graft_source_cap", "graft_span_dedup", "graft_split_cluster",
+      "graft_substr_dedup", "graft_temperature_mixture", "graft_tfidf",
+      "graft_token_budget", "graft_topk", "graft_upsample",
+      "graft_url_canonical", "graft_warc_extract")
+    assert(GraftTableFunctions.all.map(_._1.funcName).sorted === names)
+    for ((id, info, _) <- GraftTableFunctions.all) {
+      val name = id.funcName
+      assert(info.getName === name)
+      // the most arguments the usage names: quoted literals (which may
+      // hold commas) and the [ ] of optional ones dropped
+      val arity = info.getUsage.dropWhile(_ != '(').drop(1).dropRight(1)
+        .replaceAll("'[^']*'", "").replaceAll("[\\[\\]]", "")
+        .split(',').length
+      def call(args: Seq[String]): Exception = intercept[Exception](
+        spark.sql(s"SELECT * FROM $name(${args.mkString(", ")})").collect())
+      val tooMany = call(Seq.fill(arity + 1)("'x'"))
+      assert(tooMany.getMessage.contains(s"$name takes"), name)
+      val nonConstant = call("rand()" +: Seq.fill(arity - 1)("'x'"))
+      assert(nonConstant.getMessage.contains("constant"), name)
+    }
   }
 
   test("front-door TVFs ≡ their Scala operators") {

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 
 import scala.util.Random
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, StringSplit}
 
 import graft.SparkSpec
@@ -100,18 +100,6 @@ class HitParserSpec extends SparkSpec {
       !(org.apache.spark.sql.functions.col("event_id") % 89 === 0) &&
       !(org.apache.spark.sql.functions.col("event_id") % 83 === 0)).count()
     assert(parsed.count() === expected)
-  }
-
-  test("parseWithMetrics records input and surviving counts (main.py:80 TODO)") {
-    val raw = Seq(happy, "\tu\tv\t\t\t2\tp\tsrv\ti\ts", "short\trow").toDF("value")
-    val parsed = HitParser.parseWithMetrics(raw)
-    // collect() drives parsed's OWN QueryExecution — observed metrics are
-    // attached per-execution, so a different action (e.g. count()) would
-    // leave this QE's metrics empty
-    assert(parsed.collect().length === 1) // 2 of 3 dropped
-    val observed = parsed.queryExecution.observedMetrics
-    assert(observed("graft_parse_in") === Row(3L))
-    assert(observed("graft_parse_out") === Row(1L))
   }
 
   test("quarantine is the exact complement of parse, with first-rule reasons") {

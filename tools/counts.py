@@ -10,7 +10,8 @@ Counts, over `src/main/scala/**/*.scala`:
   session_builder_sites  `SparkSession.builder` occurrences
   graft_conf_keys        distinct `spark.graft.<key>` names
   cli_flags              distinct `"--<flag>"` string literals
-  env_knobs              distinct `"SPARK_GRAFT_<NAME>"` string literals (environment variables read)
+  env_knobs              distinct environment variable names passed to `sys.env` (`sys.env("X")`,
+                         `sys.env.get("X")`, `sys.env.getOrElse("X", …)`)
   dev_mains              objects with a `main` that are not a harness entry point
   stderr_tags            distinct `[graft-<tag>]` stderr tags
   thread_locals          `new ThreadLocal` occurrences
@@ -93,7 +94,7 @@ def main():
         "session_builder_sites": every.count("SparkSession.builder"),
         "graft_conf_keys": sorted(set(k.rstrip(".") for k in re.findall(r"spark\.graft\.[A-Za-z.]+", every))),
         "cli_flags": sorted(set(re.findall(r'"(--[a-z][a-z0-9-]*)"', every))),
-        "env_knobs": sorted(set(re.findall(r'"(SPARK_GRAFT_[A-Z0-9_]+)"', every))),
+        "env_knobs": sorted(set(re.findall(r'sys\.env(?:\.\w+)?\(\s*"(\w+)"', every))),
         "dev_mains": [m for m in mains if m not in HARNESS_MAINS],
         "stderr_tags": sorted(set(re.findall(r"\[graft-[a-z]+\]", every))),
         "thread_locals": every.count("new ThreadLocal"),
